@@ -290,8 +290,10 @@ class DeploymentCatalog:
     # -- consumer contract (C7/C9) ------------------------------------
 
     def health(self) -> bool:
-        """``RETURN 1`` equivalent (reference orchestrator.py:69)."""
-        return self.spark.sql("SELECT 1 AS health").collect()[0][0] == 1
+        """``RETURN 1`` equivalent (reference orchestrator.py:69): the
+        session's SparkContext answers a py4j call and is not stopped.
+        Runs no Spark job; raises when the session or its JVM is gone."""
+        return not self.spark.sparkContext._jsc.sc().isStopped()
 
     def count_via_alias(self, customer_id: str, kind: str = "nodes") -> int:
         """``USE <alias>; MATCH (n) RETURN count(n)`` equivalent

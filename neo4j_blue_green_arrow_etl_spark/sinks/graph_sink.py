@@ -239,8 +239,9 @@ class FlightGraphSink(GraphSink):
       neo4j_arrow_client.py:58-73) and streams every batch through ONE
       ``do_put`` whose descriptor command is
       ``{"name": db, "entity_type": "node"|"relationship"}``, then
-      emits a single (rows, nbytes) stats row. A native sum over the
-      stats rows yields the WriteResult — so throughput scales with
+      emits a single (rows, nbytes) stats row. ``collect`` brings
+      those rows back and Python sums them into the WriteResult: one
+      Spark job with one stage per phase, no exchange. Throughput scales with
       executors instead of the reference's single-host fork pool
       (neo4j_pq.py:290-303), and nothing but two longs per partition
       crosses back to the driver.
@@ -323,8 +324,6 @@ class FlightGraphSink(GraphSink):
     # -- executor-side data path ---------------------------------------
 
     def _put(self, df: DataFrame, entity_type: str) -> WriteResult:
-        from pyspark.sql import functions as F
-
         host, port = self.host, self.port
         desc = json.dumps({"name": self.database, "entity_type": entity_type}).encode()
 
@@ -357,11 +356,10 @@ class FlightGraphSink(GraphSink):
                     client.close()
             yield pa.RecordBatch.from_pydict({"rows": [rows], "nbytes": [nbytes]})
 
-        stats = df.mapInArrow(put_partition, "rows long, nbytes long")
-        agg = stats.agg(
-            F.sum("rows").alias("r"), F.sum("nbytes").alias("b")
-        ).collect()[0]
-        return WriteResult(rows=int(agg.r or 0), bytes=int(agg.b or 0))
+        stats = df.mapInArrow(put_partition, "rows long, nbytes long").collect()
+        return WriteResult(
+            rows=sum(r.rows for r in stats), bytes=sum(r.nbytes for r in stats)
+        )
 
     def _write_nodes(self, nodes: DataFrame) -> WriteResult:
         return self._put(nodes, "node")

@@ -15,15 +15,32 @@ Scale note: the normalizations here are pure Catalyst expressions
 (rename + ``F.split``), so they fuse into the parquet scan inside
 whole-stage codegen — no Python on the data path, unlike the
 reference's pandas row-apply label split (neo4j_pq.py:59).
+
+Fixed cost per load: ``read_snapshot`` lists each label/type dir once
+and runs no Spark job. A parquet table's schema comes from one file's
+footer, mapped to the types Spark's own inference would give, so Spark
+skips its schema-inference job per dir. The unioned nodes and edges are
+each coalesced to ``ceil(bytes / spark.sql.files.openCostInBytes)``
+partitions: Spark's rule that a split smaller than the cost of opening
+a file is not worth a task, applied across a snapshot's many small
+files. ``coalesce`` never adds partitions, so large snapshots keep
+Spark's own splits.
 """
 
 from __future__ import annotations
 
+import functools
+import math
+import os
 from dataclasses import dataclass
 from pathlib import Path
+from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 NODE_ID = "nodeId"
 LABELS = "labels"
@@ -65,22 +82,26 @@ def normalize_edges(df: DataFrame) -> DataFrame:
 FORMATS = ("parquet", "orc", "csv", "json")
 
 
-def _read_table(spark: SparkSession, path: str, fmt: str) -> DataFrame:
+def _read_table(
+    spark: SparkSession, path: str, fmt: str, schema: T.StructType | None = None
+) -> DataFrame:
     """One snapshot table in any supported format.
 
     parquet, orc, and csv-with-header preserve COLUMN ORDER, so the
     positional contract applies directly. JSON is name-based (Spark
     infers fields alphabetically), so JSON snapshots must already carry
     the NAMED contract (nodeId/labels/... or sourceNodeId/...) —
-    enforced by the normalizers below via a reorder, not a rename."""
+    enforced by the normalizers below via a reorder, not a rename.
+    A given ``schema`` replaces Spark's inference."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if fmt == "parquet":
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     if fmt == "orc":
-        return spark.read.orc(path)
+        return reader.orc(path)
     if fmt == "csv":
-        return spark.read.option("header", True).option("inferSchema", True).csv(path)
+        return reader.option("header", True).option("inferSchema", True).csv(path)
     if fmt == "json":
-        return spark.read.json(path)
+        return reader.json(path)
     raise ValueError(f"unsupported snapshot format {fmt!r}; use one of {FORMATS}")
 
 
@@ -97,14 +118,21 @@ def _to_positional(df: DataFrame, leading: tuple[str, ...]) -> DataFrame:
     return df.select(*leading, *props)
 
 
-def read_nodes(spark: SparkSession, *paths: str, fmt: str = "parquet") -> DataFrame:
+def read_nodes(
+    spark: SparkSession,
+    *paths: str,
+    fmt: str = "parquet",
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """Read one or more node-label directories and normalize.
 
     Multiple label dirs are unioned by name with missing property
     columns null-filled (the reference processes each dir separately
     and the server unions; here the union is explicit so the engine has
-    ONE nodes relation to query)."""
-    raw = [_read_table(spark, p, fmt) for p in paths]
+    ONE nodes relation to query). ``schema``, when given, is every
+    dir's raw schema (``read_snapshot`` takes it from a parquet footer);
+    otherwise Spark infers it."""
+    raw = [_read_table(spark, p, fmt, schema) for p in paths]
     if fmt == "json":
         raw = [_to_positional(d, (NODE_ID, LABELS)) for d in raw]
     dfs = [normalize_nodes(d) for d in raw]
@@ -114,8 +142,13 @@ def read_nodes(spark: SparkSession, *paths: str, fmt: str = "parquet") -> DataFr
     return out
 
 
-def read_edges(spark: SparkSession, *paths: str, fmt: str = "parquet") -> DataFrame:
-    raw = [_read_table(spark, p, fmt) for p in paths]
+def read_edges(
+    spark: SparkSession,
+    *paths: str,
+    fmt: str = "parquet",
+    schema: T.StructType | None = None,
+) -> DataFrame:
+    raw = [_read_table(spark, p, fmt, schema) for p in paths]
     if fmt == "json":
         raw = [_to_positional(d, (SOURCE_ID, TARGET_ID, REL_TYPE)) for d in raw]
     dfs = [normalize_edges(d) for d in raw]
@@ -202,41 +235,175 @@ def discover_snapshots(base_path: str | Path) -> list[SnapshotRef]:
     return found
 
 
-def _detect_format(table_dir: Path) -> str:
-    """Format of one label/type dir by its data files' extension —
-    snapshots can arrive as parquet, csv (header), or ndjson; mixing
-    formats ACROSS dirs of one snapshot is fine, within one dir the
-    first recognized extension wins."""
-    for f in sorted(table_dir.iterdir()):
-        suffix = f.suffix.lstrip(".").lower()
-        if suffix in FORMATS:
-            return suffix
-        if suffix == "ndjson":
-            return "json"
-    return "parquet"
+def _list_table(table_dir: Path) -> tuple[str, list[str], int]:
+    """One walk of a label/type dir: its format, its data files (sorted)
+    and their total bytes. Names starting with ``_`` or ``.`` are skipped
+    at every level, as Spark's own listing skips them (``_SUCCESS``,
+    ``.crc`` checksums, ``_temporary``, ``.staging``). The format is the
+    first recognized extension: snapshots can arrive as parquet, orc,
+    csv (header) or ndjson, and mixing formats ACROSS dirs of one
+    snapshot is fine; a dir with none reads as parquet."""
+    files: list[tuple[str, int]] = []
+    pending = [str(table_dir)]
+    while pending:
+        with os.scandir(pending.pop()) as entries:
+            for e in entries:
+                if e.name.startswith(("_", ".")):
+                    continue
+                if e.is_dir():
+                    pending.append(e.path)
+                else:
+                    files.append((e.path, e.stat().st_size))
+    files.sort()
+    fmt = "parquet"
+    for path, _ in files:
+        suffix = Path(path).suffix.lstrip(".").lower()
+        if suffix in FORMATS or suffix == "ndjson":
+            fmt = "json" if suffix == "ndjson" else suffix
+            break
+    return fmt, [path for path, _ in files], sum(size for _, size in files)
+
+
+# The session settings Spark's parquet schema inference reads.
+_MERGE_SCHEMA = "spark.sql.parquet.mergeSchema"
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+_BINARY_AS_STRING = "spark.sql.parquet.binaryAsString"
+
+
+def _inference_conf(spark: SparkSession) -> dict[str, bool]:
+    return {
+        key: spark.conf.get(key).lower() == "true"
+        for key in (_MERGE_SCHEMA, _NANOS_AS_LONG, _INFER_NTZ, _BINARY_AS_STRING)
+    }
+
+
+_LEAF_TYPES = {
+    pa.bool_(): T.BooleanType(),
+    pa.int8(): T.ByteType(),
+    pa.int16(): T.ShortType(),
+    pa.int32(): T.IntegerType(),
+    pa.int64(): T.LongType(),
+    # Spark widens unsigned integers to the next signed type
+    pa.uint8(): T.ShortType(),
+    pa.uint16(): T.IntegerType(),
+    pa.uint32(): T.LongType(),
+    pa.uint64(): T.DecimalType(20, 0),
+    pa.float32(): T.FloatType(),
+    pa.float64(): T.DoubleType(),
+    pa.string(): T.StringType(),
+    pa.large_string(): T.StringType(),
+    pa.date32(): T.DateType(),
+    pa.null(): T.IntegerType(),  # an all-null column is INT32 in parquet
+}
+
+
+class _NoSparkType(Exception):
+    """A parquet type Spark's reader infers differently or rejects."""
+
+
+def _spark_type(t: pa.DataType, conf: dict[str, bool]) -> T.DataType:
+    """The Spark type Spark's parquet reader infers for an Arrow type
+    read from a footer. Every level is nullable, as in every schema
+    Spark infers for a file source."""
+    if pa.types.is_dictionary(t):
+        return _spark_type(t.value_type, conf)
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            if conf[_NANOS_AS_LONG]:
+                return T.LongType()
+            raise _NoSparkType(t)  # Spark rejects it; let it say so
+        if t.tz is None and conf[_INFER_NTZ]:
+            return T.TimestampNTZType()
+        return T.TimestampType()
+    if pa.types.is_decimal(t):
+        if t.precision > 38:  # Spark's widest decimal
+            raise _NoSparkType(t)
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return T.StringType() if conf[_BINARY_AS_STRING] else T.BinaryType()
+    if pa.types.is_fixed_size_binary(t):
+        return T.BinaryType()
+    if (
+        pa.types.is_list(t)
+        or pa.types.is_large_list(t)
+        or pa.types.is_fixed_size_list(t)
+    ):
+        return T.ArrayType(_spark_type(t.value_type, conf))
+    if pa.types.is_map(t):
+        return T.MapType(
+            _spark_type(t.key_type, conf), _spark_type(t.item_type, conf)
+        )
+    if pa.types.is_struct(t):
+        return T.StructType(
+            [T.StructField(f.name, _spark_type(f.type, conf)) for f in t]
+        )
+    if t in _LEAF_TYPES:
+        return _LEAF_TYPES[t]
+    raise _NoSparkType(t)
+
+
+def _footer_schema(path: str, conf: dict[str, bool]) -> T.StructType | None:
+    """The schema ``spark.read.parquet`` would infer for a dir whose
+    first file is ``path``, read from that file's footer without a
+    Spark job. None when Spark would infer it some other way (schema
+    merging on, legacy INT96 timestamps) or rejects a type: the caller
+    then lets Spark infer."""
+    if conf[_MERGE_SCHEMA]:
+        return None
+    meta = pq.read_metadata(path)
+    if any(
+        meta.schema.column(i).physical_type == "INT96"
+        for i in range(meta.num_columns)
+    ):
+        return None
+    try:
+        return T.StructType(
+            [
+                T.StructField(f.name, _spark_type(f.type, conf))
+                for f in meta.schema.to_arrow_schema()
+            ]
+        )
+    except _NoSparkType:
+        return None
+
+
+def _read_side(
+    spark: SparkSession,
+    side_dir: Path,
+    read: Callable[..., DataFrame],
+    conf: dict[str, bool],
+) -> tuple[DataFrame, int]:
+    """Every label (or type) dir under ``side_dir`` through ``read``,
+    unioned by name, and the bytes of their data files."""
+    frames, nbytes = [], 0
+    for table_dir in sorted(p for p in side_dir.iterdir() if p.is_dir()):
+        fmt, files, size = _list_table(table_dir)
+        schema = _footer_schema(files[0], conf) if fmt == "parquet" and files else None
+        frames.append(read(spark, str(table_dir), fmt=fmt, schema=schema))
+        nbytes += size
+    out = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+    return out, nbytes
 
 
 def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame, DataFrame]:
     """Load one complete snapshot as (nodes, edges) DataFrames with the
     engine's named schema, all labels/types unioned; each label/type dir
-    may independently be parquet, csv, or json (auto-detected)."""
-    node_dirs = sorted(p for p in Path(snapshot.path, "nodes").iterdir() if p.is_dir())
-    edge_dirs = sorted(
-        p for p in Path(snapshot.path, "relationships").iterdir() if p.is_dir()
+    may independently be parquet, orc, csv, or json (auto-detected).
+    Each side has one partition per ``spark.sql.files.openCostInBytes``
+    of data, or Spark's own splits where those are fewer; parquet dirs
+    cost no Spark job (see the module docstring)."""
+    conf = _inference_conf(spark)
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    root = Path(snapshot.path)
+    nodes, node_bytes = _read_side(spark, root / "nodes", read_nodes, conf)
+    edges, edge_bytes = _read_side(spark, root / "relationships", read_edges, conf)
+    return (
+        nodes.coalesce(max(1, math.ceil(node_bytes / open_cost))),
+        edges.coalesce(max(1, math.ceil(edge_bytes / open_cost))),
     )
-    nodes = [
-        read_nodes(spark, str(p), fmt=_detect_format(p)) for p in node_dirs
-    ]
-    edges = [
-        read_edges(spark, str(p), fmt=_detect_format(p)) for p in edge_dirs
-    ]
-    out_n = nodes[0]
-    for d in nodes[1:]:
-        out_n = out_n.unionByName(d, allowMissingColumns=True)
-    out_e = edges[0]
-    for d in edges[1:]:
-        out_e = out_e.unionByName(d, allowMissingColumns=True)
-    return out_n, out_e
 
 
 def diff_nodes(old: DataFrame, new: DataFrame) -> DataFrame:

@@ -111,7 +111,8 @@ class Orchestrator:
 
     def check_health(self) -> tuple[bool, str]:
         """Admission gate before each load (reference orchestrator.py:61-163):
-        engine answers SELECT 1; deployment count below max_databases;
+        the engine is alive (``DeploymentCatalog.health``, a py4j call
+        that runs no Spark job); deployment count below max_databases;
         JVM heap below ``heap_threshold_percent`` — the Spark-side
         equivalent of the reference's ``CALL dbms.queryJmx`` heap gate
         (reference orchestrator.py:111-152). The heap reading comes from
@@ -120,11 +121,11 @@ class Orchestrator:
         executor heap; on a cluster swap in an executor-metrics
         provider)."""
         try:
-            ok = self.spark.sql("SELECT 1 AS health").collect()[0][0] == 1
-        except Exception as e:  # session dead
+            alive = self.catalog.health()
+        except Exception as e:  # session or JVM gone
             return False, f"session check failed: {e}"
-        if not ok:
-            return False, "health query returned wrong value"
+        if not alive:
+            return False, "spark context is stopped"
         n_dbs = len(self.catalog.list_databases())
         if n_dbs >= self.cfg["max_databases"]:
             return False, f"too many databases: {n_dbs} >= {self.cfg['max_databases']}"

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import json
+from types import SimpleNamespace
 
 import pytest
 
@@ -136,6 +137,57 @@ def test_health_gate_defers_without_consuming_retries(spark, data_base, tmp_path
     assert len(orch._queue) == 1
     assert orch._queue[0].retry_count == 0
     orch.cfg["max_databases"] = 50  # pressure clears
+    fake_now[0] += 10
+    orch.run_cycle()
+    assert orch.stats.completed == 1
+
+
+def test_health_check_runs_no_spark_job(spark, data_base, tmp_path):
+    """The liveness check is one py4j call, not a query: admitting a
+    load costs no Spark job."""
+    from conftest import spark_jobs_run_by
+
+    orch = make_orch(spark, data_base, tmp_path)
+    result = []
+    assert spark_jobs_run_by(spark, lambda: result.append(orch.check_health())) == []
+    assert result == [(True, "ok")]
+
+
+@pytest.mark.parametrize(
+    "liveness, reason",
+    [
+        ("raises", "session check failed: gateway is gone"),
+        ("stopped", "spark context is stopped"),
+    ],
+)
+def test_dead_session_defers_without_consuming_retries(
+    spark, data_base, tmp_path, monkeypatch, liveness, reason
+):
+    """A session whose liveness call raises, or whose SparkContext
+    reports stopped, fails the health gate: the task is deferred with
+    backoff and keeps its retries, and loads once the session answers."""
+
+    def is_stopped():
+        if liveness == "raises":
+            raise ConnectionError("gateway is gone")
+        return True
+
+    stub = SimpleNamespace(
+        sparkContext=SimpleNamespace(
+            _jsc=SimpleNamespace(sc=lambda: SimpleNamespace(isStopped=is_stopped))
+        )
+    )
+    fake_now = [1000.0]
+    orch = make_orch(spark, data_base, tmp_path, max_retries=0)
+    orch.clock = lambda: fake_now[0]
+    monkeypatch.setattr(orch.catalog, "spark", stub)
+    assert orch.check_health() == (False, reason)
+    orch.run_cycle()
+    assert orch.stats.health_deferred == 1
+    assert orch.stats.failed == 0 and orch.stats.retried == 0
+    assert [t.retry_count for t in orch._queue] == [0]
+    assert orch._queue[0].last_error == f"health gate: {reason}"
+    monkeypatch.setattr(orch.catalog, "spark", spark)
     fake_now[0] += 10
     orch.run_cycle()
     assert orch.stats.completed == 1

@@ -252,18 +252,19 @@ def test_x45_routes_exact_on_proportional_corpus(spark, monkeypatch):
     from conftest import SF_SMOKE
 
     calls = {"exact": 0, "capped": 0}
-    real_exact, real_capped = dd.ngram_pairs, dd.q_x24b_fuzzy_capped
+    real_exact, real_capped = dd.ngram_match_pairs, dd.fuzzy_block_pairs_capped
 
     def spy_exact(sh):
         calls["exact"] += 1
         return real_exact(sh)
 
-    def spy_capped(s, d):
+    def spy_capped(d):
         calls["capped"] += 1
-        return real_capped(s, d)
+        return real_capped(d)
 
-    monkeypatch.setattr(dd, "ngram_pairs", spy_exact)
-    monkeypatch.setattr(dd, "q_x24b_fuzzy_capped", spy_capped)
+    # q_x45_curate imports both pair stages from dedup at call time
+    monkeypatch.setattr(dd, "ngram_match_pairs", spy_exact)
+    monkeypatch.setattr(dd, "fuzzy_block_pairs_capped", spy_capped)
     df = REGISTRY["q_x45_curate"].spark(spark, SF_SMOKE)
     n = df.count()
     assert calls == {"exact": 1, "capped": 0}
@@ -313,18 +314,19 @@ def test_x45_routes_capped_on_adversarial_corpus(spark, tmp_path, monkeypatch):
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
     calls = {"exact": 0, "capped": 0}
-    real_exact, real_capped = dd.ngram_pairs, dd.q_x24b_fuzzy_capped
+    real_exact, real_capped = dd.ngram_match_pairs, dd.fuzzy_block_pairs_capped
 
     def spy_exact(sh):
         calls["exact"] += 1
         return real_exact(sh)
 
-    def spy_capped(s, d):
+    def spy_capped(d):
         calls["capped"] += 1
-        return real_capped(s, d)
+        return real_capped(d)
 
-    monkeypatch.setattr(dd, "ngram_pairs", spy_exact)
-    monkeypatch.setattr(dd, "q_x24b_fuzzy_capped", spy_capped)
+    # q_x45_curate imports both pair stages from dedup at call time
+    monkeypatch.setattr(dd, "ngram_match_pairs", spy_exact)
+    monkeypatch.setattr(dd, "fuzzy_block_pairs_capped", spy_capped)
     df = REGISTRY["q_x45_curate"].spark(spark, str(tmp_path))
     n = df.count()
     assert calls == {"exact": 0, "capped": 1}
@@ -343,18 +345,19 @@ def test_x31_routes_exact_on_proportional_corpus(spark, monkeypatch):
     from conftest import SF_SMOKE
 
     calls = {"exact": 0, "capped": 0}
-    real_exact, real_capped = dd.fuzzy_block_pairs, dd.q_x24b_fuzzy_capped
+    real_exact, real_capped = dd.fuzzy_block_pairs, dd.fuzzy_block_pairs_capped
 
     def spy_exact(d):
         calls["exact"] += 1
         return real_exact(d)
 
-    def spy_capped(s, d):
+    def spy_capped(d):
         calls["capped"] += 1
-        return real_capped(s, d)
+        return real_capped(d)
 
+    # q_x31_erclusters imports both pair stages from dedup at call time
     monkeypatch.setattr(dd, "fuzzy_block_pairs", spy_exact)
-    monkeypatch.setattr(dd, "q_x24b_fuzzy_capped", spy_capped)
+    monkeypatch.setattr(dd, "fuzzy_block_pairs_capped", spy_capped)
     df = REGISTRY["q_x31_erclusters"].spark(spark, SF_SMOKE)
     n = df.count()
     assert calls == {"exact": 1, "capped": 0}
@@ -377,18 +380,19 @@ def test_x31_routes_capped_on_adversarial_corpus(spark, tmp_path, monkeypatch):
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
     calls = {"exact": 0, "capped": 0}
-    real_exact, real_capped = dd.fuzzy_block_pairs, dd.q_x24b_fuzzy_capped
+    real_exact, real_capped = dd.fuzzy_block_pairs, dd.fuzzy_block_pairs_capped
 
     def spy_exact(d):
         calls["exact"] += 1
         return real_exact(d)
 
-    def spy_capped(s, d):
+    def spy_capped(d):
         calls["capped"] += 1
-        return real_capped(s, d)
+        return real_capped(d)
 
+    # q_x31_erclusters imports both pair stages from dedup at call time
     monkeypatch.setattr(dd, "fuzzy_block_pairs", spy_exact)
-    monkeypatch.setattr(dd, "q_x24b_fuzzy_capped", spy_capped)
+    monkeypatch.setattr(dd, "fuzzy_block_pairs_capped", spy_capped)
     df = REGISTRY["q_x31_erclusters"].spark(spark, str(tmp_path))
     df.count()
     assert calls == {"exact": 0, "capped": 1}

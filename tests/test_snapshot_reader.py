@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -248,3 +249,211 @@ def test_orc_snapshot_is_discoverable(spark, sf_dir, tmp_path):
     assert found == [SnapshotRef("acme", 100, str(orc))]
     nodes, edges = read_snapshot(spark, found[0])
     assert nodes.count() > 0 and edges.count() > 0
+
+
+def _all_types_table():
+    """One row of each Arrow type a snapshot's parquet footer can carry."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    cols = {
+        "u8": pa.array([1], pa.uint8()),
+        "u16": pa.array([1], pa.uint16()),
+        "u32": pa.array([1], pa.uint32()),
+        "u64": pa.array([1], pa.uint64()),
+        "i8": pa.array([1], pa.int8()),
+        "f32": pa.array([1.5], pa.float32()),
+        "ts_ms": pa.array([1], pa.timestamp("ms")),
+        "ts_us": pa.array([1], pa.timestamp("us")),
+        "ts_ns": pa.array([1], pa.timestamp("ns")),
+        "ts_utc": pa.array([1], pa.timestamp("us", "UTC")),
+        "ts_paris": pa.array([1], pa.timestamp("ms", "Europe/Paris")),
+        "ts_ns_utc": pa.array([1], pa.timestamp("ns", "UTC")),
+        "dec": pa.array([decimal.Decimal("1.25")], pa.decimal128(12, 2)),
+        "dec38": pa.array([decimal.Decimal("1.25")], pa.decimal128(38, 10)),
+        "day": pa.array([datetime.date(2026, 1, 1)], pa.date32()),
+        "bin": pa.array([b"\x00\x01"], pa.binary()),
+        "big_bin": pa.array([b"\x02"], pa.large_binary()),
+        "fixed": pa.array([b"ab"], pa.binary(2)),
+        "big_str": pa.array(["x"], pa.large_string()),
+        "dict": pa.array(["red"]).dictionary_encode(),
+        "ints": pa.array([[1, None]], pa.list_(pa.int64())),
+        "names": pa.array([["a"]], pa.large_list(pa.string())),
+        "pair": pa.array([[1, 2]], pa.list_(pa.int32(), 2)),
+        "point": pa.array(
+            [{"x": 1.0, "tag": "p"}],
+            pa.struct([("x", pa.float64()), ("tag", pa.string())]),
+        ),
+        "props": pa.array([[("k", 1)]], pa.map_(pa.string(), pa.int32())),
+        "empty": pa.array([None], pa.null()),
+    }
+    return pa.table(cols)
+
+
+@contextlib.contextmanager
+def _conf(spark, **overrides):
+    """Set session confs for a block, then put the old values back."""
+    old = {k: spark.conf.get(k) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_footer_schema_matches_spark_inference(spark, sf_dir, tmp_path):
+    """``read_snapshot`` hands Spark each parquet table's schema from one
+    footer instead of letting Spark infer it: for every test table and
+    every type above, that schema must be exactly Spark's own."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
+        _footer_schema,
+        _inference_conf,
+    )
+
+    typed = tmp_path / "typed.parquet"
+    pq.write_table(_all_types_table(), typed)
+    paths = sorted(Path(sf_dir).glob("*.parquet")) + [typed]
+    conf = _inference_conf(spark)
+    for path in paths:
+        want = spark.read.parquet(str(path)).schema
+        assert _footer_schema(str(path), conf) == want, path.name
+
+    # the session settings Spark's inference reads are honoured
+    with _conf(
+        spark,
+        **{
+            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+            "spark.sql.parquet.binaryAsString": "true",
+        },
+    ):
+        conf = _inference_conf(spark)
+        want = spark.read.parquet(str(typed)).schema
+        assert _footer_schema(str(typed), conf) == want
+
+    # Spark reads legacy INT96 timestamps as TIMESTAMP whatever the Arrow
+    # type says, and merges footers when asked: both are left to Spark
+    int96 = tmp_path / "int96.parquet"
+    pq.write_table(
+        pa.table({"ts": pa.array([1], pa.timestamp("ns"))}),
+        int96,
+        use_deprecated_int96_timestamps=True,
+    )
+    assert _footer_schema(str(int96), _inference_conf(spark)) is None
+    with _conf(spark, **{"spark.sql.parquet.mergeSchema": "true"}):
+        assert _footer_schema(str(typed), _inference_conf(spark)) is None
+
+
+def test_read_snapshot_matches_inferred_read(spark, sf_dir, tmp_path):
+    """On the positional fixture snapshot, the footer-schema read returns
+    the same schema and rows as reading every dir with Spark's own
+    schema inference."""
+    import functools
+
+    from neo4j_blue_green_arrow_etl_spark.sources import read_edges, read_nodes
+
+    base = str(tmp_path / "data")
+    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
+    root = Path(base, "acme", "100")
+    nodes, edges = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
+
+    def inferred(side, read):
+        frames = [read(spark, str(d)) for d in sorted((root / side).iterdir())]
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
+
+    for got, want in (
+        (nodes, inferred("nodes", read_nodes)),
+        (edges, inferred("relationships", read_edges)),
+    ):
+        assert got.schema == want.schema
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+def _write_small_snapshot(root: Path) -> dict[str, int]:
+    """A 10k-row positional snapshot in 9 files, with the ``_SUCCESS``
+    marker and ``.crc`` checksums a Hadoop writer leaves beside them."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    tables = {
+        "nodes/Entity": pa.table(
+            {
+                "id": np.arange(2_250),
+                "labels": ["Entity,Person"] * 2_250,
+                "score": rng.random(2_250),
+            }
+        ),
+        "nodes/Address": pa.table(
+            {"id": np.arange(2_250, 3_000), "labels": ["Address"] * 750}
+        ),
+    }
+    for rel, n in (("KNOWS", 3_000), ("OWNS", 2_500), ("LOCATED_AT", 1_500)):
+        tables[f"relationships/{rel}"] = pa.table(
+            {
+                "src": rng.integers(0, 3_000, n),
+                "dst": rng.integers(0, 3_000, n),
+                "type": [rel] * n,
+                "weight": rng.random(n),
+            }
+        )
+    files = {}
+    for name, table in tables.items():
+        d = root / name
+        d.mkdir(parents=True)
+        parts = 1 if name.endswith("Address") else 2
+        step = -(-table.num_rows // parts)
+        for i in range(parts):
+            part = d / f"part-{i:05d}.parquet"
+            pq.write_table(table.slice(i * step, step), part)
+            (d / f".{part.name}.crc").write_bytes(b"crc\x00")
+        (d / "_SUCCESS").write_bytes(b"")
+        files[name] = parts
+    return files
+
+
+def test_small_snapshot_reads_as_one_partition_per_side(spark, tmp_path):
+    """A snapshot smaller than ``spark.sql.files.openCostInBytes`` per
+    side reads as one partition per side; with the open cost lowered the
+    same snapshot keeps Spark's own splits (at least one per file), so
+    the rule follows the session conf and never merges large inputs.
+    Hidden files beside the data change neither format nor schema."""
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
+        _footer_schema,
+        _inference_conf,
+        _list_table,
+    )
+
+    root = tmp_path / "acme" / "100"
+    files = _write_small_snapshot(root)
+    ref = SnapshotRef("acme", 100, str(root))
+
+    nodes, edges = read_snapshot(spark, ref)
+    assert nodes.rdd.getNumPartitions() == 1
+    assert edges.rdd.getNumPartitions() == 1
+    assert nodes.count() == 3_000 and edges.count() == 7_000
+
+    with _conf(spark, **{"spark.sql.files.openCostInBytes": "1"}):
+        nodes, edges = read_snapshot(spark, ref)
+        for side, df in (("nodes", nodes), ("relationships", edges)):
+            dirs = sorted((root / side).iterdir())
+            splits = sum(spark.read.parquet(str(d)).rdd.getNumPartitions() for d in dirs)
+            assert df.rdd.getNumPartitions() == splits
+            assert splits >= sum(files[f"{side}/{d.name}"] for d in dirs)
+
+    entity = root / "nodes" / "Entity"
+    fmt, data, nbytes = _list_table(entity)
+    parts = sorted(str(p) for p in entity.glob("part-*.parquet"))
+    assert (fmt, data) == ("parquet", parts)
+    assert nbytes == sum(Path(p).stat().st_size for p in parts)
+    schema = _footer_schema(data[0], _inference_conf(spark))
+    assert schema == spark.read.parquet(str(entity)).schema
