@@ -74,10 +74,7 @@ def cmd_orchestrate(args) -> int:
         # Structured-Streaming mode: discovery dedup lives in the
         # engine's offset log under --checkpoint (survives restarts)
         ckpt = args.checkpoint or str(Path(args.base) / "_checkpoint")
-        q = orch.run_streaming(
-            ckpt,
-            processing_time=None if args.cycles else "30 seconds",
-        )
+        q = orch.run_streaming(ckpt, continuous=not args.cycles)
         q.awaitTermination()  # availableNow drains and stops on its own
         q.stop()
     elif args.cycles:
@@ -340,7 +337,8 @@ def main(argv: list[str] | None = None) -> int:
         "--streaming",
         action="store_true",
         help="drive via Structured Streaming (snapshotarrivals source; "
-        "--cycles>0 = availableNow drain-and-stop, else 30s trigger)",
+        "--cycles>0 = availableNow drain-and-stop, else a trigger every "
+        "scan_interval seconds)",
     )
     sp.add_argument(
         "--checkpoint",

@@ -57,7 +57,6 @@ def _walk(node: Any) -> Any:
 DEFAULTS: dict[str, Any] = {
     "orchestrator": {
         "scan_interval": 30,
-        "num_workers": 1,
         "max_concurrent_loads": 1,
         "max_retries": 3,
         "retry_backoff_base": 2,
@@ -65,10 +64,6 @@ DEFAULTS: dict[str, Any] = {
         "max_databases": 50,
         "heap_threshold_percent": 85,
         "keep_count": 2,
-    },
-    "worker": {
-        "concurrency": 10,
-        "arrow_table_size": 100_000,
     },
 }
 
@@ -99,12 +94,10 @@ def validate_config(config: dict[str, Any]) -> None:
     """Fail fast on nonsensical orchestrator settings (reference
     orchestrator.py:500-521 validates the same fields)."""
     orch = config.get("orchestrator", {})
-    for key in ("scan_interval", "num_workers", "max_concurrent_loads", "max_retries", "shutdown_timeout"):
+    for key in ("scan_interval", "max_concurrent_loads", "max_retries", "shutdown_timeout"):
         val = orch.get(key)
         if not isinstance(val, (int, float)) or val < 0:
             raise ConfigError(f"orchestrator.{key} must be a non-negative number, got {val!r}")
-    if orch.get("num_workers", 1) < 1:
-        raise ConfigError("orchestrator.num_workers must be >= 1")
     base = orch.get("retry_backoff_base", 2)
     if not isinstance(base, (int, float)) or base < 1:
         raise ConfigError("orchestrator.retry_backoff_base must be >= 1")

@@ -17,6 +17,16 @@ Semantics carried over (SURVEY §2.9 ST1-ST9):
   ST8  graceful drain with ``shutdown_timeout``
   ST9  JSON status emission per cycle
 
+``write_status`` rewrites ``status.json`` atomically after every cycle,
+streaming batch and drain: the ``OrchestratorStats`` counters,
+``queue_size``, ``databases``, ``aliases`` (customer -> deployment) and
+``tasks``, the last ``_TASK_LOG_LEN`` finished attempts, oldest first,
+each ``{db, state, attempt, duration_s, alias_switched, cleaned_up,
+error}``. ``state`` is ``completed``, ``retrying`` (load failed,
+re-queued with backoff), ``failed`` (retries exhausted) or ``deferred``
+(health gate closed: ``error`` is its reason, no retry consumed);
+``attempt`` counts from 1 and ``duration_s`` is on the orchestrator clock.
+
 The loop is deliberately driver-side: snapshot arrival is control-plane
 (a few events/minute); the data plane — read, normalize, count, sink
 write — is fully distributed Spark jobs. A Structured Streaming file
@@ -31,15 +41,18 @@ import json
 import os
 import tempfile
 import time
+from collections import deque
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import SparkSession
 
-from ..config import DEFAULTS
+from ..config import DEFAULTS, validate_config
 from ..plans.catalog import DeploymentCatalog, db_name
 from ..sources.snapshot import SnapshotRef, discover_snapshots, read_snapshot
+
+_TASK_LOG_LEN = 50  # attempts kept under "tasks" in status.json
 
 
 @dataclass
@@ -97,12 +110,14 @@ class Orchestrator:
         self.catalog = catalog or DeploymentCatalog(spark)
         cfg = dict(DEFAULTS["orchestrator"])
         cfg.update((config or {}).get("orchestrator", config or {}))
+        validate_config({"orchestrator": cfg})
         self.cfg = cfg
         self.status_path = Path(status_path) if status_path else None
         self.load_fn = load_fn or self._default_load
         self.clock = clock
         self.heap_fraction_fn = heap_fraction_fn or self._jvm_heap_fraction
         self.stats = OrchestratorStats()
+        self.task_log: deque[dict[str, Any]] = deque(maxlen=_TASK_LOG_LEN)
         self._queue: list[_Task] = []
         self._seen: set[tuple[str, int]] = set()
         self._stop = False
@@ -146,11 +161,18 @@ class Orchestrator:
     # -- discovery (ST1/ST2/ST4) --------------------------------------
 
     def scan_once(self) -> int:
-        """One discovery pass: find complete snapshots not yet seen or
-        deployed; enqueue them (reference scan_for_snapshots,
-        orchestrator.py:226-273 + prefect existence check :339-345)."""
+        """One discovery pass: enqueue the complete snapshots under
+        ``data_path`` (reference scan_for_snapshots,
+        orchestrator.py:226-273)."""
+        return self._enqueue(discover_snapshots(self.data_path))
+
+    def _enqueue(self, refs: Iterable[SnapshotRef]) -> int:
+        """Queue each snapshot not yet seen by this process and not
+        already deployed (reference prefect existence check
+        :339-345, which makes replays and restarts idempotent);
+        returns how many were queued."""
         found = 0
-        for ref in discover_snapshots(self.data_path):
+        for ref in refs:
             key = (ref.customer_id, ref.timestamp)
             if key in self._seen:
                 continue
@@ -190,6 +212,8 @@ class Orchestrator:
         switch alias -> cleanup. Returns success (reference
         load_snapshot, orchestrator.py:300-362)."""
         ref = task.snapshot
+        started, attempt = self.clock(), task.retry_count + 1
+        switched, cleaned, error = False, 0, None
         healthy, reason = self.check_health()
         if not healthy:
             # Health pressure is not the task's fault: re-queue with
@@ -202,26 +226,41 @@ class Orchestrator:
             task.not_before = self.clock() + self.cfg["retry_backoff_base"]
             self._queue.append(task)
             self.stats.health_deferred += 1
-            return False
-        try:
-            self.load_fn(self.spark, ref, self.catalog)
-            if self._is_latest_deployment(ref):
-                self.catalog.set_alias(ref.customer_id, ref.timestamp)
-                self.stats.alias_switches += 1
-            self.stats.cleaned_up += len(
-                self.catalog.cleanup_old_deployments(
-                    ref.customer_id, self.cfg["keep_count"]
+            state, error = "deferred", reason
+        else:
+            try:
+                self.load_fn(self.spark, ref, self.catalog)
+                if self._is_latest_deployment(ref):
+                    self.catalog.set_alias(ref.customer_id, ref.timestamp)
+                    self.stats.alias_switches += 1
+                    switched = True
+                cleaned = len(
+                    self.catalog.cleanup_old_deployments(
+                        ref.customer_id, self.cfg["keep_count"]
+                    )
                 )
-            )
-            self.stats.completed += 1
-            return True
-        except Exception as e:
-            self._fail(task, str(e))
-            return False
+                self.stats.cleaned_up += cleaned
+                self.stats.completed += 1
+                state = "completed"
+            except Exception as e:
+                error = str(e)
+                state = self._fail(task, error)
+        self.task_log.append({
+            "db": ref.database,
+            "state": state,
+            "attempt": attempt,
+            "duration_s": round(self.clock() - started, 3),
+            "alias_switched": switched,
+            "cleaned_up": cleaned,
+            "error": error,
+        })
+        return state == "completed"
 
     # -- retry (ST6) ---------------------------------------------------
 
-    def _fail(self, task: _Task, error: str) -> None:
+    def _fail(self, task: _Task, error: str) -> str:
+        """Re-queue with backoff while retries remain; returns the
+        attempt's state, ``retrying`` or ``failed``."""
         task.last_error = error
         if task.retry_count < self.cfg["max_retries"]:
             task.retry_count += 1
@@ -229,8 +268,9 @@ class Orchestrator:
             task.not_before = self.clock() + backoff
             self._queue.append(task)
             self.stats.retried += 1
-        else:
-            self.stats.failed += 1
+            return "retrying"
+        self.stats.failed += 1
+        return "failed"
 
     # -- status (ST9) --------------------------------------------------
 
@@ -240,12 +280,17 @@ class Orchestrator:
             "queue_size": len(self._queue),
             "databases": self.catalog.list_databases(),
             "aliases": self.catalog.list_aliases(),
+            "tasks": list(self.task_log),
         }
         if self.status_path:
             fd, tmp = tempfile.mkstemp(dir=str(self.status_path.parent), prefix=".status-")
-            with os.fdopen(fd, "w") as f:
-                json.dump(status, f, indent=2)
-            os.replace(tmp, self.status_path)
+            try:
+                with os.fdopen(fd, "w") as f:
+                    json.dump(status, f, indent=2)
+                os.replace(tmp, self.status_path)
+            finally:
+                if os.path.exists(tmp):
+                    os.unlink(tmp)
         return status
 
     # -- main loop (ST1/ST5/ST8) --------------------------------------
@@ -254,33 +299,21 @@ class Orchestrator:
         """One micro-batch: scan, then process up to
         ``max_concurrent_loads`` due tasks. Returns tasks processed."""
         self.scan_once()
-        now = self.clock()
-        due = [t for t in self._queue if t.not_before <= now]
-        processed = 0
-        for task in due[: self.cfg["max_concurrent_loads"]]:
-            self._queue.remove(task)
-            self.process_task(task)
-            processed += 1
+        processed = self._drain(self.cfg["max_concurrent_loads"])
         self.write_status()
         return processed
 
-    def _drain_due(self) -> int:
-        """Process up to ``max_concurrent_loads`` tasks whose backoff
-        has elapsed; returns how many ran."""
+    def _drain(self, limit: int) -> int:
+        """Process up to ``limit`` queued tasks whose backoff has
+        elapsed, in queue order; returns how many ran."""
         now = self.clock()
-        due = [t for t in self._queue if t.not_before <= now]
-        n = 0
-        for task in due[: self.cfg["max_concurrent_loads"]]:
+        due = [t for t in self._queue if t.not_before <= now][:limit]
+        for task in due:
             self._queue.remove(task)
             self.process_task(task)
-            n += 1
-        return n
+        return len(due)
 
-    def run_streaming(
-        self,
-        checkpoint: str | Path,
-        processing_time: str | None = None,
-    ):
+    def run_streaming(self, checkpoint: str | Path, continuous: bool = False):
         """The same ST1-ST9 pipeline driven by REAL Structured
         Streaming: the ``snapshotarrivals`` Python data source feeds
         ``foreachBatch``, so discovery dedup (ST2) is the engine's
@@ -291,11 +324,11 @@ class Orchestrator:
         backoff has elapsed; backed-off tasks ride the queue to the
         next micro-batch (ST6). ``foreachBatch`` is at-least-once, so
         the catalog existence check makes batch replays idempotent
-        (J3). With ``processing_time=None`` the trigger is
-        availableNow (drain-and-stop — ST8 by construction); pass
-        e.g. ``"30 seconds"`` for the reference's continuous cadence
-        (ST1, config.yaml:27). Returns the StreamingQuery; the caller
-        owns awaitTermination/stop."""
+        (J3). By default the trigger is availableNow (drain-and-stop —
+        ST8 by construction); ``continuous=True`` instead fires a
+        micro-batch every ``scan_interval`` seconds, the same cadence
+        as the driver loop (ST1, reference config.yaml:27). Returns the
+        StreamingQuery; the caller owns awaitTermination/stop."""
         from ..sources.snapshot_datasource import register_arrival_source
 
         register_arrival_source(self.spark)
@@ -305,18 +338,8 @@ class Orchestrator:
                 batch_df.collect(),
                 key=lambda r: (r.customer_id, r.timestamp),
             )  # control-plane rows: a few per batch, never data-plane
-            for r in rows:
-                ref = SnapshotRef(r.customer_id, r.timestamp, r.path)
-                key = (ref.customer_id, ref.timestamp)
-                if key in self._seen:
-                    continue
-                self._seen.add(key)
-                if self.catalog.database_exists(ref.database):
-                    self.stats.skipped_existing += 1  # replayed batch
-                    continue
-                self._queue.append(_Task(ref))
-                self.stats.discovered += 1
-            while self._drain_due():
+            self._enqueue(SnapshotRef(r.customer_id, r.timestamp, r.path) for r in rows)
+            while self._drain(self.cfg["max_concurrent_loads"]):
                 pass
             self.write_status()
 
@@ -327,10 +350,10 @@ class Orchestrator:
             .writeStream.foreachBatch(handle)
             .option("checkpointLocation", str(checkpoint))
         )
-        if processing_time is None:
-            writer = writer.trigger(availableNow=True)
+        if continuous:
+            writer = writer.trigger(processingTime=f"{self.cfg['scan_interval']} seconds")
         else:
-            writer = writer.trigger(processingTime=processing_time)
+            writer = writer.trigger(availableNow=True)
         return writer.start()
 
     def run(self, max_cycles: int | None = None, sleep: Callable[[float], None] = time.sleep) -> None:
@@ -365,13 +388,9 @@ class Orchestrator:
             now = self.clock()
             if now >= deadline:
                 break
-            due = [t for t in self._queue if t.not_before <= now]
-            if due:
-                task = due[0]
-                self._queue.remove(task)
-                # a failure here re-queues with a future not_before via
-                # _fail; the backoff wait below then applies to it
-                self.process_task(task)
+            # a failure here re-queues with a future not_before via
+            # _fail; the backoff wait below then applies to it
+            if self._drain(1):
                 continue
             target = min(min(t.not_before for t in self._queue), deadline)
             sleep(max(target - now, 0.0))

@@ -29,7 +29,6 @@ def test_interpolate_missing_raises(monkeypatch):
 def test_load_config_defaults():
     cfg = load_config()
     assert cfg["orchestrator"]["scan_interval"] == DEFAULTS["orchestrator"]["scan_interval"]
-    assert cfg["worker"]["arrow_table_size"] == 100_000
 
 
 def test_load_config_yaml_with_env(tmp_path, monkeypatch):
@@ -39,13 +38,15 @@ def test_load_config_yaml_with_env(tmp_path, monkeypatch):
     cfg = load_config(p)
     # whole-scalar ${...} placeholders come back YAML-typed
     assert cfg["orchestrator"]["scan_interval"] == 5
+    # knobs nothing reads any more are still accepted in old files
+    legacy = tmp_path / "legacy.yaml"
+    legacy.write_text(
+        "orchestrator:\n  scan_interval: ${NBG_INTERVAL}\n  num_workers: 4\n"
+        "worker:\n  concurrency: 10\n  arrow_table_size: 100000\n"
+    )
+    assert load_config(legacy)["orchestrator"]["scan_interval"] == 5
 
 
 def test_validate_rejects_negative():
     with pytest.raises(ConfigError):
         load_config(overrides={"orchestrator": {"scan_interval": -1}})
-
-
-def test_validate_rejects_zero_workers():
-    with pytest.raises(ConfigError):
-        load_config(overrides={"orchestrator": {"num_workers": 0}})

@@ -6,8 +6,9 @@ from types import SimpleNamespace
 import pytest
 
 from neo4j_blue_green_arrow_etl_spark import fixtures as FX
+from neo4j_blue_green_arrow_etl_spark.config import ConfigError
 from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
-from neo4j_blue_green_arrow_etl_spark.streaming import Orchestrator
+from neo4j_blue_green_arrow_etl_spark.streaming import Orchestrator, orchestrator
 
 
 @pytest.fixture()
@@ -51,6 +52,9 @@ def test_late_snapshot_loads_but_does_not_capture_alias(
     assert orch.stats.completed == 2
     assert orch.catalog.database_exists("customer1-1767741000")  # loaded
     assert orch.catalog.alias_target("customer1") == "customer1-1767741427"  # not switched
+    late = json.loads((tmp_path / "status.json").read_text())["tasks"][-1]
+    assert late["db"] == "customer1-1767741000"
+    assert late["state"] == "completed" and late["alias_switched"] is False
 
     # and a NEWER one does capture the alias
     FX.materialize_snapshot(spark, sf_dir, data_base, "customer1", 1767742000)
@@ -118,6 +122,15 @@ def test_retries_exhausted_marks_failed(spark, data_base, tmp_path):
         fake_now[0] += 10
     assert orch.stats.failed == 1
     assert orch.stats.completed == 0
+    assert orch.catalog.alias_target("customer1") is None  # no cutover on failure
+    tasks = orch.write_status()["tasks"]
+    assert [(t["state"], t["attempt"]) for t in tasks] == [
+        ("retrying", 1),
+        ("retrying", 2),
+        ("failed", 3),  # 1 initial + max_retries
+    ]
+    assert tasks[-1]["error"] == "permanent failure"
+    assert tasks[-1]["alias_switched"] is False
 
 
 def test_health_gate_defers_without_consuming_retries(spark, data_base, tmp_path):
@@ -151,6 +164,42 @@ def test_health_check_runs_no_spark_job(spark, data_base, tmp_path):
     result = []
     assert spark_jobs_run_by(spark, lambda: result.append(orch.check_health())) == []
     assert result == [(True, "ok")]
+
+
+def test_cycle_goes_through_the_module_hooks(spark, data_base, tmp_path, monkeypatch):
+    """The benchmark traces a cycle by wrapping these names: the module's
+    ``discover_snapshots``, and ``Orchestrator.check_health`` and
+    ``process_task(self, task)``, where it reads ``task.snapshot``. It
+    builds the orchestrator with a flat config."""
+    calls = []
+    discover = orchestrator.discover_snapshots
+    check_health = Orchestrator.check_health
+    process_task = Orchestrator.process_task
+
+    def spy_discover(path):
+        calls.append("discover")
+        return discover(path)
+
+    def spy_health(self):
+        calls.append("health")
+        return check_health(self)
+
+    def spy_process(self, task):
+        calls.append(task.snapshot.database)
+        return process_task(self, task)
+
+    monkeypatch.setattr(orchestrator, "discover_snapshots", spy_discover)
+    monkeypatch.setattr(Orchestrator, "check_health", spy_health)
+    monkeypatch.setattr(Orchestrator, "process_task", spy_process)
+    orch = Orchestrator(
+        spark,
+        data_base,
+        catalog=DeploymentCatalog(spark, tmp_path / "catalog.json"),
+        config={"keep_count": 2},
+    )
+    assert orch.run_cycle() == 1
+    assert calls == ["discover", "customer1-1767741427", "health"]
+    assert orch.stats.discovered == 1 and orch.stats.completed == 1
 
 
 @pytest.mark.parametrize(
@@ -238,6 +287,42 @@ def test_status_file_written(spark, data_base, tmp_path):
     assert status["completed"] == 1
     assert status["aliases"] == {"customer1": "customer1-1767741427"}
     assert status["queue_size"] == 0
+    last = status["tasks"][-1]
+    assert last["db"] == "customer1-1767741427" and last["attempt"] == 1
+    assert last["state"] == "completed" and last["alias_switched"] is True
+    assert last["cleaned_up"] == 0 and last["error"] is None
+
+
+def test_failed_status_write_leaves_no_temp_file(spark, tmp_path, monkeypatch):
+    """A status write that fails part-way removes its temp file and
+    leaves the previous status.json as it was."""
+    orch = make_orch(spark, str(tmp_path / "data"), tmp_path)
+    orch.write_status()
+    before = (tmp_path / "status.json").read_text()
+
+    def broken_dump(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", broken_dump)
+    with pytest.raises(OSError, match="disk full"):
+        orch.write_status()
+    assert list(tmp_path.glob(".status-*")) == []
+    assert (tmp_path / "status.json").read_text() == before
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("retry_backoff_base", 0),
+        ("retry_backoff_base", 0.5),
+        ("max_retries", -1),
+        ("max_concurrent_loads", -1),
+        ("scan_interval", "30 seconds"),
+    ],
+)
+def test_invalid_config_is_rejected(spark, tmp_path, key, value):
+    with pytest.raises(ConfigError, match=key):
+        make_orch(spark, str(tmp_path / "data"), tmp_path, **{key: value})
 
 
 def test_graceful_drain(spark, sf_dir, data_base, tmp_path):
@@ -398,6 +483,20 @@ def _stream_drain(orch, ckpt):
     q.stop()
 
 
+def test_scanned_snapshot_redelivered_by_stream_loads_once(spark, sf_dir, tmp_path):
+    """The driver loop and the streaming handler share one dedup: a
+    snapshot that ``scan_once`` queued and the arrivals source then
+    delivers again in the same process is loaded once."""
+    base = str(tmp_path / "data")
+    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
+    orch = make_orch(spark, base, tmp_path)
+    assert orch.scan_once() == 1
+    _stream_drain(orch, str(tmp_path / "ckpt"))
+    assert orch.stats.discovered == 1 and orch.stats.completed == 1
+    assert orch.stats.skipped_existing == 0
+    assert [t["db"] for t in orch.task_log] == ["acme-100"]
+
+
 def test_streaming_orchestrate_loads_and_switches(spark, sf_dir, tmp_path):
     """availableNow drain over the snapshotarrivals source: both
     snapshots load, the alias lands on the max timestamp, retention
@@ -438,3 +537,20 @@ def test_streaming_orchestrate_restart_is_exactly_once(spark, sf_dir, tmp_path):
     _stream_drain(orch3, ckpt)
     assert orch3.stats.completed == 1
     assert orch3.catalog.alias_target("acme").endswith("-300")
+
+
+def test_streaming_continuous_trigger_uses_scan_interval(spark, sf_dir, tmp_path):
+    """``continuous=True`` keeps the query running on a processing-time
+    trigger of ``scan_interval`` seconds, the driver loop's cadence."""
+    base = str(tmp_path / "data")
+    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
+    orch = make_orch(spark, base, tmp_path, scan_interval=0.5)
+    q = orch.run_streaming(str(tmp_path / "ckpt"), continuous=True)
+    try:
+        q.processAllAvailable()
+        assert q.isActive
+        trigger = q._jsq.streamingQuery().trigger()
+        assert trigger.intervalMs() == 500
+        assert orch.stats.completed == 1
+    finally:
+        q.stop()
