@@ -11,13 +11,14 @@ Layout:
   fixtures    deterministic derived tables (graph + control-plane) shared
               by the Spark queries and the DuckDB oracles
   sources/    snapshot reader (positional property-graph contract),
-              snapshot discovery
+              snapshot discovery, snapshot-arrival stream source
   operators/  relational query surface, dedup, similarity, text analysis,
               multimodal plumbing
   functions/  scalar helpers mirroring the reference's function surface
   plans/      deployment catalog + blue/green alias manager
   streaming/  continuous orchestrator (micro-batch loop + streaming file source)
-  sinks/      graph sink interface (parquet default; Flight/Neo4j adapter stub)
+  sinks/      two-phase graph sink interface and its Arrow Flight (Neo4j
+              GDS) adapter, plus an in-process Flight server for tests
 """
 
 __version__ = "0.1.0"
@@ -41,7 +42,6 @@ __all__ = [
     "WAREHOUSE_TABLES",
     "DeploymentCatalog",
     "Orchestrator",
-    "ParquetGraphSink",
     "QuerySpec",
     "REGISTRY",
     "SnapshotRef",
@@ -72,10 +72,6 @@ def __getattr__(name):
         from .streaming.orchestrator import Orchestrator
 
         return Orchestrator
-    if name == "ParquetGraphSink":
-        from .sinks.graph_sink import ParquetGraphSink
-
-        return ParquetGraphSink
     if name in ("SnapshotRef", "discover_snapshots", "read_snapshot"):
         from .sources import snapshot as _s
 

@@ -35,7 +35,8 @@ def _catalog(args):
 
 
 def cmd_load(args) -> int:
-    from .sources.snapshot import SnapshotRef, read_snapshot
+    from .sources.snapshot import SnapshotRef
+    from .streaming.orchestrator import load_snapshot
 
     spark, cat = _catalog(args)
     path = Path(args.base) / args.customer / str(args.timestamp)
@@ -44,10 +45,7 @@ def cmd_load(args) -> int:
         return 1
     ref = SnapshotRef(args.customer, args.timestamp, str(path))
     t0 = time.time()
-    nodes, edges = read_snapshot(spark, ref)
-    cat.register_deployment(
-        args.customer, args.timestamp, nodes, edges, source_path=str(path)
-    )
+    nodes, edges = load_snapshot(spark, ref, cat)
     n, e = nodes.count(), edges.count()
     secs = time.time() - t0
     print(
@@ -156,12 +154,12 @@ def cmd_demo(args) -> int:
             materialize_snapshot(spark, args.sf_dir, args.base, c, ts)
 
     print("PHASE 1: blue deployments (load + switch alias)")
-    from .sources.snapshot import SnapshotRef, read_snapshot
+    from .sources.snapshot import SnapshotRef
+    from .streaming.orchestrator import load_snapshot
 
     def load(c: str, ts: int) -> None:
         path = Path(args.base) / c / str(ts)
-        nodes, edges = read_snapshot(spark, SnapshotRef(c, ts, str(path)))
-        cat.register_deployment(c, ts, nodes, edges, source_path=str(path))
+        load_snapshot(spark, SnapshotRef(c, ts, str(path)), cat)
 
     for c in customers:
         load(c, blue_ts)

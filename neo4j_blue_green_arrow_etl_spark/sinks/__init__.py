@@ -1,3 +1,3 @@
-from .graph_sink import FlightGraphSink, GraphSink, ParquetGraphSink
+from .graph_sink import FlightGraphSink, GraphSink
 
-__all__ = ["FlightGraphSink", "GraphSink", "ParquetGraphSink"]
+__all__ = ["FlightGraphSink", "GraphSink"]

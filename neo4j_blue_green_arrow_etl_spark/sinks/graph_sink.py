@@ -5,11 +5,9 @@ session state machine CREATE_DATABASE -> feed nodes -> NODE_LOAD_DONE ->
 feed edges -> RELATIONSHIP_LOAD_DONE (reference
 neo4j_arrow_client.py:30-35, 123-149, 225-296). This engine keeps the
 protocol shape — an explicit lifecycle with an ordered barrier between
-the node phase and the edge phase — behind a sink interface:
+the node phase and the edge phase — in ``GraphSink``, and one sink
+implements it:
 
-- ``ParquetGraphSink`` (default, always available): writes the loaded
-  graph to versioned parquet locations. Fully distributed ``df.write``;
-  the two-phase barrier is the sequential pair of Spark write jobs.
 - ``FlightGraphSink``: the Neo4j Arrow adapter. The gRPC data path runs
   per-partition on executors (``mapInArrow`` + ``do_put``) so 1000
   executors stream concurrently; integration-tested over real gRPC
@@ -25,7 +23,6 @@ import abc
 import enum
 import json
 from dataclasses import dataclass
-from pathlib import Path
 
 from pyspark.sql import DataFrame
 
@@ -136,93 +133,14 @@ class GraphSink(abc.ABC):
     @abc.abstractmethod
     def _write_edges(self, edges: DataFrame) -> WriteResult: ...
 
-    def _nodes_done(self) -> dict | None:  # optional hook (phase barrier)
-        pass
+    @abc.abstractmethod
+    def _nodes_done(self) -> dict | None: ...
 
-    def _finalize(self) -> dict | None:  # optional hook
-        pass
+    @abc.abstractmethod
+    def _finalize(self) -> dict | None: ...
 
-    def _abort(self) -> None:  # optional hook
-        pass
-
-
-class ParquetGraphSink(GraphSink):
-    """Default sink: versioned parquet tree
-
-        {base}/{database}/nodes/   {base}/{database}/relationships/
-
-    plus a ``_LOAD_META.json`` marker written only at ``edges_done`` —
-    the completeness gate for downstream discovery (analogous to the
-    reference's "complete snapshot" contract, orchestrator.py:253-262).
-    Scale: plain ``df.write.parquet`` — fully parallel, one file per
-    partition; no driver materialization.
-    """
-
-    def __init__(self, database: str, base_path: str | Path):
-        super().__init__(database)
-        self.base = Path(base_path) / database
-        self.counts: dict[str, int] = {}
-
-    def _create(self) -> None:
-        self.base.mkdir(parents=True, exist_ok=True)
-
-    def _write(self, df: DataFrame, kind: str, key: str) -> WriteResult:
-        # The protocol allows MULTIPLE write calls per phase (the
-        # reference streams batch after batch): the first call of a
-        # phase starts clean (overwrite), subsequent calls APPEND —
-        # previously every call overwrote, silently discarding earlier
-        # batches while counts kept accumulating.
-        mode = "append" if key in self.counts else "overwrite"
-        df.write.mode(mode).parquet(str(self.base / kind))
-        n = int(df.count())
-        self.counts[key] = self.counts.get(key, 0) + n
-        return WriteResult(rows=n)
-
-    def _write_nodes(self, nodes: DataFrame) -> WriteResult:
-        return self._write(nodes, "nodes", "nodes")
-
-    def _write_edges(self, edges: DataFrame) -> WriteResult:
-        return self._write(edges, "relationships", "edges")
-
-    def _finalize(self) -> None:
-        (self.base / "_LOAD_META.json").write_text(
-            json.dumps({"database": self.database, "counts": self.counts})
-        )
-
-    def _abort(self) -> None:
-        # leave data for post-mortem; drop the completeness marker
-        marker = self.base / "_LOAD_META.json"
-        if marker.exists():
-            marker.unlink()
-
-    def compact(self, spark, target_files: int = 1) -> dict[str, int]:
-        """Small-files maintenance: rewrite nodes/ and relationships/
-        with ``target_files`` files each, swapping directories only
-        after the full rewrite succeeds (write-aside + rename, so a
-        crash mid-compaction leaves the original data intact — the same
-        atomicity discipline as the catalog manifest).
-
-        At 100 TB this is the periodic job that keeps file counts at
-        ~max(partitions, bytes / 1 GiB) after many incremental loads;
-        readers are unaffected because the swap is a rename."""
-        self._require(SinkState.DONE)
-        import shutil
-
-        out: dict[str, int] = {}
-        for kind in ("nodes", "relationships"):
-            src = self.base / kind
-            if not src.exists():
-                continue
-            tmp = self.base / f"_{kind}.compacting"
-            df = spark.read.parquet(str(src))
-            df.coalesce(target_files).write.mode("overwrite").parquet(str(tmp))
-            n_before = len(df.inputFiles())
-            old = self.base / f"_{kind}.old"
-            src.rename(old)
-            tmp.rename(src)
-            shutil.rmtree(old)
-            out[kind] = n_before
-        return out
+    @abc.abstractmethod
+    def _abort(self) -> None: ...
 
 
 class FlightGraphSink(GraphSink):

@@ -174,72 +174,27 @@ class SnapshotRef:
         return f"{self.customer_id}-{self.timestamp}"
 
 
-# derived from FORMATS so the read path and the discovery gate can never
-# drift (ADVICE r3: ORC was readable but invisible to discovery); .ndjson
-# is the one extra spelling the json reader accepts
-DATA_SUFFIXES = tuple(f".{f}" for f in FORMATS) + (".ndjson",)
+_HIDDEN = ("_", ".")
 
 
-def _non_empty_dir(p: Path) -> bool:
-    """True when the tree under ``p`` contains at least one COMMITTED
-    data file. Counting any entry would race the graphsnapshot writer:
-    its tasks stage ``.staging/*.staged`` fragments (and mkdir the table dirs)
-    before the driver's atomic rename publishes them — a directory
-    holding only staged fragments must stay invisible to the
-    completeness gate, or discovery promotes a half-written snapshot.
-
-    Discovery polls while writers commit/abort/cleanup concurrently, so
-    every stat tolerates files vanishing mid-walk (OSError -> skip).
-    Cost: the walk short-circuits on the first committed file; the
-    no-committed-file case touches every entry of ONE table dir —
-    bounded by that snapshot's fragment count, control-plane-sized."""
-    if not p.is_dir():
-        return False
-    try:
-        for f in p.rglob("*"):
-            try:
-                if (
-                    f.suffix in DATA_SUFFIXES
-                    and f.is_file()
-                    and f.stat().st_size > 0
-                ):
-                    return True
-            except OSError:
-                continue  # deleted mid-walk by a concurrent writer
-    except OSError:
-        return False  # the dir itself vanished (cleanup/abort race)
-    return False
-
-
-def discover_snapshots(base_path: str | Path) -> list[SnapshotRef]:
-    """Scan ``base/{customer}/{timestamp}`` for COMPLETE snapshots.
-
-    Completeness gate (reference orchestrator.py:253-262): both
-    ``nodes/`` and ``relationships/`` must exist and be non-empty;
-    timestamp dirs must be integer-named (orchestrator.py:243-245).
-    Driver-side listing by design — this is control-plane metadata, a
-    few thousand dirs at most, not data-plane work.
-    """
-    base = Path(base_path)
-    found: list[SnapshotRef] = []
-    if not base.is_dir():
-        return found
-    for customer_dir in sorted(p for p in base.iterdir() if p.is_dir()):
-        for ts_dir in sorted(p for p in customer_dir.iterdir() if p.is_dir()):
-            try:
-                ts = int(ts_dir.name)
-            except ValueError:
-                continue
-            if _non_empty_dir(ts_dir / "nodes") and _non_empty_dir(ts_dir / "relationships"):
-                found.append(SnapshotRef(customer_dir.name, ts, str(ts_dir)))
-    return found
+def _subdirs(parent: Path) -> list[Path]:
+    """The visible subdirectories of ``parent``, sorted by name."""
+    with os.scandir(parent) as entries:
+        names = sorted(
+            e.name for e in entries if e.is_dir() and not e.name.startswith(_HIDDEN)
+        )
+    return [parent / name for name in names]
 
 
 def _list_table(table_dir: Path) -> tuple[str, list[str], int]:
     """One walk of a label/type dir: its format, its data files (sorted)
-    and their total bytes. Names starting with ``_`` or ``.`` are skipped
-    at every level, as Spark's own listing skips them (``_SUCCESS``,
-    ``.crc`` checksums, ``_temporary``, ``.staging``). The format is the
+    and their total bytes. This is the one rule for which files make up
+    a table: ``read_snapshot`` reads exactly these files, and
+    ``discover_snapshots`` admits a snapshot only when every table dir
+    lists some bytes here. Names starting with ``_`` or ``.`` are
+    skipped at every level, as Spark's own listing skips them
+    (``_SUCCESS``, ``.crc`` checksums, and the ``_temporary`` or
+    ``.staging`` dirs a write in progress fills). The format is the
     first recognized extension: snapshots can arrive as parquet, orc,
     csv (header) or ndjson, and mixing formats ACROSS dirs of one
     snapshot is fine; a dir with none reads as parquet."""
@@ -248,7 +203,7 @@ def _list_table(table_dir: Path) -> tuple[str, list[str], int]:
     while pending:
         with os.scandir(pending.pop()) as entries:
             for e in entries:
-                if e.name.startswith(("_", ".")):
+                if e.name.startswith(_HIDDEN):
                     continue
                 if e.is_dir():
                     pending.append(e.path)
@@ -257,11 +212,51 @@ def _list_table(table_dir: Path) -> tuple[str, list[str], int]:
     files.sort()
     fmt = "parquet"
     for path, _ in files:
-        suffix = Path(path).suffix.lstrip(".").lower()
+        suffix = os.path.splitext(path)[1].lstrip(".").lower()
         if suffix in FORMATS or suffix == "ndjson":
             fmt = "json" if suffix == "ndjson" else suffix
             break
     return fmt, [path for path, _ in files], sum(size for _, size in files)
+
+
+def _complete(ts_dir: Path) -> bool:
+    """True when ``nodes/`` and ``relationships/`` each hold at least one
+    table dir and every table dir lists a non-empty data file. A table
+    dir with none is a write still in progress, which the reader would
+    fail on. Discovery polls while producers and cleanup run, so a dir
+    or file vanishing mid-walk reads as not complete."""
+    try:
+        for side in ("nodes", "relationships"):
+            tables = _subdirs(ts_dir / side)
+            if not tables or any(_list_table(t)[2] == 0 for t in tables):
+                return False
+    except OSError:
+        return False
+    return True
+
+
+def discover_snapshots(base_path: str | Path) -> list[SnapshotRef]:
+    """Scan ``base/{customer}/{timestamp}`` for COMPLETE snapshots.
+
+    Completeness gate (reference orchestrator.py:253-262), with the
+    reader's own file listing (``_complete``); timestamp dirs must be
+    integer-named (orchestrator.py:243-245). Driver-side listing by
+    design — this is control-plane metadata, a few thousand dirs at
+    most, not data-plane work.
+    """
+    base = Path(base_path)
+    found: list[SnapshotRef] = []
+    if not base.is_dir():
+        return found
+    for customer_dir in _subdirs(base):
+        for ts_dir in _subdirs(customer_dir):
+            try:
+                ts = int(ts_dir.name)
+            except ValueError:
+                continue
+            if _complete(ts_dir):
+                found.append(SnapshotRef(customer_dir.name, ts, str(ts_dir)))
+    return found
 
 
 # The session settings Spark's parquet schema inference reads.
@@ -377,7 +372,7 @@ def _read_side(
     """Every label (or type) dir under ``side_dir`` through ``read``,
     unioned by name, and the bytes of their data files."""
     frames, nbytes = [], 0
-    for table_dir in sorted(p for p in side_dir.iterdir() if p.is_dir()):
+    for table_dir in _subdirs(side_dir):
         fmt, files, size = _list_table(table_dir)
         schema = _footer_schema(files[0], conf) if fmt == "parquet" and files else None
         frames.append(read(spark, str(table_dir), fmt=fmt, schema=schema))
@@ -403,36 +398,4 @@ def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame
     return (
         nodes.coalesce(max(1, math.ceil(node_bytes / open_cost))),
         edges.coalesce(max(1, math.ceil(edge_bytes / open_cost))),
-    )
-
-
-def diff_nodes(old: DataFrame, new: DataFrame) -> DataFrame:
-    """What changed between two snapshot generations: one row per
-    nodeId with change in {'added','removed','changed'} (unchanged
-    nodes are omitted) — the blue/green inspection tool for "what does
-    cutting over to this green actually change?".
-
-    Scale: each side is reduced MAP-SIDE to (nodeId, sha256 digest of
-    all non-id columns, canonically ordered), so the single full-outer
-    equi-join shuffles fixed-width rows however wide the node
-    properties are."""
-
-    def digest(df: DataFrame, out: str) -> DataFrame:
-        cols = sorted(c for c in df.columns if c != NODE_ID)
-        payload = F.to_json(
-            F.struct(*[F.col(c).cast("string").alias(c) for c in cols])
-        )
-        return df.select(NODE_ID, F.sha2(payload, 256).alias(out))
-
-    o = digest(old, "_od")
-    n = digest(new, "_nd")
-    change = (
-        F.when(F.col("_od").isNull(), "added")
-        .when(F.col("_nd").isNull(), "removed")
-        .when(F.col("_od") != F.col("_nd"), "changed")
-    )
-    return (
-        o.join(n, NODE_ID, "full_outer")
-        .select(NODE_ID, change.alias("change"))
-        .filter(F.col("change").isNotNull())
     )

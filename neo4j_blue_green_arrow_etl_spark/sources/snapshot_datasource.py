@@ -1,498 +1,15 @@
-"""Spark 4 Python Data Source for snapshot-partitioned graph tables.
+"""Snapshot ARRIVAL as a Spark 4 Python streaming Data Source.
 
-``spark.read.format("graphsnapshot")`` reads one node-label or
-relationship-type directory of a snapshot tree and applies the
-reference's positional contract AT THE SOURCE, so consumers never see
-the raw positional schema:
-
-- ``kind=nodes``: column 0 -> ``nodeId``, column 1 -> ``labels`` as
-  ``array<string>`` (CSV split; reference neo4j_pq.py:48-51, 70-81)
-- ``kind=edges``: columns 0/1/2 -> ``sourceNodeId`` / ``targetNodeId``
-  / ``relationshipType`` (reference neo4j_pq.py:93-103)
-
-Parity map (and the Spark-first upgrades over the reference):
-
-- One ``InputPartition`` per parquet fragment == the reference's
-  fragment work-list (neo4j_pq.py:279-285, SURVEY §2 S2), but planned
-  by Spark's scheduler instead of a hand-rolled fork pool.
-- ``read()`` streams ``table_size``-row Arrow RecordBatches
-  (default 100000 — the reference's ``arrow_table_size``,
-  config.yaml:22 / neo4j_pq.py:116-126).
-- The label split is VECTORIZED Arrow compute (``split_pattern``),
-  replacing the reference's pandas row-apply (neo4j_pq.py:59 — the
-  known weakness SURVEY §4.3 flags).
-- ``pushFilters``: comparison predicates on scalar columns are
-  translated to pyarrow dataset filter expressions and evaluated
-  inside the scan (row-group statistics pruning + columnar filtering),
-  so ``df.filter(col("nodeId") == x)`` never ships non-matching rows
-  into Spark — pushdown the reference has no analogue for.
-
-The plain ``spark.read.parquet`` path (sources/snapshot.py) remains the
-default engine path; this source exists for (a) true source-level
-pushdown demos and (b) pipelines that want the positional contract
-applied before Spark ever sees the data.
-
-The format is also WRITABLE (``df.write.format("graphsnapshot")``):
-tasks stage Arrow batches into ``*.staged`` fragments invisible to both
-the reader and ``discover_snapshots``'s completeness gate, and the
-driver's commit atomically renames them into ``*.parquet`` — the
-two-phase publish of the reference's import protocol, expressed as a
-Spark ``DataSourceArrowWriter`` (see SnapshotWriter).
+``spark.readStream.format("snapshotarrivals").load(base)`` emits one row
+per newly complete snapshot under ``base``; ``Orchestrator.run_streaming``
+feeds it to ``foreachBatch``. Reading a snapshot's data is
+``sources.snapshot.read_snapshot``'s job, not this module's.
 """
 
 from __future__ import annotations
 
-import contextlib
-import re
-from dataclasses import dataclass
-from pathlib import Path
-from typing import TYPE_CHECKING, Iterator
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    IsNotNull,
-    LessThan,
-    LessThanOrEqual,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pyarrow as pa
-
-FORMAT_NAME = "graphsnapshot"
-DEFAULT_TABLE_SIZE = 100_000  # reference arrow_table_size, config.yaml:22
-
-NODE_RENAMES = ("nodeId", "labels")
-EDGE_RENAMES = ("sourceNodeId", "targetNodeId", "relationshipType")
-LABELS = "labels"
-
-
-def _renamed_names(kind: str, original: list[str]) -> list[str]:
-    lead = NODE_RENAMES if kind == "nodes" else EDGE_RENAMES
-    if len(original) < len(lead):
-        raise ValueError(
-            f"{kind} table needs >= {len(lead)} columns; got {original}"
-        )
-    return list(lead) + original[len(lead) :]
-
-
-def _list_fragments(path: str) -> list[str]:
-    frags = sorted(
-        str(p)
-        for p in Path(path).rglob("*.parquet")
-        if p.is_file() and p.stat().st_size > 0
-    )
-    if not frags:
-        raise FileNotFoundError(f"no parquet fragments under {path}")
-    return frags
-
-
-def _arrow_schema(path: str, kind: str) -> "pa.Schema":
-    """Renamed Arrow schema (labels already list<string> for nodes)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    raw = pq.read_schema(_list_fragments(path)[0])
-    names = _renamed_names(kind, list(raw.names))
-    fields = [raw.field(i).with_name(n) for i, n in enumerate(names)]
-    if kind == "nodes":
-        fields[1] = pa.field(LABELS, pa.list_(pa.string()))
-    return pa.schema(fields)
-
-
-@dataclass
-class FragmentPartition(InputPartition):
-    """One parquet fragment == one Spark task (reference S2 parity)."""
-
-    path: str
-
-
-class SnapshotReader(DataSourceReader):
-    def __init__(self, options: dict, schema: StructType) -> None:
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("graphsnapshot requires a path")
-        self._kind = options.get("kind", "nodes")
-        if self._kind not in ("nodes", "edges"):
-            raise ValueError(f"kind must be nodes|edges, got {self._kind!r}")
-        self._table_size = int(options.get("table_size", DEFAULT_TABLE_SIZE))
-        # renamed-name -> original parquet column name, for pushdown and
-        # the per-batch rename; derived once on the driver
-        import pyarrow.parquet as pq
-
-        self._fragments = _list_fragments(self._path)
-        raw_names = list(pq.read_schema(self._fragments[0]).names)
-        renamed = _renamed_names(self._kind, raw_names)
-        self._to_raw = dict(zip(renamed, raw_names))
-        self._pushed: list[Filter] = []
-
-    # -- pushdown ---------------------------------------------------------
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Absorb comparison predicates on scalar source columns; the
-        rest go back to Spark. The labels column is DERIVED (CSV ->
-        array) so filters on it are never absorbed."""
-        for f in filters:
-            col = f.attribute[-1] if getattr(f, "attribute", None) else None
-            absorbable = (
-                isinstance(
-                    f,
-                    (
-                        EqualTo,
-                        GreaterThan,
-                        GreaterThanOrEqual,
-                        LessThan,
-                        LessThanOrEqual,
-                        IsNotNull,
-                    ),
-                )
-                and col in self._to_raw
-                and not (self._kind == "nodes" and col == LABELS)
-            )
-            if absorbable:
-                self._pushed.append(f)
-            else:
-                yield f
-
-    def _filter_expr(self):
-        """pyarrow dataset expression for the absorbed filters (applied
-        on ORIGINAL column names, before the positional rename)."""
-        import pyarrow.dataset as pds
-
-        expr = None
-        for f in self._pushed:
-            field = pds.field(self._to_raw[f.attribute[-1]])
-            if isinstance(f, EqualTo):
-                e = field == f.value
-            elif isinstance(f, GreaterThan):
-                e = field > f.value
-            elif isinstance(f, GreaterThanOrEqual):
-                e = field >= f.value
-            elif isinstance(f, LessThan):
-                e = field < f.value
-            elif isinstance(f, LessThanOrEqual):
-                e = field <= f.value
-            else:  # IsNotNull
-                e = field.is_valid()
-            expr = e if expr is None else (expr & e)
-        return expr
-
-    # -- planning / scan --------------------------------------------------
-    def partitions(self) -> list[FragmentPartition]:
-        return [FragmentPartition(p) for p in self._fragments]
-
-    def read(self, partition: FragmentPartition) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pds
-
-        ds = pds.dataset(partition.path, format="parquet")
-        scanner = ds.scanner(
-            batch_size=self._table_size, filter=self._filter_expr()
-        )
-        kind = self._kind
-        for batch in scanner.to_batches():
-            if batch.num_rows == 0:
-                continue
-            names = _renamed_names(kind, list(batch.schema.names))
-            arrays = list(batch.columns)
-            if kind == "nodes":
-                # vectorized CSV -> list<string> (vs the reference's
-                # pandas row-apply, neo4j_pq.py:59)
-                arrays[1] = pc.split_pattern(
-                    pc.cast(arrays[1], pa.string()), pattern=","
-                )
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-
-class SnapshotDataSource(DataSource):
-    """``spark.read.format("graphsnapshot")`` — see module docstring."""
-
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
-
-    def schema(self) -> StructType:
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("graphsnapshot requires a path")
-        kind = self.options.get("kind", "nodes")
-        return from_arrow_schema(_arrow_schema(path, kind))
-
-    def reader(self, schema: StructType) -> SnapshotReader:
-        return SnapshotReader(dict(self.options), schema)
-
-    def writer(self, schema: StructType, overwrite: bool) -> "SnapshotWriter":
-        return SnapshotWriter(dict(self.options), schema, overwrite)
-
-    def streamWriter(
-        self, schema: StructType, overwrite: bool
-    ) -> "SnapshotStreamWriter":
-        return SnapshotStreamWriter(dict(self.options), schema, overwrite)
-
-
-@dataclass
-class FragmentCommit(WriterCommitMessage):
-    """One task's staged fragment (None when the partition was empty)."""
-
-    staged: str | None
-    rows: int
-
-
-# streaming epochs publish as part-b<batchId>-<frag>.parquet; batch
-# fragments are part-<uuid4hex>.parquet — a single dash-free token, so
-# the "b<digits>-" infix is unambiguous
-_EPOCH_FRAGMENT = re.compile(r"^part-b\d+-")
-
-
-class SnapshotWriter(DataSourceArrowWriter):
-    """``df.write.format("graphsnapshot")`` — the WRITE half of the
-    positional contract, two-phase like the reference's import protocol
-    (neo4j_arrow_client.py create -> feed -> done):
-
-    - Each task streams its Arrow batches into ONE staged fragment
-      (``.staging/part-*.staged``, a hidden subdir like Hadoop's
-      ``_temporary``) — invisible to the reader's ``*.parquet`` glob
-      AND to ``discover_snapshots``'s completeness gate, so a
-      half-written snapshot can never be picked up, even when an
-      aborted job's killed tasks race the driver's cleanup sweep.
-    - ``commit`` (driver, runs only if every task succeeded) renames
-      staged fragments to ``part-*.parquet`` — the atomic publish step;
-      ``abort`` deletes them, leaving the directory exactly as before.
-    - Column contract is the reader's, reversed: nodes reorder
-      (nodeId, labels, props...) to positions 0/1/... and join the
-      labels array back to CSV (vectorized ``binary_join``); edges put
-      (sourceNodeId, targetNodeId, relationshipType) at 0/1/2.
-
-    ``mode("append")`` adds fragments; ``mode("overwrite")`` publishes
-    the new fragments FIRST and then removes the previously committed
-    batch fragments — a crash mid-commit leaves old+new (a readable
-    superset; each fragment is self-contained), never an empty or
-    partial directory, and a concurrent reader sees at worst that
-    transient superset. Streaming epoch fragments (``part-b*``) in the
-    same directory are never touched by a batch overwrite. Rename-based
-    publish assumes a POSIX-rename filesystem (HDFS/local); object
-    stores want a manifest commit instead, same protocol shape."""
-
-    def __init__(
-        self, options: dict, schema: StructType, overwrite: bool
-    ) -> None:
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("graphsnapshot write requires a path")
-        self._kind = options.get("kind", "nodes")
-        if self._kind not in ("nodes", "edges"):
-            raise ValueError(f"kind must be nodes|edges, got {self._kind}")
-        self._overwrite = overwrite
-        lead = NODE_RENAMES if self._kind == "nodes" else EDGE_RENAMES
-        missing = [c for c in lead if c not in schema.fieldNames()]
-        if missing:
-            raise ValueError(
-                f"{self._kind} write needs columns {list(lead)}; "
-                f"missing {missing}"
-            )
-
-    def _positional(self, batch: "pa.RecordBatch") -> "pa.RecordBatch":
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        lead = NODE_RENAMES if self._kind == "nodes" else EDGE_RENAMES
-        names = list(batch.schema.names)
-        order = list(lead) + [n for n in names if n not in lead]
-        arrays = [batch.column(names.index(n)) for n in order]
-        if self._kind == "nodes":
-            labels = arrays[1]
-            if pa.types.is_list(labels.type) or pa.types.is_large_list(
-                labels.type
-            ):
-                arrays[1] = pc.binary_join(
-                    pc.cast(labels, pa.list_(pa.string())), ","
-                )
-        return pa.RecordBatch.from_arrays(arrays, names=order)
-
-    def write(self, iterator) -> FragmentCommit:
-        import uuid
-
-        import pyarrow.parquet as pq
-
-        # Stage under a hidden subdir (Hadoop's _temporary convention):
-        # when a job aborts, a sibling task that Spark has killed but
-        # whose Python worker is still mid-write can create its staged
-        # file AFTER the driver's abort() sweep ran — the kill is
-        # asynchronous, so no sweep timing closes that window. Keeping
-        # every in-flight byte inside .staging/ means such racy residue
-        # is never adjacent to published *.parquet fragments; the next
-        # successful commit's _sweep_orphans clears it.
-        staging = Path(self._path) / ".staging"
-        staging.mkdir(parents=True, exist_ok=True)
-        staged = str(staging / f"part-{uuid.uuid4().hex}.staged")
-        writer = None
-        rows = 0
-        try:
-            for batch in iterator:
-                if batch.num_rows == 0:
-                    continue
-                out = self._positional(batch)
-                if writer is None:
-                    writer = pq.ParquetWriter(staged, out.schema)
-                writer.write_batch(out)
-                rows += out.num_rows
-        except BaseException:
-            # this task dies: remove its own partial fragment — the
-            # driver's abort() only sees commit messages of tasks that
-            # RETURNED, so self-cleanup here is what keeps a failed job
-            # residue-free
-            if writer is not None:
-                writer.close()
-            Path(staged).unlink(missing_ok=True)
-            raise
-        if writer is not None:
-            writer.close()
-        if rows == 0:
-            return FragmentCommit(staged=None, rows=0)
-        return FragmentCommit(staged=staged, rows=rows)
-
-    def commit(self, messages) -> None:
-        # Publish-then-delete (ADVICE r3): renaming the new fragments
-        # FIRST means a driver crash mid-commit leaves old+new visible
-        # (a superset readers tolerate — fragments are self-contained),
-        # never an empty directory; the old delete-then-rename order had
-        # a window where the previous snapshot was gone with nothing
-        # published.
-        #
-        # Crash-between-renames contract (tested:
-        # test_commit_killed_between_renames_keeps_snapshot_hidden): a
-        # kill mid-loop leaves SOME fragments published, each one
-        # self-contained and readable (per-file rename is atomic on
-        # POSIX — never a torn file), the rest still .staged and
-        # invisible. Snapshot-level visibility is guarded by the ST4
-        # completeness gate (both nodes/ AND relationships/ must hold
-        # committed data), so a crash anywhere before the final table's
-        # first rename keeps the whole snapshot hidden; a crash between
-        # renames of the LAST table exposes a valid row-subset of that
-        # table until the retried job republishes (overwrite removes
-        # the partial fragments — exactly-once after retry). That
-        # residual window is the same one the reference's rename-based
-        # directory protocol has; closing it entirely takes a manifest
-        # commit (the object-store variant noted in the class doc). Pre-existing names are snapshotted before renaming
-        # so overwrite removes exactly the fragments of earlier commits.
-        # Epoch-tagged fragments (part-b<batchId>-*, the streaming
-        # writer's lineage) are excluded: a batch overwrite replaces
-        # prior BATCH publications, not a live stream's epochs.
-        old_frags = (
-            [
-                p
-                for p in Path(self._path).glob("*.parquet")
-                if not _EPOCH_FRAGMENT.match(p.name)
-            ]
-            if self._overwrite
-            else []
-        )
-        for m in messages:
-            if m.staged is not None:
-                src = Path(m.staged)
-                dst = Path(self._path) / (src.stem + ".parquet")
-                src.rename(dst)
-        for old in old_frags:
-            old.unlink(missing_ok=True)
-        self._sweep_orphans()
-
-    def _sweep_orphans(self) -> None:
-        """Remove staged fragments NOT published by this commit — the
-        leftovers of killed/retried task attempts whose replacements
-        did commit. Anything still *.staged after publish is garbage
-        by protocol (single-writer-per-directory, like parquet's
-        _temporary)."""
-        staging = Path(self._path) / ".staging"
-        for p in staging.glob("*.staged"):
-            p.unlink(missing_ok=True)
-        with contextlib.suppress(OSError):
-            staging.rmdir()  # leave published dirs clean; non-empty = no-op
-        # Legacy layout sweep: pre-.staging writers staged at the top
-        # level; an aborted job from that era leaves part-*.staged
-        # residue (invisible to readers but accumulating forever in
-        # upgraded snapshot dirs) that only this sweep reclaims.
-        for p in Path(self._path).glob("*.staged"):
-            p.unlink(missing_ok=True)
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and m.staged is not None:
-                Path(m.staged).unlink(missing_ok=True)
-        # Spark 4.1's PythonBatchWrite hands abort() None for EVERY
-        # task (successful commit messages are not retained across a
-        # job failure), so also sweep by convention: every *.staged
-        # file under .staging/ belongs to this failed job — concurrent
-        # writers to one directory are unsupported, exactly like
-        # parquet's _temporary dirs. (A task killed mid-write may still
-        # re-create its file after this sweep; it lands inside
-        # .staging/, invisible to readers, and the next commit clears
-        # it.)
-        staging = Path(self._path) / ".staging"
-        if staging.is_dir():
-            for p in staging.glob("*.staged"):
-                p.unlink(missing_ok=True)
-            with contextlib.suppress(OSError):
-                staging.rmdir()
-        for p in Path(self._path).glob("*.staged"):  # legacy top-level layout
-            p.unlink(missing_ok=True)
-
-
-class SnapshotStreamWriter(SnapshotWriter, DataSourceStreamArrowWriter):
-    """``writeStream.format("graphsnapshot")`` — continuous fragment
-    publication with EXACTLY-ONCE epochs on top of the same staged
-    protocol as the batch writer (which this subclass reuses for
-    write/abort):
-
-    - tasks stage ``part-*.staged`` exactly as in batch;
-    - ``commit(messages, batchId)`` first deletes any
-      ``part-b{batchId}-*.parquet`` left by a PREVIOUS attempt of the
-      same epoch (a micro-batch replayed after a crash between publish
-      and checkpoint-commit), then renames this attempt's staged
-      fragments to ``part-b{batchId}-*.parquet`` — replay REPLACES its
-      own epoch instead of duplicating it, so downstream readers see
-      each micro-batch's rows once;
-    - the epoch tag in the filename doubles as lineage: which
-      micro-batch produced which fragment is inspectable with ls."""
-
-    def commit(self, messages, batchId: int) -> None:
-        for old in Path(self._path).glob(f"part-b{batchId}-*.parquet"):
-            old.unlink()
-        for m in messages:
-            if m is not None and m.staged is not None:
-                src = Path(m.staged)
-                frag_id = src.stem.removeprefix("part-")
-                src.rename(
-                    Path(self._path) / f"part-b{batchId}-{frag_id}.parquet"
-                )
-        self._sweep_orphans()
-
-    def abort(self, messages, batchId: int) -> None:
-        SnapshotWriter.abort(self, messages)
-
-
-def register_snapshot_source(spark) -> None:
-    """Idempotently register the format on a session (and enable
-    Python-source filter pushdown, off by default in Spark 4.1 —
-    without it a reader implementing pushFilters() is rejected)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(SnapshotDataSource)
-
-
-# ---------------------------------------------------------------------------
-# Streaming source: snapshot ARRIVAL as a Structured Streaming stream
-# ---------------------------------------------------------------------------
 
 ARRIVAL_FORMAT_NAME = "snapshotarrivals"
 ARRIVAL_SCHEMA = "customer_id string, timestamp long, path string"
@@ -511,7 +28,7 @@ class SnapshotArrivalStreamReader(SimpleDataSourceStreamReader):
     checkpoint and already-discovered snapshots never re-emit.
 
     Completeness gating (ST4) comes for free by reusing
-    ``discover_snapshots`` (nodes/ + relationships/ non-empty, integer
+    ``discover_snapshots`` (every label/type dir lists data, integer
     timestamp dirs). A driver-side ``SimpleDataSourceStreamReader`` is
     the right tier: discovery is control-plane metadata (a directory
     listing, a few thousand entries), while the loads it triggers are

@@ -8,8 +8,8 @@ Semantics carried over (SURVEY §2.9 ST1-ST9):
   ST3  late data: old-timestamp snapshots still LOAD, but the alias only
        switches if the snapshot is the customer's latest (latest-wins by
        event time, not arrival; reference orchestrator.py:322-324, 364-384)
-  ST4  completeness gate (nodes/ and relationships/ non-empty) — in
-       ``discover_snapshots``
+  ST4  completeness gate (every label/type dir under nodes/ and
+       relationships/ lists data) — in ``discover_snapshots``
   ST5  concurrency cap: ``max_concurrent_loads`` per scan
   ST6  retry with exponential backoff ``retry_backoff_base ** retries``,
        max ``max_retries``
@@ -46,13 +46,27 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any, Callable, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..config import DEFAULTS, validate_config
 from ..plans.catalog import DeploymentCatalog, db_name
 from ..sources.snapshot import SnapshotRef, discover_snapshots, read_snapshot
 
 _TASK_LOG_LEN = 50  # attempts kept under "tasks" in status.json
+
+
+def load_snapshot(
+    spark: SparkSession, ref: SnapshotRef, catalog: DeploymentCatalog
+) -> tuple[DataFrame, DataFrame]:
+    """Read a snapshot and register it as a deployment (no alias move);
+    returns its (nodes, edges). The orchestrator's default ``load_fn``
+    and the ``load``/``demo`` CLI commands; ``flight_load_fn`` instead
+    puts the sink between the read and the register."""
+    nodes, edges = read_snapshot(spark, ref)
+    catalog.register_deployment(
+        ref.customer_id, ref.timestamp, nodes, edges, source_path=str(ref.path)
+    )
+    return nodes, edges
 
 
 @dataclass
@@ -101,7 +115,7 @@ class Orchestrator:
         catalog: DeploymentCatalog | None = None,
         config: dict[str, Any] | None = None,
         status_path: str | Path | None = None,
-        load_fn: Callable[[SparkSession, SnapshotRef, DeploymentCatalog], None] | None = None,
+        load_fn: Callable[[SparkSession, SnapshotRef, DeploymentCatalog], object] | None = None,
         clock: Callable[[], float] = time.time,
         heap_fraction_fn: Callable[[], float] | None = None,
     ):
@@ -113,7 +127,7 @@ class Orchestrator:
         validate_config({"orchestrator": cfg})
         self.cfg = cfg
         self.status_path = Path(status_path) if status_path else None
-        self.load_fn = load_fn or self._default_load
+        self.load_fn = load_fn or load_snapshot
         self.clock = clock
         self.heap_fraction_fn = heap_fraction_fn or self._jvm_heap_fraction
         self.stats = OrchestratorStats()
@@ -186,15 +200,6 @@ class Orchestrator:
         return found
 
     # -- load pipeline (§3.1) -----------------------------------------
-
-    @staticmethod
-    def _default_load(
-        spark: SparkSession, ref: SnapshotRef, catalog: DeploymentCatalog
-    ) -> None:
-        nodes, edges = read_snapshot(spark, ref)
-        catalog.register_deployment(
-            ref.customer_id, ref.timestamp, nodes, edges, source_path=str(ref.path)
-        )
 
     def _is_latest_deployment(self, ref: SnapshotRef) -> bool:
         """Latest-wins by event time: compare against every deployment of

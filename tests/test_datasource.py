@@ -1,168 +1,24 @@
-"""Spark 4 Python Data Source (`graphsnapshot`) — positional contract
-applied at the source, fragment-level partition planning, and filter
-pushdown into the pyarrow scan."""
+"""The ``snapshotarrivals`` streaming source: snapshot discovery as a
+Structured Streaming stream whose exactly-once dedup lives in the
+checkpoint's offset log."""
 
 from __future__ import annotations
 
 from pathlib import Path
 
-import pytest
-from pyspark.sql import functions as F
-
 import neo4j_blue_green_arrow_etl_spark.fixtures as FX
-from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
-    read_edges,
-    read_nodes,
-)
 from neo4j_blue_green_arrow_etl_spark.sources.snapshot_datasource import (
-    FragmentPartition,
-    SnapshotReader,
-    register_snapshot_source,
+    SnapshotArrivalStreamReader,
+    register_arrival_source,
 )
-from pyspark.sql.datasource import EqualTo, GreaterThan, StringContains
 
 from conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def snapshot_tree(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("dsrc") / "data")
-    FX.materialize_snapshot(spark, SF_SMOKE, base, "customer1", 1767741427)
-    root = Path(base) / "customer1" / "1767741427"
-    register_snapshot_source(spark)
-    return root
-
-
-def _nodes_dir(root: Path) -> str:
-    return str(root / "nodes" / "Entity")
-
-
-def _edges_dir(root: Path) -> str:
-    return str(root / "relationships" / "HAS_PRINCIPAL_ADDRESS")
-
-
-def test_nodes_match_builtin_reader(spark, snapshot_tree):
-    """The custom source must produce exactly the rows/schema of the
-    engine's read_nodes path (positional rename + label split)."""
-    via_ds = (
-        spark.read.format("graphsnapshot")
-        .option("path", _nodes_dir(snapshot_tree))
-        .option("kind", "nodes")
-        .load()
-    )
-    via_builtin = read_nodes(spark, _nodes_dir(snapshot_tree))
-    assert via_ds.columns == via_builtin.columns
-    a = {tuple(r) for r in via_ds.withColumn("labels", F.array_join("labels", ",")).collect()}
-    b = {tuple(r) for r in via_builtin.withColumn("labels", F.array_join("labels", ",")).collect()}
-    assert a == b
-
-
-def test_edges_match_builtin_reader(spark, snapshot_tree):
-    via_ds = (
-        spark.read.format("graphsnapshot")
-        .option("path", _edges_dir(snapshot_tree))
-        .option("kind", "edges")
-        .load()
-    )
-    via_builtin = read_edges(spark, _edges_dir(snapshot_tree))
-    assert via_ds.columns == via_builtin.columns
-    assert via_ds.count() == via_builtin.count()
-    assert {tuple(r) for r in via_ds.collect()} == {
-        tuple(r) for r in via_builtin.collect()
-    }
-
-
-def test_one_partition_per_fragment(spark, snapshot_tree):
-    """Reference S2 parity: the work list is one unit per parquet
-    fragment (neo4j_pq.py:279-285), expressed as InputPartitions."""
-    n_frags = len(list(Path(_nodes_dir(snapshot_tree)).rglob("*.parquet")))
-    reader = SnapshotReader(
-        {"path": _nodes_dir(snapshot_tree), "kind": "nodes"}, None
-    )
-    parts = reader.partitions()
-    assert len(parts) == n_frags
-    assert all(isinstance(p, FragmentPartition) for p in parts)
-
-
-def test_filter_pushdown_absorbs_comparisons_and_filters_rows(spark, snapshot_tree):
-    """Comparison predicates on scalar columns are absorbed into the
-    pyarrow scan; results match the unpushed plan."""
-    reader = SnapshotReader(
-        {"path": _nodes_dir(snapshot_tree), "kind": "nodes"}, None
-    )
-    fid = EqualTo(("nodeId",), "E7")
-    flab = StringContains(("labels",), "Entity")  # derived col: must bounce
-    unsupported = list(reader.pushFilters([fid, flab]))
-    assert unsupported == [flab]
-    assert reader._pushed == [fid]
-
-    df = (
-        spark.read.format("graphsnapshot")
-        .option("path", _nodes_dir(snapshot_tree))
-        .option("kind", "nodes")
-        .load()
-    )
-    got = df.filter(F.col("nodeId") == "E7").collect()
-    want = (
-        read_nodes(spark, _nodes_dir(snapshot_tree))
-        .filter(F.col("nodeId") == "E7")
-        .collect()
-    )
-    assert len(got) == len(want) == 1
-    assert got[0].nodeId == want[0].nodeId
-
-
-def test_labels_filter_not_absorbed_but_correct(spark, snapshot_tree):
-    """Filters on the derived labels column stay Spark-side and still
-    evaluate correctly end-to-end."""
-    df = (
-        spark.read.format("graphsnapshot")
-        .option("path", _nodes_dir(snapshot_tree))
-        .option("kind", "nodes")
-        .load()
-    )
-    got = df.filter(F.array_contains("labels", "Company")).count()
-    want = (
-        read_nodes(spark, _nodes_dir(snapshot_tree))
-        .filter(F.array_contains("labels", "Company"))
-        .count()
-    )
-    assert got == want > 0
-
-
-def test_batch_size_option_controls_arrow_batches(spark, snapshot_tree):
-    """table_size (reference arrow_table_size parity) bounds the rows
-    per emitted RecordBatch."""
-    reader = SnapshotReader(
-        {"path": _nodes_dir(snapshot_tree), "kind": "nodes", "table_size": 7},
-        None,
-    )
-    [part] = reader.partitions()[:1]
-    batches = list(reader.read(part))
-    assert batches and all(b.num_rows <= 7 for b in batches)
-    assert batches[0].schema.names[:2] == ["nodeId", "labels"]
-
-
-def test_bad_options_raise(spark, snapshot_tree):
-    with pytest.raises(ValueError):
-        SnapshotReader({"kind": "nodes"}, None)
-    with pytest.raises(ValueError):
-        SnapshotReader({"path": "/x", "kind": "weird"}, None)
-
-
-# ---------------------------------------------------------------------------
-# Streaming arrival source
-# ---------------------------------------------------------------------------
 
 
 def _run_available(spark, base, checkpoint, out_dir):
     """One availableNow run writing discoveries to a parquet sink (the
     memory sink cannot recover from a checkpoint); returns the
     CUMULATIVE discovered set across all runs sharing the sink."""
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot_datasource import (
-        register_arrival_source,
-    )
-
     register_arrival_source(spark)
     q = (
         spark.readStream.format("snapshotarrivals")
@@ -210,10 +66,6 @@ def test_arrival_stream_discovers_then_stays_exactly_once(spark, tmp_path):
 def test_arrival_reader_offsets_are_replayable(tmp_path, spark):
     """readBetweenOffsets re-derives exactly the delta between two
     offsets (crash-recovery contract of the offset log)."""
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot_datasource import (
-        SnapshotArrivalStreamReader,
-    )
-
     base = str(tmp_path / "data")
     FX.materialize_snapshot(spark, SF_SMOKE, base, "acme", 100)
     r = SnapshotArrivalStreamReader({"path": base})
@@ -230,348 +82,3 @@ def test_arrival_reader_offsets_are_replayable(tmp_path, spark):
         ("acme", 100),
         ("acme", 300),
     }
-
-
-# ---------------------------------------------------------------------------
-# Writer: two-phase staged publish
-# ---------------------------------------------------------------------------
-
-
-def test_writer_roundtrip_nodes(spark, snapshot_tree, tmp_path):
-    """Write nodes through the graphsnapshot writer, read them back
-    through the graphsnapshot reader: identical rows, and no staged
-    residue in the directory."""
-    src = spark.read.format("graphsnapshot").option(
-        "kind", "nodes"
-    ).load(_nodes_dir(snapshot_tree))
-    out = str(tmp_path / "written_nodes")
-    (
-        src.write.format("graphsnapshot")
-        .mode("append")
-        .option("kind", "nodes")
-        .save(out)
-    )
-    files = sorted(p.name for p in Path(out).iterdir())
-    assert files and all(f.endswith(".parquet") for f in files)
-    back = spark.read.format("graphsnapshot").option("kind", "nodes").load(out)
-    a = src.select("nodeId", F.array_join("labels", ",").alias("l")).collect()
-    b = back.select("nodeId", F.array_join("labels", ",").alias("l")).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_writer_roundtrip_edges_and_overwrite(spark, snapshot_tree, tmp_path):
-    """Edges roundtrip; overwrite mode replaces previously committed
-    fragments instead of appending."""
-    src = spark.read.format("graphsnapshot").option(
-        "kind", "edges"
-    ).load(_edges_dir(snapshot_tree))
-    out = str(tmp_path / "written_edges")
-    for _ in range(2):  # second write is overwrite -> no duplication
-        (
-            src.write.format("graphsnapshot")
-            .mode("overwrite")
-            .option("kind", "edges")
-            .save(out)
-        )
-    back = spark.read.format("graphsnapshot").option("kind", "edges").load(out)
-    assert back.count() == src.count()
-    cols = ["sourceNodeId", "targetNodeId", "relationshipType"]
-    assert sorted(map(tuple, src.select(cols).collect())) == sorted(
-        map(tuple, back.select(cols).collect())
-    )
-
-
-def test_writer_failure_leaves_no_visible_fragments(spark, tmp_path):
-    """A task failure mid-write aborts the job: no *.parquet appears
-    and staged files are cleaned up — the atomic-publish half of the
-    two-phase contract."""
-    register_snapshot_source(spark)
-    out = str(tmp_path / "failed_write")
-    df = spark.range(0, 100, 1, 4).select(
-        F.col("id").alias("nodeId"),
-        F.array(F.lit("A")).alias("labels"),
-        F.when(F.col("id") == 77, F.lit(None))
-        .otherwise(F.col("id"))
-        .cast("long")
-        .alias("prop"),
-    ).withColumn(
-        "prop",
-        F.assert_true(F.col("prop").isNotNull(), F.lit("boom")).cast("long"),
-    )
-    with pytest.raises(Exception, match="boom|ASSERT"):
-        (
-            df.write.format("graphsnapshot")
-            .mode("append")
-            .option("kind", "nodes")
-            .save(out)
-        )
-    leftover = list(Path(out).glob("*")) if Path(out).exists() else []
-    assert not [p for p in leftover if p.suffix == ".parquet"], leftover
-    assert not [p for p in leftover if p.suffix == ".staged"], leftover
-
-
-def test_writer_completeness_gate_integration(spark, tmp_path):
-    """discover_snapshots must not see a snapshot until BOTH tables
-    are committed — staged fragments don't count as content."""
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
-        discover_snapshots,
-    )
-
-    register_snapshot_source(spark)
-    base = tmp_path / "tree"
-    ts_dir = base / "acme" / "20260101000000"
-    nodes = spark.range(5).select(
-        F.col("id").alias("nodeId"), F.array(F.lit("N")).alias("labels")
-    )
-    edges = spark.range(4).select(
-        F.col("id").alias("sourceNodeId"),
-        (F.col("id") + 1).alias("targetNodeId"),
-        F.lit("REL").alias("relationshipType"),
-    )
-    (
-        nodes.write.format("graphsnapshot")
-        .mode("append")
-        .option("kind", "nodes")
-        .save(str(ts_dir / "nodes" / "Entity"))
-    )
-    assert discover_snapshots(str(base)) == []  # relationships missing
-    # the staging window itself: a relationships dir holding ONLY
-    # *.staged fragments (tasks done, driver commit not yet run) must
-    # stay invisible too — the gate counts committed data files only
-    import pyarrow as pa
-
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot_datasource import (
-        SnapshotWriter,
-    )
-
-    edges_dir = str(ts_dir / "relationships" / "REL")
-    w = SnapshotWriter(
-        {"path": edges_dir, "kind": "edges"}, edges.schema, False
-    )
-    batch = pa.RecordBatch.from_pydict(
-        {
-            "sourceNodeId": [0],
-            "targetNodeId": [1],
-            "relationshipType": ["REL"],
-        }
-    )
-    staged_msg = w.write(iter([batch]))
-    assert Path(edges_dir).exists() and list(
-        Path(edges_dir).glob(".staging/*.staged")
-    )
-    assert discover_snapshots(str(base)) == []  # staged-only: invisible
-    w.abort([staged_msg])
-    (
-        edges.write.format("graphsnapshot")
-        .mode("append")
-        .option("kind", "edges")
-        .save(edges_dir)
-    )
-    found = discover_snapshots(str(base))
-    assert len(found) == 1 and found[0].customer_id == "acme"
-
-
-def test_stream_writer_exactly_once_epochs(spark, tmp_path):
-    """writeStream.format(\"graphsnapshot\"): draining a multi-batch
-    stream publishes every row exactly once as epoch-tagged fragments
-    (part-b<batchId>-*), readable by the batch reader; a replayed
-    commit of the same epoch REPLACES its fragments instead of
-    duplicating them."""
-    register_snapshot_source(spark)
-    src_dir = tmp_path / "stream_src"
-    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(40)
-    for b in range(2):  # two files -> maxFilesPerTrigger=1 -> two epochs
-        events.filter(F.col("event_id") % 2 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src_dir))
-    out = tmp_path / "stream_out"
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir))
-        .select(
-            F.col("event_id").alias("nodeId"),
-            F.array(F.col("event_type")).alias("labels"),
-        )
-    )
-    q = (
-        stream.writeStream.format("graphsnapshot")
-        .option("kind", "nodes")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    frags = sorted(p.name for p in out.iterdir())
-    assert all(f.startswith("part-b") and f.endswith(".parquet") for f in frags)
-    assert len({f.split("-")[1] for f in frags}) >= 2  # >= two epochs
-    back = spark.read.format("graphsnapshot").option("kind", "nodes").load(
-        str(out)
-    )
-    want = sorted(r.event_id for r in events.select("event_id").collect())
-    got = sorted(r.nodeId for r in back.collect())
-    assert got == want
-    # epoch replay: re-commit batch 0's fragments via the writer API —
-    # file count for that epoch must not grow
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot_datasource import (
-        FragmentCommit,
-        SnapshotStreamWriter,
-    )
-
-    before = {p.name for p in out.glob("part-b0-*.parquet")}
-    w = SnapshotStreamWriter(
-        {"path": str(out), "kind": "nodes"}, stream.schema, False
-    )
-    import pyarrow as pa
-
-    batch = pa.RecordBatch.from_pydict(
-        {"nodeId": [999], "labels": [["replay"]]}
-    )
-    msg = w.write(iter([batch]))
-    assert isinstance(msg, FragmentCommit)
-    w.commit([msg], 0)
-    after = list(out.glob("part-b0-*.parquet"))
-    assert len(after) == 1  # replaced, not appended
-    replay = spark.read.format("graphsnapshot").option("kind", "nodes").load(
-        str(out)
-    )
-    assert replay.filter(F.col("nodeId") == 999).count() == 1
-    assert not set(p.name for p in after) & before
-
-
-def test_batch_overwrite_spares_streaming_epoch_fragments(spark, snapshot_tree, tmp_path):
-    """ADVICE r3: batch overwrite used to glob-delete *.parquet,
-    including part-b<batchId>-* epoch fragments a streaming writer had
-    published into the same directory. Overwrite now (a) publishes new
-    fragments before deleting old batch ones and (b) never touches
-    epoch-tagged fragments."""
-    src = spark.read.format("graphsnapshot").option("kind", "edges").load(
-        _edges_dir(snapshot_tree)
-    )
-    out = tmp_path / "mixed_dir"
-    src.write.format("graphsnapshot").mode("overwrite").option(
-        "kind", "edges"
-    ).save(str(out))
-    # simulate a streaming epoch fragment living alongside batch output
-    epoch = out / "part-b7-deadbeef.parquet"
-    batch_frag = next(out.glob("part-*.parquet"))
-    epoch.write_bytes(batch_frag.read_bytes())
-    n_src = src.count()
-    src.write.format("graphsnapshot").mode("overwrite").option(
-        "kind", "edges"
-    ).save(str(out))
-    assert epoch.exists(), "batch overwrite deleted a streaming epoch fragment"
-    back = spark.read.format("graphsnapshot").option("kind", "edges").load(str(out))
-    # epoch fragment still contributes rows; batch rows were replaced once
-    assert back.count() == n_src + n_src
-
-
-def test_commit_killed_between_renames_keeps_snapshot_hidden(
-    spark, tmp_path, monkeypatch
-):
-    """Fault injection on the driver-side publish loop (VERDICT r5 task
-    7): a crash BETWEEN staged->final renames must leave the snapshot
-    invisible to discovery (the ST4 completeness gate), every published
-    fragment self-contained/readable, and an overwrite-retry must
-    converge to exactly-once rows with no staged residue."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
-        discover_snapshots,
-    )
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot_datasource import (
-        SnapshotWriter,
-    )
-
-    register_snapshot_source(spark)
-    base = tmp_path / "tree"
-    ts_dir = base / "acme" / "20260202000000"
-    nodes_dir = str(ts_dir / "nodes" / "Entity")
-    schema = (
-        spark.range(1)
-        .select(
-            F.col("id").alias("nodeId"),
-            F.array(F.lit("N")).alias("labels"),
-        )
-        .schema
-    )
-    w = SnapshotWriter({"path": nodes_dir, "kind": "nodes"}, schema, False)
-    msgs = [
-        w.write(
-            iter(
-                [
-                    pa.RecordBatch.from_pydict(
-                        {"nodeId": [i], "labels": [["N"]]}
-                    )
-                ]
-            )
-        )
-        for i in range(3)
-    ]
-    # kill the driver after the FIRST rename of the commit loop: the
-    # remaining renames never run (a raise models SIGKILL here — the
-    # crashed process does no cleanup either way)
-    real_rename = Path.rename
-    renamed = []
-
-    def killing_rename(self, target):
-        if len(renamed) >= 1 and str(self).endswith(".staged"):
-            raise OSError("simulated driver kill mid-commit")
-        out = real_rename(self, target)
-        renamed.append(str(target))
-        return out
-
-    monkeypatch.setattr(Path, "rename", killing_rename)
-    with pytest.raises(OSError, match="mid-commit"):
-        w.commit(msgs)
-    monkeypatch.setattr(Path, "rename", real_rename)
-
-    # half-published state: exactly one fragment visible, two staged
-    published = sorted(Path(nodes_dir).glob("*.parquet"))
-    residue = sorted(Path(nodes_dir).glob(".staging/*.staged"))
-    assert len(published) == 1 and len(residue) == 2
-    # ST4: the snapshot is HIDDEN — relationships never published, so
-    # the crash cannot promote a half-written snapshot
-    assert discover_snapshots(str(base)) == []
-    # the fragment that DID publish is self-contained and readable —
-    # a concurrent reader of the table dir sees a valid subset, never
-    # a torn file
-    assert pq.read_table(published[0]).num_rows == 1
-
-    # recovery: the retried job republishes with overwrite — it must
-    # remove the crashed commit's partial fragment (exactly-once rows)
-    # and sweep the orphaned staged residue
-    nodes = spark.range(5).select(
-        F.col("id").alias("nodeId"), F.array(F.lit("N")).alias("labels")
-    )
-    (
-        nodes.write.format("graphsnapshot")
-        .mode("overwrite")
-        .option("kind", "nodes")
-        .save(nodes_dir)
-    )
-    assert not list(Path(nodes_dir).glob(".staging/*.staged"))
-    back = (
-        spark.read.format("graphsnapshot")
-        .option("kind", "nodes")
-        .load(nodes_dir)
-    )
-    assert back.count() == 5  # no dupes from the crashed commit
-    # snapshot still hidden until relationships commit; publishing them
-    # makes it discoverable — the gate flips only on FULL publication
-    assert discover_snapshots(str(base)) == []
-    edges = spark.range(2).select(
-        F.col("id").alias("sourceNodeId"),
-        (F.col("id") + 1).alias("targetNodeId"),
-        F.lit("REL").alias("relationshipType"),
-    )
-    (
-        edges.write.format("graphsnapshot")
-        .mode("append")
-        .option("kind", "edges")
-        .save(str(ts_dir / "relationships" / "REL"))
-    )
-    found = discover_snapshots(str(base))
-    assert len(found) == 1 and found[0].customer_id == "acme"

@@ -93,7 +93,28 @@ def test_client_state_machine_orders_phases(spark, server):
         sink.write_nodes(nodes)  # before create_database
     sink.create_database()
     with pytest.raises(InvalidArgumentError):
+        sink.create_database()  # a second create
+    with pytest.raises(InvalidArgumentError):
         sink.write_edges(nodes)  # before nodes_done
+    sink.write_nodes(nodes)
+    sink.nodes_done()
+    with pytest.raises(InvalidArgumentError):
+        sink.write_nodes(nodes)  # the node phase is closed
+    assert server.graphs["acme-100"]["nodes"] == 5
+
+
+def test_write_calls_in_one_phase_add_up(spark, server):
+    """The protocol allows several write calls per phase, as the
+    reference streams batch after batch: the server adds them up, and
+    the barrier's client-side count does too, so it passes."""
+    nodes = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
+    n = nodes.count()
+    sink = _sink(server)
+    sink.create_database()
+    assert sink.write_nodes(nodes).rows == n
+    assert sink.write_nodes(nodes).rows == n
+    assert sink.nodes_done()["node_count"] == 2 * n
+    assert server.graphs["acme-100"]["nodes"] == 2 * n
 
 
 def test_abort_mid_load_discards_graph(spark, server):

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import json
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -27,6 +28,29 @@ def make_orch(spark, base, tmp_path, **cfg):
         config={"orchestrator": cfg} if cfg else None,
         status_path=tmp_path / "status.json",
     )
+
+
+def test_mid_write_snapshot_waits_until_published(spark, data_base, tmp_path):
+    """A snapshot whose node files still sit under ``_temporary/``, where
+    an in-flight Spark write keeps them, is not queued, so it spends no
+    retries on a read that would fail. Once the files are renamed into
+    place, the next cycle loads it and moves the alias."""
+    entity = Path(data_base) / "customer1" / "1767741427" / "nodes" / "Entity"
+    staged = entity / "_temporary" / "0"
+    staged.mkdir(parents=True)
+    parts = sorted(entity.glob("part-*"))
+    for part in parts:
+        part.rename(staged / part.name)
+
+    orch = make_orch(spark, data_base, tmp_path)
+    orch.run_cycle()
+    assert orch.stats.discovered == 0 and not orch._queue and not orch.task_log
+
+    for part in parts:
+        (staged / part.name).rename(part)
+    orch.run_cycle()
+    assert orch.stats.completed == 1 and orch.stats.failed == 0
+    assert orch.catalog.alias_target("customer1") == "customer1-1767741427"
 
 
 def test_end_to_end_discover_load_switch(spark, sf_dir, data_base, tmp_path):
@@ -78,7 +102,7 @@ def test_retry_with_backoff_then_success(spark, data_base, tmp_path):
         attempts.append(ref.database)
         if len(attempts) < 3:
             raise RuntimeError("transient sink failure")
-        Orchestrator._default_load(spark_, ref, catalog)
+        orchestrator.load_snapshot(spark_, ref, catalog)
 
     catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
     orch = Orchestrator(
@@ -348,7 +372,7 @@ def test_drain_waits_for_backoff_tasks_instead_of_dropping(
         attempts.append(fake_now[0])
         if len(attempts) < 2:
             raise RuntimeError("transient")
-        Orchestrator._default_load(spark_, ref, catalog)
+        orchestrator.load_snapshot(spark_, ref, catalog)
 
     orch = Orchestrator(
         spark,

@@ -1,87 +1,14 @@
-"""Graph-sink two-phase protocol: the reference's client lifecycle
-(CREATE_DATABASE -> nodes -> NODE_LOAD_DONE -> edges ->
-RELATIONSHIP_LOAD_DONE, neo4j_arrow_client.py:30-35) with REAL state
-assertions — the reference's `==` no-op check (neo4j_arrow_client.py:227,
-SURVEY §4.3) is exactly the bug these tests prevent."""
+"""Graph-sink client failure surfacing: the reference's client
+lifecycle (CREATE_DATABASE -> nodes -> NODE_LOAD_DONE -> edges ->
+RELATIONSHIP_LOAD_DONE, neo4j_arrow_client.py:30-35) against no server.
+The state machine and the wire path are tested against a real server in
+tests/test_flight_sink.py."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
-from pyspark.sql import functions as F
 
-from neo4j_blue_green_arrow_etl_spark.errors import InvalidArgumentError
-from neo4j_blue_green_arrow_etl_spark.fixtures import edges, nodes_entity
-from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import (
-    FlightGraphSink,
-    ParquetGraphSink,
-    SinkState,
-)
-
-from conftest import SF_SMOKE
-
-
-def test_full_lifecycle_writes_versioned_tree(spark, tmp_path):
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.create_database()
-    n = sink.write_nodes(nodes_entity(spark, SF_SMOKE))
-    sink.nodes_done()
-    e = sink.write_edges(edges(spark, SF_SMOKE))
-    sink.edges_done()
-    assert sink.state is SinkState.DONE
-    assert n.rows > 0 and e.rows > 0
-    meta = json.loads((tmp_path / "cust-1000" / "_LOAD_META.json").read_text())
-    assert meta["counts"] == {"nodes": n.rows, "edges": e.rows}
-    # the written tree is itself a readable graph
-    back = spark.read.parquet(str(tmp_path / "cust-1000" / "nodes"))
-    assert back.count() == n.rows
-
-
-def test_edges_before_nodes_rejected(spark, tmp_path):
-    """The ordered barrier is enforced, not advisory."""
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.create_database()
-    with pytest.raises(InvalidArgumentError, match="expected"):
-        sink.write_edges(edges(spark, SF_SMOKE))
-    # and nodes cannot flow after the node phase is closed
-    sink.write_nodes(nodes_entity(spark, SF_SMOKE))
-    sink.nodes_done()
-    with pytest.raises(InvalidArgumentError):
-        sink.write_nodes(nodes_entity(spark, SF_SMOKE))
-
-
-def test_double_create_rejected(tmp_path):
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.create_database()
-    with pytest.raises(InvalidArgumentError):
-        sink.create_database()
-
-
-def test_abort_removes_completeness_marker(spark, tmp_path):
-    """Aborted loads must be invisible to downstream discovery (the
-    marker is the completeness gate), while data stays for post-mortem."""
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.create_database()
-    sink.write_nodes(nodes_entity(spark, SF_SMOKE))
-    sink.nodes_done()
-    sink.write_edges(edges(spark, SF_SMOKE))
-    sink.edges_done()
-    assert (tmp_path / "cust-1000" / "_LOAD_META.json").exists()
-    sink2 = ParquetGraphSink("cust-1000", tmp_path)
-    sink2.state = SinkState.DONE  # simulate re-attached session
-    sink2.abort()
-    assert not (tmp_path / "cust-1000" / "_LOAD_META.json").exists()
-    assert (tmp_path / "cust-1000" / "nodes").exists()  # post-mortem data kept
-
-
-def test_abort_idempotent_from_ready(tmp_path):
-    """Reference parity: aborting an unstarted import is silently OK
-    (test_neo4j_arrow_client.py:23-43)."""
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.abort()
-    sink.abort()
-    assert sink.state is SinkState.ABORTED
+from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import FlightGraphSink
 
 
 def test_flight_sink_unreachable_server_surfaces_error():
@@ -93,51 +20,3 @@ def test_flight_sink_unreachable_server_surfaces_error():
     sink = FlightGraphSink("cust-1000", host="127.0.0.1", port=1)
     with pytest.raises(flight.FlightError):
         sink.create_database()
-
-
-def test_compaction_reduces_files_preserves_data(spark, tmp_path):
-    """Small-files maintenance: 16-partition write compacts to 1 file
-    per side with identical content and the completeness marker intact."""
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.create_database()
-    sink.write_nodes(nodes_entity(spark, SF_SMOKE).repartition(16))
-    sink.nodes_done()
-    sink.write_edges(edges(spark, SF_SMOKE).repartition(16))
-    sink.edges_done()
-    before_nodes = spark.read.parquet(str(tmp_path / "cust-1000" / "nodes"))
-    n_rows = before_nodes.count()
-    assert len(before_nodes.inputFiles()) == 16
-
-    sink.compact(spark, target_files=1)
-    after = spark.read.parquet(str(tmp_path / "cust-1000" / "nodes"))
-    assert len(after.inputFiles()) == 1
-    assert after.count() == n_rows
-    assert (tmp_path / "cust-1000" / "_LOAD_META.json").exists()
-    # no leftover temp dirs from the swap
-    leftovers = [p.name for p in (tmp_path / "cust-1000").iterdir() if p.name.startswith("_nodes")]
-    assert leftovers == []
-
-
-def test_compaction_requires_done_state(spark, tmp_path):
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.create_database()
-    with pytest.raises(InvalidArgumentError):
-        sink.compact(spark)
-
-
-def test_multiple_write_calls_accumulate_not_clobber(spark, tmp_path):
-    """The two-phase protocol allows streaming several batches per
-    phase; a second write_nodes must APPEND (previously it overwrote,
-    silently dropping the first batch while counts kept adding)."""
-    sink = ParquetGraphSink("cust-1000", tmp_path)
-    sink.create_database()
-    first = nodes_entity(spark, SF_SMOKE)
-    n1 = first.count()
-    sink.write_nodes(first)
-    sink.write_nodes(first.withColumn("nodeId", F.concat(F.lit("B"), "nodeId")))
-    sink.nodes_done()
-    sink.write_edges(edges(spark, SF_SMOKE))
-    sink.edges_done()
-    stored = spark.read.parquet(str(tmp_path / "cust-1000" / "nodes"))
-    assert stored.count() == 2 * n1
-    assert sink.counts["nodes"] == 2 * n1

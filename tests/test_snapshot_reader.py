@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import contextlib
+import shutil
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -164,33 +165,6 @@ def test_json_nodes_missing_named_columns_rejected(spark, tmp_path):
         read_nodes(spark, str(p), fmt="json")
 
 
-def test_diff_nodes_classifies_changes(spark):
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import diff_nodes
-
-    old = spark.createDataFrame(
-        [("A", "x", 1.0), ("B", "y", 2.0), ("C", "z", 3.0)],
-        "nodeId string, prop string, w double",
-    )
-    new = spark.createDataFrame(
-        [("A", "x", 1.0), ("B", "y", 9.9), ("D", "q", 4.0)],
-        "nodeId string, prop string, w double",
-    )
-    got = {r.nodeId: r.change for r in diff_nodes(old, new).collect()}
-    assert got == {"B": "changed", "C": "removed", "D": "added"}  # A unchanged, omitted
-
-
-def test_diff_nodes_column_order_insensitive(spark):
-    """The digest canonicalizes property order: the same data with
-    reordered property columns must diff as unchanged."""
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import diff_nodes
-
-    old = spark.createDataFrame(
-        [("A", "x", 1.0)], "nodeId string, prop string, w double"
-    )
-    new = old.select("nodeId", "w", "prop")
-    assert diff_nodes(old, new).count() == 0
-
-
 def test_orc_snapshot_format_matches_parquet(spark, sf_dir, tmp_path):
     """ORC is column-order-preserving like parquet, so the positional
     contract applies directly; an ORC-delivered snapshot must normalize
@@ -221,20 +195,14 @@ def test_orc_snapshot_format_matches_parquet(spark, sf_dir, tmp_path):
 
 
 def test_orc_snapshot_is_discoverable(spark, sf_dir, tmp_path):
-    """ADVICE r3: DATA_SUFFIXES omitted .orc, so an ORC-only snapshot was
-    readable but invisible to discover_snapshots (the completeness gate
-    saw empty table dirs). DATA_SUFFIXES is now derived from FORMATS;
-    this pins discovery for every supported format."""
+    """An ORC-only snapshot is discoverable as well as readable: the
+    completeness gate lists table dirs with the reader's own listing,
+    which accepts every format the reader does."""
     from neo4j_blue_green_arrow_etl_spark import fixtures as FX
     from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
-        DATA_SUFFIXES,
-        FORMATS,
         SnapshotRef,
         read_snapshot,
     )
-
-    # the gate and the readers must agree on what counts as data
-    assert set(f".{f}" for f in FORMATS) <= set(DATA_SUFFIXES)
 
     base = str(tmp_path / "pq")
     FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
@@ -457,3 +425,59 @@ def test_small_snapshot_reads_as_one_partition_per_side(spark, tmp_path):
     assert nbytes == sum(Path(p).stat().st_size for p in parts)
     schema = _footer_schema(data[0], _inference_conf(spark))
     assert schema == spark.read.parquet(str(entity)).schema
+
+
+def _hide_under(sub: str):
+    """Move a table dir's data files into ``sub`` inside it, where an
+    in-flight writer keeps them until it publishes."""
+
+    def move(table_dir: Path) -> None:
+        (table_dir / sub).mkdir(parents=True)
+        for part in table_dir.glob("part-*"):
+            part.rename(table_dir / sub / part.name)
+
+    return move
+
+
+def _drop_parts(table_dir: Path) -> None:
+    for part in table_dir.glob("part-*"):
+        part.unlink()
+
+
+def _truncate_parts(table_dir: Path) -> None:
+    for part in table_dir.glob("part-*"):
+        part.write_bytes(b"")
+
+
+_UNPUBLISHED = {
+    "temporary_only": ("nodes/Entity", _hide_under("_temporary/0")),
+    "staging_only": ("nodes/Entity", _hide_under(".staging")),
+    "success_marker_only": ("nodes/Entity", _drop_parts),
+    "zero_byte_part": ("nodes/Entity", _truncate_parts),
+    "empty_label_dir_beside_full_one": ("nodes/Address", _drop_parts),
+    "relationships_missing": ("relationships", shutil.rmtree),
+}
+
+
+@pytest.mark.parametrize("case", ["published", *_UNPUBLISHED])
+def test_discovery_admits_only_what_the_reader_lists(spark, tmp_path, case):
+    """Discovery and ``read_snapshot`` agree on which files exist: a
+    snapshot is discovered only when every label/type dir lists a
+    non-empty data file, so a tree still being written (files under
+    ``_temporary/`` or ``.staging/``, a bare ``_SUCCESS``, a zero-byte
+    part, an empty label dir, no relationships yet) is never promoted
+    to a load the reader would fail."""
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import _list_table
+
+    root = tmp_path / "acme" / "100"
+    _write_small_snapshot(root)
+    if case != "published":
+        where, unpublish = _UNPUBLISHED[case]
+        unpublish(root / where)
+        assert discover_snapshots(tmp_path) == []
+        return
+    assert discover_snapshots(tmp_path) == [SnapshotRef("acme", 100, str(root))]
+    for table_dir in root.glob("*/*"):
+        assert _list_table(table_dir)[1], table_dir
+    nodes, edges = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
+    assert nodes.count() == 3_000 and edges.count() == 7_000
