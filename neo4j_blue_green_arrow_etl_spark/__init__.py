@@ -2,21 +2,23 @@
 capabilities of the reference ETL system (alexwoolford/neo4j-blue-green-arrow-etl).
 
 Brand-new Spark-first design: DataFrame/SQL logical plans optimized by
-Catalyst, Structured-Streaming-shaped orchestration, Arrow-batched Python
-only where built-ins can't express the semantics.
+Catalyst, a driver-side micro-batch orchestrator over batch Spark jobs,
+Arrow-batched Python only where built-ins can't express the semantics.
 
 Layout:
   session     SparkSession factory tuned for local[N] and cluster scale
   config      YAML config loader with ${ENV}/${ENV:default} interpolation
   fixtures    deterministic derived tables (graph + control-plane) shared
               by the Spark queries and the DuckDB oracles
-  sources/    snapshot reader (positional property-graph contract),
-              snapshot discovery, snapshot-arrival stream source
+  sources/    snapshot reader (positional property-graph contract) and
+              snapshot discovery
   operators/  relational query surface, dedup, similarity, text analysis,
               multimodal plumbing
   functions/  scalar helpers mirroring the reference's function surface
   plans/      deployment catalog + blue/green alias manager
-  streaming/  continuous orchestrator (micro-batch loop + streaming file source)
+  streaming/  the blue/green orchestrator loop, plus the streaming ingest
+              pipelines behind registry queries q_st6-q_st9 and the
+              retract-ingest command
   sinks/      two-phase graph sink interface and its Arrow Flight (Neo4j
               GDS) adapter, plus an in-process Flight server for tests
 """

@@ -68,20 +68,18 @@ def cmd_orchestrate(args) -> int:
         catalog=cat,
         status_path=Path(args.base) / "status.json",
     )
-    if getattr(args, "streaming", False):
-        # Structured-Streaming mode: discovery dedup lives in the
-        # engine's offset log under --checkpoint (survives restarts)
-        ckpt = args.checkpoint or str(Path(args.base) / "_checkpoint")
-        q = orch.run_streaming(ckpt, continuous=not args.cycles)
-        q.awaitTermination()  # availableNow drains and stops on its own
-        q.stop()
-    elif args.cycles:
-        for _ in range(args.cycles):
-            orch.run_cycle()
-    else:
-        orch.run()  # until interrupted (30 s scan interval, ST1)
+    drained = True
+    try:
+        if args.cycles:
+            for _ in range(args.cycles):
+                orch.run_cycle()
+        else:
+            orch.run()  # until interrupted (30 s scan interval, ST1)
+    except KeyboardInterrupt:
+        # Ctrl-C: load what is queued within shutdown_timeout (ST8)
+        drained = orch.stop()
     print(json.dumps(orch.stats.as_dict(), indent=2))
-    return 0
+    return 0 if drained else 1
 
 
 def cmd_aliases(args) -> int:
@@ -330,18 +328,8 @@ def main(argv: list[str] | None = None) -> int:
     sp.set_defaults(fn=cmd_load)
 
     sp = sub.add_parser("orchestrate", help="run the discovery/load loop")
-    sp.add_argument("--cycles", type=int, default=0, help="0 = run forever")
     sp.add_argument(
-        "--streaming",
-        action="store_true",
-        help="drive via Structured Streaming (snapshotarrivals source; "
-        "--cycles>0 = availableNow drain-and-stop, else a trigger every "
-        "scan_interval seconds)",
-    )
-    sp.add_argument(
-        "--checkpoint",
-        default=None,
-        help="offset-log dir for --streaming (default {base}/_checkpoint)",
+        "--cycles", type=int, default=0, help="0 = run until Ctrl-C, which drains the queue"
     )
     sp.set_defaults(fn=cmd_orchestrate)
 

@@ -97,8 +97,7 @@ def _cms_bucket_sql(d: int) -> str:
 
 def cms_bucket_array(key: str) -> "F.Column":
     """Array of the key column's CMS bucket per hash row — the shared
-    cell addressing used by the batch build (q_a17_cms), the streaming
-    maintainer (streaming.stream_queries.streaming_cms_cells), and the
+    cell addressing used by the batch build (q_a17_cms) and the
     driver-side point query (cms_estimate)."""
     return F.array(
         *[
@@ -151,10 +150,9 @@ def cms_bucket_array(key: str) -> "F.Column":
     "partial aggs mean each map task emits at most DEPTH x WIDTH "
     "partial cells. Scale: cell tables from any partitioning merge by "
     "addition (counts are associative), the 'aggregate once, "
-    "re-aggregate forever' property shared with the HLL path above — "
-    "and demonstrated LIVE by the streaming maintainer "
-    "(streaming_cms_cells), whose drained cells equal this batch build "
-    "on any chunking of the input.",
+    "re-aggregate forever' property shared with the HLL path above: "
+    "cells built over any chunking of the input sum to this batch "
+    "build.",
 )
 def q_a17_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import _t

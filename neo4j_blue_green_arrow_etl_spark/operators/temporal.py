@@ -254,8 +254,7 @@ RANGE_JOIN_WINDOW_MIN = 30  # click must precede the error by < this
     doc="Batch interval/range join (SURVEY §2.3 declared range join): "
     f"every (error, click) pair of the same user where the click falls "
     f"in the {RANGE_JOIN_WINDOW_MIN}-minute window before the error — "
-    "the batch twin of the stream-stream interval join "
-    "(streaming/stream_queries.clicks_with_recent_errors). Executes as "
+    "the batch form of a stream-stream interval join. Executes as "
     "ONE hash shuffle on the user_id equi-key with the band predicate "
     "evaluated as a post-join filter inside the same stage; output is "
     "bounded by per-user activity density, not |events|^2. Skewed "
@@ -579,8 +578,8 @@ def ewma_over_events(
     "-> aggregate) — no self-join, no Python, summation in frame order "
     "on both engines. Scale: bounded frame = bounded per-row state; one "
     "shuffle on user_id, same plan at any N. The untruncated recursive "
-    "EWMA is a stateful streaming op (streaming/stream_queries.py "
-    "territory); the truncated window form is the batch-scan shape.",
+    "EWMA needs per-user state carried across arrivals (a stateful "
+    "streaming op); the truncated window form is the batch-scan shape.",
 )
 def q_ts2_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ewma_over_events(_events(spark, sf_dir))

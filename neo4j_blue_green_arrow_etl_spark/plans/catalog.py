@@ -11,7 +11,7 @@ the same model over Spark:
   (the ``dep__`` prefix + ``__`` separator keep deployment names
   disjoint from alias names for every valid customer id);
 - an **alias** is the stable pair of views ``{customer}_nodes`` /
-  ``{customer}_edges`` — each ``CREATE OR REPLACE TEMP VIEW`` repoint
+  ``{customer}_edges`` — each view's ``CREATE OR REPLACE`` repoint
   is atomic per view (consumers' next query sees the new snapshot,
   in-flight plans keep their already-resolved one); the nodes/edges
   PAIR is repointed sequentially — see ``set_alias`` for the exact
@@ -116,12 +116,8 @@ class DeploymentCatalog:
             src = meta.get("source_path")
             if src and Path(src).exists():
                 ref = SnapshotRef(meta["customer_id"], int(meta["timestamp"]), src)
-                nodes, edges = read_snapshot(self.spark, ref)
-                nodes.createOrReplaceTempView(
-                    _view(meta["customer_id"], meta["timestamp"], "nodes")
-                )
-                edges.createOrReplaceTempView(
-                    _view(meta["customer_id"], meta["timestamp"], "edges")
+                self._create_views(
+                    ref.customer_id, ref.timestamp, *read_snapshot(self.spark, ref)
                 )
             elif not self.spark.catalog.tableExists(
                 _view(meta["customer_id"], meta["timestamp"], "nodes")
@@ -135,14 +131,22 @@ class DeploymentCatalog:
                 c: n for c, n in self._aliases.items() if n != name
             }
         for customer_id, name in self._aliases.items():
-            ts = self._deployments[name]["timestamp"]
-            for kind in ("nodes", "edges"):
-                self.spark.sql(
-                    f"CREATE OR REPLACE TEMP VIEW {_alias_view(customer_id, kind)} "
-                    f"AS SELECT * FROM {_view(customer_id, ts, kind)}"
-                )
+            self._point_alias(customer_id, self._deployments[name]["timestamp"])
         if dead:
             self._persist()
+
+    def _create_views(
+        self, customer_id: str, timestamp: int, nodes: DataFrame, edges: DataFrame
+    ) -> None:
+        nodes.createOrReplaceTempView(_view(customer_id, timestamp, "nodes"))
+        edges.createOrReplaceTempView(_view(customer_id, timestamp, "edges"))
+
+    def _point_alias(self, customer_id: str, timestamp: int) -> None:
+        for kind in ("nodes", "edges"):
+            self.spark.sql(
+                f"CREATE OR REPLACE TEMP VIEW {_alias_view(customer_id, kind)} "
+                f"AS SELECT * FROM {_view(customer_id, timestamp, kind)}"
+            )
 
     # -- persistence --------------------------------------------------
 
@@ -182,8 +186,7 @@ class DeploymentCatalog:
         in ``_restore_views``); without it the deployment is
         session-lifetime only."""
         name = db_name(customer_id, timestamp)
-        nodes.createOrReplaceTempView(_view(customer_id, timestamp, "nodes"))
-        edges.createOrReplaceTempView(_view(customer_id, timestamp, "edges"))
+        self._create_views(customer_id, timestamp, nodes, edges)
         self._deployments[name] = {
             "customer_id": customer_id,
             "timestamp": int(timestamp),
@@ -239,11 +242,7 @@ class DeploymentCatalog:
         name = db_name(customer_id, timestamp)
         if name not in self._deployments:
             raise NotFoundError(f"cannot alias missing database {name!r}")
-        for kind in ("nodes", "edges"):
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW {_alias_view(customer_id, kind)} "
-                f"AS SELECT * FROM {_view(customer_id, timestamp, kind)}"
-            )
+        self._point_alias(customer_id, timestamp)
         self._aliases[customer_id] = name
         self._persist()
         return name

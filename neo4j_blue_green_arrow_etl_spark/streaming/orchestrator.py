@@ -4,7 +4,8 @@ as a micro-batch driver loop around Spark jobs.
 
 Semantics carried over (SURVEY §2.9 ST1-ST9):
   ST1  scan every ``scan_interval`` seconds (micro-batch trigger)
-  ST2  dedup against processed state + catalog existence (idempotent)
+  ST2  dedup against this process's seen set + catalog existence
+       (idempotent; see "Restarts" below)
   ST3  late data: old-timestamp snapshots still LOAD, but the alias only
        switches if the snapshot is the customer's latest (latest-wins by
        event time, not arrival; reference orchestrator.py:322-324, 364-384)
@@ -14,11 +15,12 @@ Semantics carried over (SURVEY §2.9 ST1-ST9):
   ST6  retry with exponential backoff ``retry_backoff_base ** retries``,
        max ``max_retries``
   ST7  health-gated admission (session alive + db count below limit)
-  ST8  graceful drain with ``shutdown_timeout``
+  ST8  graceful drain with ``shutdown_timeout`` (``stop``; the
+       ``orchestrate`` CLI calls it on Ctrl-C)
   ST9  JSON status emission per cycle
 
-``write_status`` rewrites ``status.json`` atomically after every cycle,
-streaming batch and drain: the ``OrchestratorStats`` counters,
+``write_status`` rewrites ``status.json`` atomically after every cycle
+and drain: the ``OrchestratorStats`` counters,
 ``queue_size``, ``databases``, ``aliases`` (customer -> deployment) and
 ``tasks``, the last ``_TASK_LOG_LEN`` finished attempts, oldest first,
 each ``{db, state, attempt, duration_s, alias_switched, cleaned_up,
@@ -32,7 +34,15 @@ The loop is deliberately driver-side: snapshot arrival is control-plane
 write — is fully distributed Spark jobs. A Structured Streaming file
 source would force one schema across heterogeneous snapshot dirs, so
 discovery stays a directory scan feeding batch jobs (the Spark mapping
-SURVEY §2.1 S4 sanctions).
+SURVEY §2.1 S4 sanctions). ``run``/``run_cycle``/``stop`` over
+``discover_snapshots`` are the one way the pipeline runs.
+
+Restarts: the seen set lives in memory, so a new process skips a
+snapshot only because the catalog (rebuilt from its manifest) still
+lists it. Every deployed snapshot is therefore skipped, but one that
+retention dropped is loaded again if its directory is still on disk —
+the reference's existence check behaves the same way
+(orchestrator_prefect.py:339-345).
 """
 
 from __future__ import annotations
@@ -44,7 +54,7 @@ import time
 from collections import deque
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any, Callable, Iterable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -175,18 +185,13 @@ class Orchestrator:
     # -- discovery (ST1/ST2/ST4) --------------------------------------
 
     def scan_once(self) -> int:
-        """One discovery pass: enqueue the complete snapshots under
-        ``data_path`` (reference scan_for_snapshots,
-        orchestrator.py:226-273)."""
-        return self._enqueue(discover_snapshots(self.data_path))
-
-    def _enqueue(self, refs: Iterable[SnapshotRef]) -> int:
-        """Queue each snapshot not yet seen by this process and not
-        already deployed (reference prefect existence check
-        :339-345, which makes replays and restarts idempotent);
-        returns how many were queued."""
+        """One discovery pass (reference scan_for_snapshots,
+        orchestrator.py:226-273): queue each complete snapshot under
+        ``data_path`` not yet seen by this process and not already
+        deployed (reference prefect existence check :339-345, which
+        makes restarts idempotent); returns how many were queued."""
         found = 0
-        for ref in refs:
+        for ref in discover_snapshots(self.data_path):
             key = (ref.customer_id, ref.timestamp)
             if key in self._seen:
                 continue
@@ -317,49 +322,6 @@ class Orchestrator:
             self._queue.remove(task)
             self.process_task(task)
         return len(due)
-
-    def run_streaming(self, checkpoint: str | Path, continuous: bool = False):
-        """The same ST1-ST9 pipeline driven by REAL Structured
-        Streaming: the ``snapshotarrivals`` Python data source feeds
-        ``foreachBatch``, so discovery dedup (ST2) is the engine's
-        offset log in ``checkpoint`` — it survives restarts, unlike the
-        in-memory ``_seen`` set of the driver-loop mode (which still
-        guards within-process replays here). Each micro-batch enqueues
-        the newly arrived snapshots and drains every task whose retry
-        backoff has elapsed; backed-off tasks ride the queue to the
-        next micro-batch (ST6). ``foreachBatch`` is at-least-once, so
-        the catalog existence check makes batch replays idempotent
-        (J3). By default the trigger is availableNow (drain-and-stop —
-        ST8 by construction); ``continuous=True`` instead fires a
-        micro-batch every ``scan_interval`` seconds, the same cadence
-        as the driver loop (ST1, reference config.yaml:27). Returns the
-        StreamingQuery; the caller owns awaitTermination/stop."""
-        from ..sources.snapshot_datasource import register_arrival_source
-
-        register_arrival_source(self.spark)
-
-        def handle(batch_df, _batch_id: int) -> None:
-            rows = sorted(
-                batch_df.collect(),
-                key=lambda r: (r.customer_id, r.timestamp),
-            )  # control-plane rows: a few per batch, never data-plane
-            self._enqueue(SnapshotRef(r.customer_id, r.timestamp, r.path) for r in rows)
-            while self._drain(self.cfg["max_concurrent_loads"]):
-                pass
-            self.write_status()
-
-        writer = (
-            self.spark.readStream.format("snapshotarrivals")
-            .option("path", str(self.data_path))
-            .load()
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", str(checkpoint))
-        )
-        if continuous:
-            writer = writer.trigger(processingTime=f"{self.cfg['scan_interval']} seconds")
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def run(self, max_cycles: int | None = None, sleep: Callable[[float], None] = time.sleep) -> None:
         cycles = 0

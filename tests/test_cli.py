@@ -69,20 +69,35 @@ def test_demo_workflow_end_to_end(tmp_path, capsys):
     assert capsys.readouterr().out.strip() == ""
 
 
-def test_orchestrate_streaming_drains_and_reports(base, capsys):
-    """--streaming --cycles 1 = availableNow drain through the
-    snapshotarrivals source; stats JSON lands on stdout."""
-    import json as _json
+@pytest.mark.parametrize(
+    "method, argv",
+    [("run", []), ("run_cycle", ["--cycles", "2"])],
+    ids=["forever", "cycles"],
+)
+def test_orchestrate_drains_queue_on_ctrl_c(base, capsys, monkeypatch, method, argv):
+    """Ctrl-C (ST8): a snapshot queued before the interrupt is still
+    loaded by the graceful drain, and the stats are printed."""
+    import json
+    from pathlib import Path
 
-    assert main(["--base", base, "orchestrate", "--streaming", "--cycles", "1"]) == 0
+    from neo4j_blue_green_arrow_etl_spark.streaming.orchestrator import Orchestrator
+
+    def interrupted(self, *args, **kwargs):
+        self.scan_once()
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(Orchestrator, method, interrupted)
+    try:
+        rc = main(["--base", base, "orchestrate", *argv])
+    except KeyboardInterrupt:
+        pytest.fail("Ctrl-C escaped `orchestrate` without draining the queue")
+    assert rc == 0
     out = capsys.readouterr().out
-    stats = _json.loads(out[out.index("{") :])
+    stats = json.loads(out[out.index("{") :])
     assert stats["discovered"] == 1 and stats["completed"] == 1
-    # second run, same default checkpoint: offset log says nothing new
-    assert main(["--base", base, "orchestrate", "--streaming", "--cycles", "1"]) == 0
-    out = capsys.readouterr().out
-    stats = _json.loads(out[out.index("{") :])
-    assert stats["discovered"] == 0 and stats["completed"] == 0
+    status = json.loads((Path(base) / "status.json").read_text())
+    assert status["completed"] == 1 and status["queue_size"] == 0
+    assert [(t["db"], t["state"]) for t in status["tasks"]] == [("acme-1000", "completed")]
 
 
 def test_curate_writes_split_partitioned_corpus(spark, tmp_path, capsys):

@@ -183,6 +183,59 @@ def test_orchestrator_loads_through_flight_sink(spark, server, sf_dir, tmp_path)
         assert g["nodes"] > 0 and g["relationships"] > 0
 
 
+def test_load_path_goes_through_the_benchmark_hooks(
+    spark, server, sf_dir, tmp_path, monkeypatch
+):
+    """The benchmark's traced mode times each layer of a load by wrapping
+    these names: ``sources.snapshot.read_snapshot`` (which
+    ``flight_load_fn`` binds when it is called), the five public
+    ``GraphSink`` phase methods and three ``DeploymentCatalog`` methods.
+    It reads ``state``, ``nodes``, ``relationships`` and ``put_calls``
+    off the server's graph. One cycle must pass through all of them, in
+    load order."""
+    from neo4j_blue_green_arrow_etl_spark import fixtures as FX
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import (
+        GraphSink,
+        flight_load_fn,
+    )
+    from neo4j_blue_green_arrow_etl_spark.sources import snapshot
+    from neo4j_blue_green_arrow_etl_spark.streaming import Orchestrator
+
+    base = str(tmp_path / "data")
+    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
+    calls = []
+
+    def spy(owner, name):
+        real = getattr(owner, name)
+
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    sink_phases = ("create_database", "write_nodes", "nodes_done", "write_edges", "edges_done")
+    catalog_steps = ("register_deployment", "set_alias", "cleanup_old_deployments")
+    spy(snapshot, "read_snapshot")
+    for name in sink_phases:
+        spy(GraphSink, name)
+    for name in catalog_steps:
+        spy(DeploymentCatalog, name)
+
+    orch = Orchestrator(
+        spark,
+        base,
+        catalog=DeploymentCatalog(spark, tmp_path / "catalog.json"),
+        load_fn=flight_load_fn("127.0.0.1", server.port),
+    )
+    assert orch.run_cycle() == 1
+    assert calls == ["read_snapshot", *sink_phases, *catalog_steps]
+    g = server.graphs["acme-100"]
+    assert {"state", "nodes", "relationships", "put_calls"} <= g.keys()
+    assert g["state"] == "done"
+
+
 def test_parquet_snapshot_loads_in_two_spark_jobs(spark, server, sf_dir, tmp_path):
     """A load's fixed cost is its Spark jobs: reading the snapshot runs
     none (footer schemas), and each Flight phase runs one (its

@@ -494,87 +494,3 @@ def test_concurrency_cap_respected(spark, sf_dir, tmp_path):
     assert orch.run_cycle() == 2
     assert orch.run_cycle() == 2
     assert orch.run_cycle() == 1
-
-
-# ---------------------------------------------------------------------------
-# Structured-Streaming orchestrate mode (run_streaming)
-# ---------------------------------------------------------------------------
-
-
-def _stream_drain(orch, ckpt):
-    q = orch.run_streaming(ckpt)
-    q.awaitTermination(180)
-    q.stop()
-
-
-def test_scanned_snapshot_redelivered_by_stream_loads_once(spark, sf_dir, tmp_path):
-    """The driver loop and the streaming handler share one dedup: a
-    snapshot that ``scan_once`` queued and the arrivals source then
-    delivers again in the same process is loaded once."""
-    base = str(tmp_path / "data")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
-    orch = make_orch(spark, base, tmp_path)
-    assert orch.scan_once() == 1
-    _stream_drain(orch, str(tmp_path / "ckpt"))
-    assert orch.stats.discovered == 1 and orch.stats.completed == 1
-    assert orch.stats.skipped_existing == 0
-    assert [t["db"] for t in orch.task_log] == ["acme-100"]
-
-
-def test_streaming_orchestrate_loads_and_switches(spark, sf_dir, tmp_path):
-    """availableNow drain over the snapshotarrivals source: both
-    snapshots load, the alias lands on the max timestamp, retention
-    keeps newest 2, and stats/status report the work (ST1-ST9 on real
-    Structured Streaming)."""
-    base = str(tmp_path / "data")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 300)
-    orch = make_orch(spark, base, tmp_path)
-    _stream_drain(orch, str(tmp_path / "ckpt"))
-    assert orch.stats.discovered == 2
-    assert orch.stats.completed == 2
-    assert orch.catalog.alias_target("acme").endswith("-300")
-    status = json.loads((tmp_path / "status.json").read_text())
-    assert status["completed"] == 2 and status["queue_size"] == 0
-
-
-def test_streaming_orchestrate_restart_is_exactly_once(spark, sf_dir, tmp_path):
-    """A fresh orchestrator over the SAME checkpoint re-discovers
-    nothing (the offset log carries ST2 dedup across restarts); a late
-    OLDER snapshot then loads without moving the alias (ST3)."""
-    base = str(tmp_path / "data")
-    ckpt = str(tmp_path / "ckpt")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 300)
-    orch1 = make_orch(spark, base, tmp_path)
-    _stream_drain(orch1, ckpt)
-    assert orch1.stats.completed == 1
-
-    # restart: new orchestrator instance, same checkpoint + catalog
-    orch2 = make_orch(spark, base, tmp_path)
-    _stream_drain(orch2, ckpt)
-    assert orch2.stats.discovered == 0
-    assert orch2.stats.completed == 0
-
-    # late OLDER snapshot: loads, alias stays on 300
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 200)
-    orch3 = make_orch(spark, base, tmp_path)
-    _stream_drain(orch3, ckpt)
-    assert orch3.stats.completed == 1
-    assert orch3.catalog.alias_target("acme").endswith("-300")
-
-
-def test_streaming_continuous_trigger_uses_scan_interval(spark, sf_dir, tmp_path):
-    """``continuous=True`` keeps the query running on a processing-time
-    trigger of ``scan_interval`` seconds, the driver loop's cadence."""
-    base = str(tmp_path / "data")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
-    orch = make_orch(spark, base, tmp_path, scan_interval=0.5)
-    q = orch.run_streaming(str(tmp_path / "ckpt"), continuous=True)
-    try:
-        q.processAllAvailable()
-        assert q.isActive
-        trigger = q._jsq.streamingQuery().trigger()
-        assert trigger.intervalMs() == 500
-        assert orch.stats.completed == 1
-    finally:
-        q.stop()

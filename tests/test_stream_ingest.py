@@ -1,92 +1,9 @@
-"""End-to-end exactly-once streaming ingest (streaming/ingest.py):
-file-source readStream -> foreachBatch -> batch-partitioned parquet.
+"""Streaming near-dup admission (streaming/neardup_ingest.py):
+file-source readStream -> foreachBatch -> exactly-once admission,
+with periodic compaction, batch replay and crash recovery.
 """
 
 from __future__ import annotations
-
-import shutil
-from pathlib import Path
-
-from pyspark.sql import functions as F
-
-from neo4j_blue_green_arrow_etl_spark.streaming.ingest import (
-    idempotent_batch_writer,
-    stream_ingest_events,
-)
-
-from conftest import SF_SMOKE
-
-
-def _stage_event_files(spark, src_dir: Path, n_files: int, offset: int = 0):
-    """Split the smoke events table into n single-file parquet arrivals."""
-    e = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    total = n_files + offset
-    for i in range(offset, total):
-        part = e.filter(F.pmod("event_id", F.lit(total)) == i).coalesce(1)
-        part.write.mode("overwrite").parquet(str(src_dir / f"_stage_{i}"))
-        # move the single data file up as arrival file i
-        stage = src_dir / f"_stage_{i}"
-        data = next(p for p in stage.glob("part-*.parquet"))
-        data.rename(src_dir / f"events_{i}.parquet")
-        shutil.rmtree(stage)
-
-
-def test_stream_ingest_is_exactly_once_across_restarts(spark, tmp_path):
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    tgt = str(tmp_path / "target")
-    ckp = str(tmp_path / "ckp")
-
-    _stage_event_files(spark, src, 3)
-    q = stream_ingest_events(spark, str(src), tgt, ckp)
-    q.awaitTermination()
-
-    out = spark.read.parquet(tgt)
-    full = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    want = {r.event_id for r in full.collect()}
-    got = [r.event_id for r in out.collect()]
-    assert len(got) == len(want) and set(got) == want  # no dups, no loss
-    assert out.select("_batch_id").distinct().count() == 3  # one file per batch
-
-    # restart over the unchanged directory: a no-op
-    q = stream_ingest_events(spark, str(src), tgt, ckp)
-    q.awaitTermination()
-    assert spark.read.parquet(tgt).count() == len(want)
-
-    # two NEW arrivals (disjoint event slices staged with a wider modulus
-    # would re-split everything, so just append copies of new ids)
-    extra = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
-        .limit(500)
-    )
-    extra.coalesce(1).write.mode("overwrite").parquet(str(src / "_stage_new"))
-    data = next((src / "_stage_new").glob("part-*.parquet"))
-    data.rename(src / "events_new.parquet")
-    shutil.rmtree(src / "_stage_new")
-
-    q = stream_ingest_events(spark, str(src), tgt, ckp)
-    q.awaitTermination()
-    out2 = spark.read.parquet(tgt)
-    assert out2.count() == len(want) + 500
-    assert out2.filter(F.col("event_id") >= 10_000_000).count() == 500
-
-
-def test_batch_replay_is_idempotent(spark, tmp_path):
-    """Crash-recovery contract: re-running the SAME batch_id overwrites
-    that batch's partition instead of appending — rows never duplicate."""
-    tgt = str(tmp_path / "target")
-    writer = idempotent_batch_writer(tgt)
-    e = spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(100)
-    writer(e, 7)
-    writer(e, 7)  # replay
-    out = spark.read.parquet(tgt)
-    assert out.count() == 100
-    assert out.select("_batch_id").distinct().collect()[0][0] == 7
-
-    writer(e, 8)  # a different batch APPENDS (its own partition)
-    assert spark.read.parquet(tgt).count() == 200
-
 
 # --------------------------------------------------------------------------
 # Streaming near-dup admission (streaming/neardup_ingest.py)
