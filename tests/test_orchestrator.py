@@ -494,3 +494,19 @@ def test_concurrency_cap_respected(spark, sf_dir, tmp_path):
     assert orch.run_cycle() == 2
     assert orch.run_cycle() == 2
     assert orch.run_cycle() == 1
+
+
+def test_run_scans_every_scan_interval(spark, sf_dir, data_base, tmp_path):
+    """ST1: ``run`` sleeps ``scan_interval`` between cycles, and a
+    snapshot that lands during the sleep loads on the next cycle."""
+    orch = make_orch(spark, data_base, tmp_path, scan_interval=7)
+    slept = []
+
+    def sleep(seconds):
+        slept.append(seconds)
+        FX.materialize_snapshot(spark, sf_dir, data_base, "customer1", 1767742000)
+
+    orch.run(max_cycles=2, sleep=sleep)
+    assert slept == [7]
+    assert orch.stats.completed == 2
+    assert orch.catalog.alias_target("customer1") == "customer1-1767742000"
