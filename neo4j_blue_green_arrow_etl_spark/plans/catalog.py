@@ -9,7 +9,12 @@ the same model over Spark:
 - a **deployment** is a loaded snapshot registered as temp views
   ``dep__{customer}__{ts}_nodes`` / ``dep__{customer}__{ts}_edges``
   (the ``dep__`` prefix + ``__`` separator keep deployment names
-  disjoint from alias names for every valid customer id);
+  disjoint from alias names for every valid customer id). The views
+  are over the pinned sides ``read_snapshot`` returns, so a deployment
+  serves the rows its load computed once (for a Flight load: exactly
+  what the server acknowledged), whatever later happens to the landing
+  files. The catalog unpins a deployment's sides when it drops it
+  (retention included) or replaces it under the same name;
 - an **alias** is the stable pair of views ``{customer}_nodes`` /
   ``{customer}_edges`` — each view's ``CREATE OR REPLACE`` repoint
   is atomic per view (consumers' next query sees the new snapshot,
@@ -39,6 +44,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import InvalidArgumentError, NotFoundError
+from ..sources.snapshot import unpin
 
 _NAME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9_]*$")
 
@@ -96,6 +102,7 @@ class DeploymentCatalog:
         self.manifest_path = Path(manifest_path) if manifest_path else None
         self._deployments: dict[str, dict] = {}  # db name -> meta
         self._aliases: dict[str, str] = {}  # customer -> db name
+        self._frames: dict[str, tuple[DataFrame, DataFrame]] = {}  # db name -> sides
         if self.manifest_path and self.manifest_path.exists():
             state = json.loads(self.manifest_path.read_text())
             self._deployments = state.get("deployments", {})
@@ -108,7 +115,9 @@ class DeploymentCatalog:
         its source_path and re-points alias views. Deployments loaded
         without a source_path (data handed in as DataFrames) cannot be
         restored and are dropped from the catalog — better an honest
-        catalog than a listed-but-unqueryable database."""
+        catalog than a listed-but-unqueryable database. Pins die with
+        the session too: each restored deployment is pinned again at its
+        first read, from ``source_path`` as it is now."""
         from ..sources.snapshot import SnapshotRef, read_snapshot
 
         dead = []
@@ -138,8 +147,15 @@ class DeploymentCatalog:
     def _create_views(
         self, customer_id: str, timestamp: int, nodes: DataFrame, edges: DataFrame
     ) -> None:
+        """Point the deployment's views at ``nodes``/``edges`` and unpin
+        the sides they replace."""
         nodes.createOrReplaceTempView(_view(customer_id, timestamp, "nodes"))
         edges.createOrReplaceTempView(_view(customer_id, timestamp, "edges"))
+        name = db_name(customer_id, timestamp)
+        for old in self._frames.get(name, ()):
+            if old is not nodes and old is not edges:
+                unpin(old)
+        self._frames[name] = (nodes, edges)
 
     def _point_alias(self, customer_id: str, timestamp: int) -> None:
         for kind in ("nodes", "edges"):
@@ -181,7 +197,8 @@ class DeploymentCatalog:
     ) -> str:
         """Register a loaded snapshot as queryable views; replaces any
         existing deployment of the same identity (reference drops and
-        reloads, load_with_aliases.py:57-87). ``source_path`` makes the
+        reloads, load_with_aliases.py:57-87), and then unpins the
+        replaced deployment's sides. ``source_path`` makes the
         deployment survive session restarts (views are rebuilt from it
         in ``_restore_views``); without it the deployment is
         session-lifetime only."""
@@ -206,8 +223,9 @@ class DeploymentCatalog:
         return names
 
     def drop_database(self, name: str, if_exists: bool = True) -> bool:
-        """Drop a deployment and its views. Refuses while an alias still
-        points at it (the reference's alias guard, orchestrator.py:410-417)."""
+        """Drop a deployment and its views and unpin its sides. Refuses
+        while an alias still points at it (the reference's alias guard,
+        orchestrator.py:410-417)."""
         if name not in self._deployments:
             if if_exists:
                 return False
@@ -219,6 +237,8 @@ class DeploymentCatalog:
             self.spark.catalog.dropTempView(
                 _view(meta["customer_id"], meta["timestamp"], kind)
             )
+        for df in self._frames.pop(name, ()):
+            unpin(df)
         self._persist()
         return True
 
@@ -238,7 +258,12 @@ class DeploymentCatalog:
         node/edge consistency there comes from both living in one
         database). Readers needing a consistent pair should resolve both
         views inside one query (single analysis pass) or read via
-        ``read_alias``-style snapshot at a known timestamp."""
+        ``read_alias``-style snapshot at a known timestamp.
+
+        The alias serves the deployment's pinned rows, so a cutover reads
+        no files. The generation it leaves stays pinned until retention
+        drops it; a read still running over that generation then fails,
+        which takes two newer cutovers during one read."""
         name = db_name(customer_id, timestamp)
         if name not in self._deployments:
             raise NotFoundError(f"cannot alias missing database {name!r}")

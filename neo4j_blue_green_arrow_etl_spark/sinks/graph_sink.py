@@ -8,10 +8,20 @@ protocol shape — an explicit lifecycle with an ordered barrier between
 the node phase and the edge phase — in ``GraphSink``, and one sink
 implements it:
 
-- ``FlightGraphSink``: the Neo4j Arrow adapter. The gRPC data path runs
-  per-partition on executors (``mapInArrow`` + ``do_put``) so 1000
-  executors stream concurrently; integration-tested over real gRPC
-  against the in-process ``flight_server.InMemoryGraphFlightServer``.
+- ``FlightGraphSink``: the Neo4j Arrow adapter. Each phase streams a
+  side through one ``do_put`` per partition. A side with exactly one
+  partition (every small snapshot ``read_snapshot`` returns) is
+  collected with ``toArrow``, a JVM-only job, and streamed from the
+  driver, as the reference loader does from its one host; any other
+  side streams per partition on executors (``mapInArrow`` +
+  ``do_put``) so 1000 executors stream concurrently. Integration-tested
+  over real gRPC against the in-process
+  ``flight_server.InMemoryGraphFlightServer``.
+
+``flight_load_fn`` reads pinned sides (``sources.snapshot``), so the
+put jobs also fill the pins and the catalog then serves exactly the
+rows the server acknowledged. A load that fails or is interrupted
+aborts the server graph and unpins both sides.
 
 State assertions are real (the reference's broken ``==`` no-op check,
 neo4j_arrow_client.py:227, is flagged in SURVEY §4.3 — we assert).
@@ -24,6 +34,7 @@ import enum
 import json
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..errors import InvalidArgumentError
@@ -150,19 +161,27 @@ class FlightGraphSink(GraphSink):
     - lifecycle actions (CREATE_DATABASE / NODE_LOAD_DONE /
       RELATIONSHIP_LOAD_DONE / ABORT) are driver-side DoAction calls
       with a JSON body framing the load;
-    - the data path is DISTRIBUTED: ``df.mapInArrow`` hands each
-      executor task its partition as pyarrow RecordBatches; the task
-      opens its own FlightClient (connections are not serializable —
-      create per partition, the lesson of reference
-      neo4j_arrow_client.py:58-73) and streams every batch through ONE
-      ``do_put`` whose descriptor command is
-      ``{"name": db, "entity_type": "node"|"relationship"}``, then
-      emits a single (rows, nbytes) stats row. ``collect`` brings
-      those rows back and Python sums them into the WriteResult: one
-      Spark job with one stage per phase, no exchange. Throughput scales with
-      executors instead of the reference's single-host fork pool
-      (neo4j_pq.py:290-303), and nothing but two longs per partition
-      crosses back to the driver.
+    - one function, ``put_partition``, streams a partition's pyarrow
+      RecordBatches through ONE ``do_put`` whose descriptor command is
+      ``{"name": db, "entity_type": "node"|"relationship"}`` on its own
+      FlightClient (connections are not serializable — create per
+      partition, the lesson of reference neo4j_arrow_client.py:58-73),
+      then emits a single (rows, nbytes) stats row, summed into the
+      WriteResult. Each phase is one Spark job, on one of two paths,
+      chosen from the physical plan without running a job:
+
+      - ONE output partition (``read_snapshot`` output under
+        ``spark.sql.files.openCostInBytes``, ``coalesce(1)``,
+        ``limit``): ``toArrow`` collects the side in a JVM-only job and
+        the driver streams it, as the reference streams from one host
+        (neo4j_pq.py:279-303). No Python worker starts. The driver
+        holds one side at a time: for ``read_snapshot`` output at most
+        ``openCostInBytes`` (4 MB by default) of Parquet.
+      - any other side is DISTRIBUTED: ``df.mapInArrow`` hands each
+        executor task its partition, and ``collect`` brings back only
+        the stats rows (one stage, no exchange). Throughput scales with
+        executors instead of the reference's single-host fork pool
+        (neo4j_pq.py:290-303).
 
     Tested end-to-end against the in-process
     ``flight_server.InMemoryGraphFlightServer`` over real gRPC
@@ -239,7 +258,7 @@ class FlightGraphSink(GraphSink):
             if "NOT_FOUND" not in str(e):
                 raise
 
-    # -- executor-side data path ---------------------------------------
+    # -- data path -----------------------------------------------------
 
     def _put(self, df: DataFrame, entity_type: str) -> WriteResult:
         host, port = self.host, self.port
@@ -247,8 +266,9 @@ class FlightGraphSink(GraphSink):
 
         def put_partition(batches):
             # Self-contained closure (ships by value; executors need no
-            # package import). One FlightClient + one do_put stream per
-            # partition; empty partitions open no connection.
+            # package import), also run on the driver for a one-partition
+            # side. One FlightClient + one do_put stream per partition;
+            # empty partitions open no connection.
             import itertools
 
             import pyarrow as pa
@@ -274,9 +294,14 @@ class FlightGraphSink(GraphSink):
                     client.close()
             yield pa.RecordBatch.from_pydict({"rows": [rows], "nbytes": [nbytes]})
 
-        stats = df.mapInArrow(put_partition, "rows long, nbytes long").collect()
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.outputPartitioning().numPartitions() == 1:
+            batches = df.toArrow().to_batches()
+            stats = pa.Table.from_batches(put_partition(batches)).to_pylist()
+        else:
+            stats = df.mapInArrow(put_partition, "rows long, nbytes long").collect()
         return WriteResult(
-            rows=sum(r.rows for r in stats), bytes=sum(r.nbytes for r in stats)
+            rows=sum(r["rows"] for r in stats), bytes=sum(r["nbytes"] for r in stats)
         )
 
     def _write_nodes(self, nodes: DataFrame) -> WriteResult:
@@ -291,19 +316,25 @@ def flight_load_fn(host: str, port: int):
     snapshot through the Flight sink's two-phase protocol (create ->
     nodes -> barrier -> edges -> done) and records the deployment in
     the catalog. One definition serves the pipeline bench and the
-    integration tests, so protocol changes have a single home."""
-    from ..sources.snapshot import read_snapshot
+    integration tests, so protocol changes have a single home.
+
+    The put jobs fill the pins of the sides ``read_snapshot`` returns,
+    so the registered deployment serves the rows the server
+    acknowledged. A failed or interrupted load (Ctrl-C raises
+    ``KeyboardInterrupt`` here) aborts the server graph and unpins both
+    sides before the error propagates."""
+    from ..sources.snapshot import read_snapshot, unpin
 
     def load(spark, ref, catalog):
         nodes, edges = read_snapshot(spark, ref)
         sink = FlightGraphSink(ref.database, host=host, port=port)
-        sink.create_database()
         try:
+            sink.create_database()
             sink.write_nodes(nodes)
             sink.nodes_done()
             sink.write_edges(edges)
             sink.edges_done()
-        except Exception:
+        except BaseException:
             # Don't leave the server database stuck in a feeding state:
             # abort the import (reference parity — load_with_aliases.py
             # clears stuck imports via client.abort) before surfacing
@@ -312,6 +343,8 @@ def flight_load_fn(host: str, port: int):
                 sink.abort()
             except Exception:
                 pass  # the original error is the one worth raising
+            unpin(nodes)
+            unpin(edges)
             raise
         catalog.register_deployment(
             ref.customer_id, ref.timestamp, nodes, edges, source_path=str(ref.path)

@@ -25,6 +25,18 @@ partitions: Spark's rule that a split smaller than the cost of opening
 a file is not worth a task, applied across a snapshot's many small
 files. ``coalesce`` never adds partitions, so large snapshots keep
 Spark's own splits.
+
+Pinned sides: ``read_snapshot`` returns each side as
+``localCheckpoint(eager=False)``. The first job over a side (the load's
+Flight put, or the first read of a deployment loaded without a sink)
+computes it from the files once and keeps the rows in the block
+manager; every later read runs over those rows, and a rewritten or
+deleted landing file no longer changes or breaks what a deployment
+serves. ``unpin`` frees a side's blocks. Limits: a read still running
+over a generation whose blocks retention frees fails (this takes two
+newer cutovers during one read), and a restarted catalog re-reads
+``source_path`` as it is then, without checking the files against the
+first load.
 """
 
 from __future__ import annotations
@@ -189,9 +201,14 @@ def _subdirs(parent: Path) -> list[Path]:
 def _list_table(table_dir: Path) -> tuple[str, list[str], int]:
     """One walk of a label/type dir: its format, its data files (sorted)
     and their total bytes. This is the one rule for which files make up
-    a table: ``read_snapshot`` reads exactly these files, and
-    ``discover_snapshots`` admits a snapshot only when every table dir
-    lists some bytes here. Names starting with ``_`` or ``.`` are
+    a table: ``discover_snapshots`` admits a snapshot only when every
+    table dir lists some bytes here, and ``read_snapshot`` sizes its
+    partitions and takes its footer schema from this list. It does not
+    read exactly these files: it hands Spark the table dir, which Spark
+    lists again when the load's first job runs, so a file landing
+    between the two listings is read unchecked. What a deployment
+    serves is fixed once that job has filled the pin (module
+    docstring). Names starting with ``_`` or ``.`` are
     skipped at every level, as Spark's own listing skips them
     (``_SUCCESS``, ``.crc`` checksums, and the ``_temporary`` or
     ``.staging`` dirs a write in progress fills). The format is the
@@ -389,13 +406,27 @@ def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame
     may independently be parquet, orc, csv, or json (auto-detected).
     Each side has one partition per ``spark.sql.files.openCostInBytes``
     of data, or Spark's own splits where those are fewer; parquet dirs
-    cost no Spark job (see the module docstring)."""
+    cost no Spark job. Each side is pinned by the first job that runs
+    over it; ``unpin`` releases it (see the module docstring)."""
     conf = _inference_conf(spark)
     open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
     root = Path(snapshot.path)
     nodes, node_bytes = _read_side(spark, root / "nodes", read_nodes, conf)
     edges, edge_bytes = _read_side(spark, root / "relationships", read_edges, conf)
-    return (
-        nodes.coalesce(max(1, math.ceil(node_bytes / open_cost))),
-        edges.coalesce(max(1, math.ceil(edge_bytes / open_cost))),
-    )
+
+    def pinned(df: DataFrame, nbytes: int) -> DataFrame:
+        parts = max(1, math.ceil(nbytes / open_cost))
+        return df.coalesce(parts).localCheckpoint(eager=False)
+
+    return pinned(nodes, node_bytes), pinned(edges, edge_bytes)
+
+
+def unpin(df: DataFrame) -> None:
+    """Free the blocks of a side ``read_snapshot`` pinned; any other
+    frame is left alone. Reads of the side fail afterwards."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return
+    rdd = plan.rdd()
+    if rdd.isLocallyCheckpointed():
+        rdd.unpersist(False)

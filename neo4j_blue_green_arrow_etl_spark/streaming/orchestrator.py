@@ -71,7 +71,11 @@ def load_snapshot(
     """Read a snapshot and register it as a deployment (no alias move);
     returns its (nodes, edges). The orchestrator's default ``load_fn``
     and the ``load``/``demo`` CLI commands; ``flight_load_fn`` instead
-    puts the sink between the read and the register."""
+    puts the sink between the read and the register. No job runs here:
+    the sides are pinned by their first read, which computes them from
+    the landing files once; later reads, and files changing after it,
+    do not move what the deployment serves. The catalog unpins them
+    when it drops or replaces the deployment."""
     nodes, edges = read_snapshot(spark, ref)
     catalog.register_deployment(
         ref.customer_id, ref.timestamp, nodes, edges, source_path=str(ref.path)

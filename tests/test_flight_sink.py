@@ -236,27 +236,176 @@ def test_load_path_goes_through_the_benchmark_hooks(
     assert g["state"] == "done"
 
 
-def test_parquet_snapshot_loads_in_two_spark_jobs(spark, server, sf_dir, tmp_path):
-    """A load's fixed cost is its Spark jobs: reading the snapshot runs
-    none (footer schemas), and each Flight phase runs one (its
-    per-partition stats rows are collected, not aggregated). Loading a parquet snapshot end
-    to end, registration included, is exactly two jobs."""
+def _spy_map_in_arrow(spark, monkeypatch) -> list[int]:
+    """Count ``mapInArrow`` calls, the executor send path: each starts
+    Python workers."""
+    frame_cls = type(spark.range(1))
+    real = frame_cls.mapInArrow
+    calls = []
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInArrow", spy)
+    return calls
+
+
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the session's persisted RDDs, pins included. Spark holds
+    them weakly, so earlier tests' frames may drop out at any time:
+    compare ids, not sizes."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _snapshot(spark, sf_dir, base, ts):
     from neo4j_blue_green_arrow_etl_spark import fixtures as FX
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import SnapshotRef
+
+    FX.materialize_snapshot(spark, sf_dir, base, "acme", ts)
+    return SnapshotRef("acme", ts, f"{base}/acme/{ts}")
+
+
+def test_parquet_snapshot_loads_in_two_spark_jobs(
+    spark, server, sf_dir, tmp_path, monkeypatch
+):
+    """A load's fixed cost is its Spark jobs and Python workers: reading
+    the snapshot runs no job (footer schemas), and each Flight phase
+    runs one. Each side of a small snapshot has one partition, so
+    ``toArrow`` collects it in a JVM-only job and the driver streams it:
+    ``mapInArrow`` is never called, so no Python worker starts. The same
+    two jobs fill the sides' pins. Loading a parquet snapshot end to
+    end, registration included, is exactly two jobs."""
     from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
     from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import SnapshotRef
 
     from conftest import spark_jobs_run_by
 
-    base = str(tmp_path / "data")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
-    ref = SnapshotRef("acme", 100, f"{base}/acme/100")
+    ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
     catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
     load = flight_load_fn("127.0.0.1", server.port)
+    mapped = _spy_map_in_arrow(spark, monkeypatch)
     jobs = spark_jobs_run_by(spark, lambda: load(spark, ref, catalog))
     assert len(jobs) == 2
+    assert mapped == []
     assert server.graphs["acme-100"]["state"] == "done"
     assert catalog.database_exists("acme-100")
+
+
+def test_one_and_two_partition_sides_send_the_same_rows(spark, server, monkeypatch):
+    """The driver path (one partition) and the executor path (two) send
+    one frame alike: the server records equal Arrow schemas and equal
+    row counts, and only the two-partition side calls ``mapInArrow``."""
+    frame = spark.read.parquet(f"{SF_SMOKE}/customer.parquet")
+    mapped = _spy_map_in_arrow(spark, monkeypatch)
+    sent = {}
+    for name, df in (("one-1", frame.coalesce(1)), ("two-2", frame.repartition(2))):
+        sink = _sink(server, name)
+        sink.create_database()
+        res = sink.write_nodes(df)
+        g = server.graphs[name]
+        sent[name] = (g["schemas"]["node"], g["nodes"], res.rows)
+    (one_schema, one_rows, one_res), (two_schema, two_rows, two_res) = sent.values()
+    assert one_schema.equals(two_schema, check_metadata=True)
+    assert one_rows == two_rows == one_res == two_res == frame.count()
+    assert mapped == [1]
+
+
+@pytest.mark.parametrize("error", [KeyboardInterrupt, RuntimeError])
+def test_failed_load_aborts_and_unpins(
+    spark, server, sf_dir, tmp_path, monkeypatch, error
+):
+    """A load that fails in the edge phase, or that Ctrl-C interrupts
+    (pyspark cancels the running jobs and raises ``KeyboardInterrupt``),
+    aborts the server graph instead of leaving it feeding, frees both
+    sides' pins and registers nothing; the error propagates."""
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import (
+        GraphSink,
+        flight_load_fn,
+    )
+
+    ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
+    catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    load = flight_load_fn("127.0.0.1", server.port)
+
+    def write_edges(self, edges):
+        raise error
+
+    monkeypatch.setattr(GraphSink, "write_edges", write_edges)
+    before = _persistent_rdds(spark)
+    with pytest.raises(error):
+        load(spark, ref, catalog)
+    assert "acme-100" not in server.graphs
+    assert _persistent_rdds(spark) <= before
+    assert not catalog.database_exists("acme-100")
+
+
+def test_deployment_serves_acknowledged_rows_after_landing_files_change(
+    spark, server, sf_dir, tmp_path
+):
+    """The put jobs that stream a snapshot to the server also pin its
+    rows, so reads through the alias keep returning the counts the
+    server acknowledged after a landing file is rewritten with other
+    rows, and after the snapshot dir is deleted."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
+
+    ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
+    catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    flight_load_fn("127.0.0.1", server.port)(spark, ref, catalog)
+    catalog.set_alias("acme", 100)
+    g = server.graphs["acme-100"]
+    acked = (g["nodes"], g["relationships"])
+
+    def served():
+        return tuple(catalog.count_via_alias("acme", k) for k in ("nodes", "edges"))
+
+    assert served() == acked
+    part = sorted(Path(ref.path, "nodes").glob("*/part-*"))[0]
+    pq.write_table(pq.read_table(part).slice(0, 1), part)
+    part.with_name(f".{part.name}.crc").unlink(missing_ok=True)
+    assert served() == acked
+    shutil.rmtree(ref.path)
+    assert served() == acked
+
+
+def test_retention_and_reregister_unpin_deployments(spark, server, sf_dir, tmp_path):
+    """The catalog frees a deployment's pins when it lets go of it:
+    retention drops it, or a register under the same name replaces it.
+    The replacing deployment is served from its own pins."""
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
+    from neo4j_blue_green_arrow_etl_spark.streaming.orchestrator import (
+        load_snapshot,
+    )
+
+    base = str(tmp_path / "data")
+    catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    load = flight_load_fn("127.0.0.1", server.port)
+    before = _persistent_rdds(spark)
+    refs = [_snapshot(spark, sf_dir, base, ts) for ts in (100, 200, 300)]
+    for ref in refs:
+        load(spark, ref, catalog)
+    pins = _persistent_rdds(spark) - before
+    assert len(pins) == 6
+    catalog.set_alias("acme", 300)
+    assert catalog.cleanup_old_deployments("acme", keep_count=2) == ["acme-100"]
+    assert len(_persistent_rdds(spark) & pins) == 4
+
+    load_snapshot(spark, refs[-1], catalog)
+    assert len(_persistent_rdds(spark) & pins) == 2
+    assert len(_persistent_rdds(spark) - before) == 4
+    assert catalog.count_via_alias("acme") == server.graphs["acme-300"]["nodes"]
+
+    catalog.drop_alias("acme")
+    for name in catalog.list_databases():
+        catalog.drop_database(name)
+    assert _persistent_rdds(spark) <= before
 
 
 def test_create_database_retries_transient_failures(spark, server, monkeypatch):

@@ -345,12 +345,19 @@ def test_read_snapshot_matches_inferred_read(spark, sf_dir, tmp_path):
         assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
 
 
-def _write_small_snapshot(root: Path) -> dict[str, int]:
+def _write_small_snapshot(spark, root: Path) -> dict[str, int]:
     """A 10k-row positional snapshot in 9 files, with the ``_SUCCESS``
-    marker and ``.crc`` checksums a Hadoop writer leaves beside them."""
+    marker and ``.crc`` checksums a Hadoop writer leaves beside them.
+    Hadoop's local filesystem moves each part into place and writes its
+    checksum, so a full read verifies real sums."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    jvm = spark._jvm
+    local_fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    )
 
     rng = np.random.default_rng(5)
     tables = {
@@ -381,9 +388,12 @@ def _write_small_snapshot(root: Path) -> dict[str, int]:
         parts = 1 if name.endswith("Address") else 2
         step = -(-table.num_rows // parts)
         for i in range(parts):
-            part = d / f"part-{i:05d}.parquet"
-            pq.write_table(table.slice(i * step, step), part)
-            (d / f".{part.name}.crc").write_bytes(b"crc\x00")
+            staged = d / f".staged-{i}.parquet"
+            pq.write_table(table.slice(i * step, step), staged)
+            local_fs.moveFromLocalFile(
+                jvm.org.apache.hadoop.fs.Path(str(staged)),
+                jvm.org.apache.hadoop.fs.Path(str(d / f"part-{i:05d}.parquet")),
+            )
         (d / "_SUCCESS").write_bytes(b"")
         files[name] = parts
     return files
@@ -402,7 +412,7 @@ def test_small_snapshot_reads_as_one_partition_per_side(spark, tmp_path):
     )
 
     root = tmp_path / "acme" / "100"
-    files = _write_small_snapshot(root)
+    files = _write_small_snapshot(spark, root)
     ref = SnapshotRef("acme", 100, str(root))
 
     nodes, edges = read_snapshot(spark, ref)
@@ -419,6 +429,7 @@ def test_small_snapshot_reads_as_one_partition_per_side(spark, tmp_path):
             assert splits >= sum(files[f"{side}/{d.name}"] for d in dirs)
 
     entity = root / "nodes" / "Entity"
+    assert (entity / ".part-00000.parquet.crc").is_file()
     fmt, data, nbytes = _list_table(entity)
     parts = sorted(str(p) for p in entity.glob("part-*.parquet"))
     assert (fmt, data) == ("parquet", parts)
@@ -470,7 +481,7 @@ def test_discovery_admits_only_what_the_reader_lists(spark, tmp_path, case):
     from neo4j_blue_green_arrow_etl_spark.sources.snapshot import _list_table
 
     root = tmp_path / "acme" / "100"
-    _write_small_snapshot(root)
+    _write_small_snapshot(spark, root)
     if case != "published":
         where, unpublish = _UNPUBLISHED[case]
         unpublish(root / where)
