@@ -44,7 +44,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import InvalidArgumentError, NotFoundError
-from ..sources.snapshot import unpin
+from ..sources.snapshot import db_name, unpin
 
 _NAME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9_]*$")
 
@@ -61,12 +61,6 @@ def _safe(name: str) -> str:
     if not _NAME_RE.match(name) or "__" in name:
         raise InvalidArgumentError(f"invalid identifier: {name!r}")
     return name
-
-
-def db_name(customer_id: str, timestamp: int) -> str:
-    """Snapshot identity doubles as the database name (reference
-    load_with_aliases.py:48)."""
-    return f"{customer_id}-{int(timestamp)}"
 
 
 def _view(customer_id: str, timestamp: int, kind: str) -> str:

@@ -2,8 +2,6 @@ from .snapshot import (
     discover_snapshots,
     normalize_edges,
     normalize_nodes,
-    read_edges,
-    read_nodes,
     read_snapshot,
 )
 
@@ -11,7 +9,5 @@ __all__ = [
     "discover_snapshots",
     "normalize_edges",
     "normalize_nodes",
-    "read_edges",
-    "read_nodes",
     "read_snapshot",
 ]

@@ -16,15 +16,21 @@ Scale note: the normalizations here are pure Catalyst expressions
 whole-stage codegen — no Python on the data path, unlike the
 reference's pandas row-apply label split (neo4j_pq.py:59).
 
-Fixed cost per load: ``read_snapshot`` lists each label/type dir once
-and runs no Spark job. A parquet table's schema comes from one file's
-footer, mapped to the types Spark's own inference would give, so Spark
-skips its schema-inference job per dir. The unioned nodes and edges are
-each coalesced to ``ceil(bytes / spark.sql.files.openCostInBytes)``
-partitions: Spark's rule that a split smaller than the cost of opening
-a file is not worth a task, applied across a snapshot's many small
-files. ``coalesce`` never adds partitions, so large snapshots keep
-Spark's own splits.
+Every data file a label/type dir lists is read as Parquet, as the
+reference opens each dir with ``pq.ParquetDataset`` (neo4j_pq.py:275);
+any other file fails the load. Spark lists each table dir once, when
+``read_snapshot`` builds the frame (``DataFrame.inputFiles()`` returns
+that list without a job), and every later job reads that list, so a
+file landing after ``read_snapshot`` returns is not read.
+
+Fixed cost per load: ``read_snapshot`` runs no Spark job. A table's
+schema comes from one file's footer, mapped to the types Spark's own
+inference would give, so Spark skips its schema-inference job per dir.
+The unioned nodes and edges are each coalesced to
+``ceil(bytes / spark.sql.files.openCostInBytes)`` partitions: Spark's
+rule that a split smaller than the cost of opening a file is not worth
+a task, applied across a snapshot's many small files. ``coalesce``
+never adds partitions, so large snapshots keep Spark's own splits.
 
 Pinned sides: ``read_snapshot`` returns each side as
 ``localCheckpoint(eager=False)``. The first job over a side (the load's
@@ -91,91 +97,15 @@ def normalize_edges(df: DataFrame) -> DataFrame:
     return df.toDF(SOURCE_ID, TARGET_ID, REL_TYPE, *cols[3:])
 
 
-FORMATS = ("parquet", "orc", "csv", "json")
-
-
-def _read_table(
-    spark: SparkSession, path: str, fmt: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """One snapshot table in any supported format.
-
-    parquet, orc, and csv-with-header preserve COLUMN ORDER, so the
-    positional contract applies directly. JSON is name-based (Spark
-    infers fields alphabetically), so JSON snapshots must already carry
-    the NAMED contract (nodeId/labels/... or sourceNodeId/...) —
-    enforced by the normalizers below via a reorder, not a rename.
-    A given ``schema`` replaces Spark's inference."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    if fmt == "parquet":
-        return reader.parquet(path)
-    if fmt == "orc":
-        return reader.orc(path)
-    if fmt == "csv":
-        return reader.option("header", True).option("inferSchema", True).csv(path)
-    if fmt == "json":
-        return reader.json(path)
-    raise ValueError(f"unsupported snapshot format {fmt!r}; use one of {FORMATS}")
-
-
-def _to_positional(df: DataFrame, leading: tuple[str, ...]) -> DataFrame:
-    """Reorder a NAME-based table (JSON) into the positional contract:
-    the named key columns first, properties after, alphabetically."""
-    missing = [c for c in leading if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"name-based snapshot table lacks required columns {missing}; "
-            f"got {df.columns}"
-        )
-    props = sorted(c for c in df.columns if c not in leading)
-    return df.select(*leading, *props)
-
-
-def read_nodes(
-    spark: SparkSession,
-    *paths: str,
-    fmt: str = "parquet",
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Read one or more node-label directories and normalize.
-
-    Multiple label dirs are unioned by name with missing property
-    columns null-filled (the reference processes each dir separately
-    and the server unions; here the union is explicit so the engine has
-    ONE nodes relation to query). ``schema``, when given, is every
-    dir's raw schema (``read_snapshot`` takes it from a parquet footer);
-    otherwise Spark infers it."""
-    raw = [_read_table(spark, p, fmt, schema) for p in paths]
-    if fmt == "json":
-        raw = [_to_positional(d, (NODE_ID, LABELS)) for d in raw]
-    dfs = [normalize_nodes(d) for d in raw]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
-
-
-def read_edges(
-    spark: SparkSession,
-    *paths: str,
-    fmt: str = "parquet",
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    raw = [_read_table(spark, p, fmt, schema) for p in paths]
-    if fmt == "json":
-        raw = [_to_positional(d, (SOURCE_ID, TARGET_ID, REL_TYPE)) for d in raw]
-    dfs = [normalize_edges(d) for d in raw]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
+def db_name(customer_id: str, timestamp: int) -> str:
+    """Snapshot identity doubles as the database name (reference
+    load_with_aliases.py:48)."""
+    return f"{customer_id}-{int(timestamp)}"
 
 
 @dataclass(frozen=True)
 class SnapshotRef:
-    """Identity of one discovered snapshot (reference orchestrator.py:42-50).
-
-    The database name it loads into is ``{customer_id}-{timestamp}``
-    (reference load_with_aliases.py:48)."""
+    """Identity of one discovered snapshot (reference orchestrator.py:42-50)."""
 
     customer_id: str
     timestamp: int
@@ -183,7 +113,7 @@ class SnapshotRef:
 
     @property
     def database(self) -> str:
-        return f"{self.customer_id}-{self.timestamp}"
+        return db_name(self.customer_id, self.timestamp)
 
 
 _HIDDEN = ("_", ".")
@@ -198,23 +128,13 @@ def _subdirs(parent: Path) -> list[Path]:
     return [parent / name for name in names]
 
 
-def _list_table(table_dir: Path) -> tuple[str, list[str], int]:
-    """One walk of a label/type dir: its format, its data files (sorted)
-    and their total bytes. This is the one rule for which files make up
-    a table: ``discover_snapshots`` admits a snapshot only when every
-    table dir lists some bytes here, and ``read_snapshot`` sizes its
-    partitions and takes its footer schema from this list. It does not
-    read exactly these files: it hands Spark the table dir, which Spark
-    lists again when the load's first job runs, so a file landing
-    between the two listings is read unchecked. What a deployment
-    serves is fixed once that job has filled the pin (module
-    docstring). Names starting with ``_`` or ``.`` are
-    skipped at every level, as Spark's own listing skips them
-    (``_SUCCESS``, ``.crc`` checksums, and the ``_temporary`` or
-    ``.staging`` dirs a write in progress fills). The format is the
-    first recognized extension: snapshots can arrive as parquet, orc,
-    csv (header) or ndjson, and mixing formats ACROSS dirs of one
-    snapshot is fine; a dir with none reads as parquet."""
+def _list_table(table_dir: Path) -> tuple[list[str], int]:
+    """One walk of a label/type dir: its data files (sorted) and their
+    total bytes. Names starting with ``_`` or ``.`` are skipped at every
+    level, as Spark's own listing skips them (``_SUCCESS``, ``.crc``
+    checksums, and the ``_temporary`` or ``.staging`` dirs a write in
+    progress fills). Every file listed is read as Parquet: any other
+    file fails the load."""
     files: list[tuple[str, int]] = []
     pending = [str(table_dir)]
     while pending:
@@ -227,27 +147,36 @@ def _list_table(table_dir: Path) -> tuple[str, list[str], int]:
                 else:
                     files.append((e.path, e.stat().st_size))
     files.sort()
-    fmt = "parquet"
-    for path, _ in files:
-        suffix = os.path.splitext(path)[1].lstrip(".").lower()
-        if suffix in FORMATS or suffix == "ndjson":
-            fmt = "json" if suffix == "ndjson" else suffix
-            break
-    return fmt, [path for path, _ in files], sum(size for _, size in files)
+    return [path for path, _ in files], sum(size for _, size in files)
+
+
+def _list_side(side_dir: Path) -> list[tuple[Path, list[str], int]]:
+    """Each label/type dir under ``side_dir`` with its ``_list_table``
+    listing. This is the one rule for which snapshots are complete:
+    ``discover_snapshots`` admits a snapshot only when both sides list
+    here, and ``read_snapshot`` reads what they list. Raises
+    ``ValueError`` naming the side when it holds no table dir, or the
+    table dir when it lists no non-empty data file (a write still in
+    progress)."""
+    tables = []
+    for table_dir in _subdirs(side_dir):
+        files, nbytes = _list_table(table_dir)
+        if nbytes == 0:
+            raise ValueError(f"snapshot table dir {table_dir} lists no data file")
+        tables.append((table_dir, files, nbytes))
+    if not tables:
+        raise ValueError(f"snapshot side {side_dir} holds no label or type dir")
+    return tables
 
 
 def _complete(ts_dir: Path) -> bool:
-    """True when ``nodes/`` and ``relationships/`` each hold at least one
-    table dir and every table dir lists a non-empty data file. A table
-    dir with none is a write still in progress, which the reader would
-    fail on. Discovery polls while producers and cleanup run, so a dir
-    or file vanishing mid-walk reads as not complete."""
+    """True when both sides of ``ts_dir`` list (``_list_side``).
+    Discovery polls while producers and cleanup run, so a dir or file
+    vanishing mid-walk reads as not complete."""
     try:
         for side in ("nodes", "relationships"):
-            tables = _subdirs(ts_dir / side)
-            if not tables or any(_list_table(t)[2] == 0 for t in tables):
-                return False
-    except OSError:
+            _list_side(ts_dir / side)
+    except (OSError, ValueError):
         return False
     return True
 
@@ -383,36 +312,42 @@ def _footer_schema(path: str, conf: dict[str, bool]) -> T.StructType | None:
 def _read_side(
     spark: SparkSession,
     side_dir: Path,
-    read: Callable[..., DataFrame],
+    normalize: Callable[[DataFrame], DataFrame],
     conf: dict[str, bool],
 ) -> tuple[DataFrame, int]:
-    """Every label (or type) dir under ``side_dir`` through ``read``,
-    unioned by name, and the bytes of their data files."""
-    frames, nbytes = [], 0
-    for table_dir in _subdirs(side_dir):
-        fmt, files, size = _list_table(table_dir)
-        schema = _footer_schema(files[0], conf) if fmt == "parquet" and files else None
-        frames.append(read(spark, str(table_dir), fmt=fmt, schema=schema))
-        nbytes += size
+    """Every label (or type) dir under ``side_dir`` read as Parquet and
+    normalized, unioned by name with missing property columns
+    null-filled (the reference loads each dir separately and the server
+    unions; here the engine gets ONE relation per side), and the bytes
+    of their data files."""
+    frames, total = [], 0
+    for table_dir, files, nbytes in _list_side(side_dir):
+        schema = _footer_schema(files[0], conf)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        frames.append(normalize(reader.parquet(str(table_dir))))
+        total += nbytes
     out = functools.reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
     )
-    return out, nbytes
+    return out, total
 
 
 def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame, DataFrame]:
     """Load one complete snapshot as (nodes, edges) DataFrames with the
-    engine's named schema, all labels/types unioned; each label/type dir
-    may independently be parquet, orc, csv, or json (auto-detected).
-    Each side has one partition per ``spark.sql.files.openCostInBytes``
-    of data, or Spark's own splits where those are fewer; parquet dirs
-    cost no Spark job. Each side is pinned by the first job that runs
-    over it; ``unpin`` releases it (see the module docstring)."""
+    engine's named schema, all labels/types unioned. Spark lists each
+    table dir here, once, and every job over the frames reads that
+    list. Each side has one partition per
+    ``spark.sql.files.openCostInBytes`` of data, or Spark's own splits
+    where those are fewer, and building it costs no Spark job. Each side
+    is pinned by the first job that runs over it; ``unpin`` releases it
+    (see the module docstring). A side or table dir that lists no data
+    file raises ``ValueError`` naming it; a file that is not Parquet
+    fails the footer read here or the first job."""
     conf = _inference_conf(spark)
     open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
     root = Path(snapshot.path)
-    nodes, node_bytes = _read_side(spark, root / "nodes", read_nodes, conf)
-    edges, edge_bytes = _read_side(spark, root / "relationships", read_edges, conf)
+    nodes, node_bytes = _read_side(spark, root / "nodes", normalize_nodes, conf)
+    edges, edge_bytes = _read_side(spark, root / "relationships", normalize_edges, conf)
 
     def pinned(df: DataFrame, nbytes: int) -> DataFrame:
         parts = max(1, math.ceil(nbytes / open_cost))

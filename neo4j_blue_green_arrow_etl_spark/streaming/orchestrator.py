@@ -25,8 +25,11 @@ and drain: the ``OrchestratorStats`` counters,
 ``tasks``, the last ``_TASK_LOG_LEN`` finished attempts, oldest first,
 each ``{db, state, attempt, duration_s, alias_switched, cleaned_up,
 error}``. ``state`` is ``completed``, ``retrying`` (load failed,
-re-queued with backoff), ``failed`` (retries exhausted) or ``deferred``
-(health gate closed: ``error`` is its reason, no retry consumed);
+re-queued with backoff), ``failed`` (retries exhausted), ``deferred``
+(health gate closed: ``error`` is its reason, no retry consumed) or
+``interrupted`` (Ctrl-C or another ``BaseException`` during the attempt:
+``error`` is its type name, the task goes back to the head of the queue
+with no retry consumed, and the exception propagates);
 ``attempt`` counts from 1 and ``duration_s`` is on the orchestrator clock.
 
 The loop is deliberately driver-side: snapshot arrival is control-plane
@@ -59,7 +62,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import DEFAULTS, validate_config
-from ..plans.catalog import DeploymentCatalog, db_name
+from ..plans.catalog import DeploymentCatalog
 from ..sources.snapshot import SnapshotRef, discover_snapshots, read_snapshot
 
 _TASK_LOG_LEN = 50  # attempts kept under "tasks" in status.json
@@ -227,22 +230,22 @@ class Orchestrator:
         load_snapshot, orchestrator.py:300-362)."""
         ref = task.snapshot
         started, attempt = self.clock(), task.retry_count + 1
-        switched, cleaned, error = False, 0, None
-        healthy, reason = self.check_health()
-        if not healthy:
-            # Health pressure is not the task's fault: re-queue with
-            # backoff WITHOUT consuming a retry, so a snapshot is never
-            # permanently failed by sustained pressure (e.g. databases
-            # at max). Retries are reserved for actual load errors
-            # (reference re-queues on health failure without counting,
-            # orchestrator.py:310-316).
-            task.last_error = f"health gate: {reason}"
-            task.not_before = self.clock() + self.cfg["retry_backoff_base"]
-            self._queue.append(task)
-            self.stats.health_deferred += 1
-            state, error = "deferred", reason
-        else:
-            try:
+        state, switched, cleaned, error = "interrupted", False, 0, None
+        try:
+            healthy, reason = self.check_health()
+            if not healthy:
+                # Health pressure is not the task's fault: re-queue with
+                # backoff WITHOUT consuming a retry, so a snapshot is never
+                # permanently failed by sustained pressure (e.g. databases
+                # at max). Retries are reserved for actual load errors
+                # (reference re-queues on health failure without counting,
+                # orchestrator.py:310-316).
+                task.last_error = f"health gate: {reason}"
+                task.not_before = self.clock() + self.cfg["retry_backoff_base"]
+                self._queue.append(task)
+                self.stats.health_deferred += 1
+                state, error = "deferred", reason
+            else:
                 self.load_fn(self.spark, ref, self.catalog)
                 if self._is_latest_deployment(ref):
                     self.catalog.set_alias(ref.customer_id, ref.timestamp)
@@ -256,18 +259,27 @@ class Orchestrator:
                 self.stats.cleaned_up += cleaned
                 self.stats.completed += 1
                 state = "completed"
-            except Exception as e:
-                error = str(e)
-                state = self._fail(task, error)
-        self.task_log.append({
-            "db": ref.database,
-            "state": state,
-            "attempt": attempt,
-            "duration_s": round(self.clock() - started, 3),
-            "alias_switched": switched,
-            "cleaned_up": cleaned,
-            "error": error,
-        })
+        except Exception as e:
+            error = str(e)
+            state = self._fail(task, error)
+        except BaseException as e:
+            # Ctrl-C: pyspark cancels the running jobs and raises
+            # KeyboardInterrupt here, after ``_drain`` took the task off
+            # the queue. Put it back at the head, with no retry consumed,
+            # so ``stop`` loads it; the interrupt still ends the cycle.
+            error = type(e).__name__
+            self._queue.insert(0, task)
+            raise
+        finally:
+            self.task_log.append({
+                "db": ref.database,
+                "state": state,
+                "attempt": attempt,
+                "duration_s": round(self.clock() - started, 3),
+                "alias_switched": switched,
+                "cleaned_up": cleaned,
+                "error": error,
+            })
         return state == "completed"
 
     # -- retry (ST6) ---------------------------------------------------

@@ -510,3 +510,45 @@ def test_run_scans_every_scan_interval(spark, sf_dir, data_base, tmp_path):
     assert slept == [7]
     assert orch.stats.completed == 2
     assert orch.catalog.alias_target("customer1") == "customer1-1767742000"
+
+
+def test_ctrl_c_during_a_load_is_recorded_and_requeued(
+    spark, sf_dir, data_base, tmp_path
+):
+    """Ctrl-C during a load (pyspark cancels the running jobs and raises
+    ``KeyboardInterrupt`` inside ``process_task``) records an
+    ``interrupted`` attempt and puts the task back at the head of the
+    queue without consuming a retry, so the drain that follows loads it."""
+    FX.materialize_snapshot(spark, sf_dir, data_base, "customer2", 1767741427)
+    calls = []
+
+    def interrupted_once(spark_, ref, catalog):
+        calls.append(ref.database)
+        if len(calls) == 1:
+            raise KeyboardInterrupt
+        orchestrator.load_snapshot(spark_, ref, catalog)
+
+    orch = Orchestrator(
+        spark,
+        data_base,
+        catalog=DeploymentCatalog(spark, tmp_path / "catalog.json"),
+        load_fn=interrupted_once,
+    )
+    with pytest.raises(KeyboardInterrupt):
+        orch.run_cycle()
+    assert orch.task_log[-1]["db"] == "customer1-1767741427"
+    assert orch.task_log[-1]["state"] == "interrupted"
+    assert [t.snapshot.database for t in orch._queue] == [
+        "customer1-1767741427",
+        "customer2-1767741427",
+    ]
+    assert orch._queue[0].retry_count == 0
+
+    assert orch.stop() is True
+    assert orch.stats.completed == 2
+    assert orch.stats.retried == 0 and orch.stats.failed == 0
+    assert [(t["db"], t["state"], t["attempt"]) for t in orch.task_log] == [
+        ("customer1-1767741427", "interrupted", 1),
+        ("customer1-1767741427", "completed", 1),
+        ("customer2-1767741427", "completed", 1),
+    ]

@@ -114,111 +114,6 @@ def test_property_schema_evolution_across_snapshots(spark, tmp_path):
     assert "region" in v2.columns and v2.count() == 5
 
 
-def test_csv_and_json_snapshot_formats_match_parquet(spark, sf_dir, tmp_path):
-    """Multi-format ingestion: the same snapshot delivered as CSV
-    (positional, header) or NDJSON (named contract) must normalize to
-    exactly the parquet-read result; mixing formats across label dirs
-    of one snapshot also works (auto-detected per dir)."""
-    from neo4j_blue_green_arrow_etl_spark import fixtures as FX
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
-        SnapshotRef,
-        read_snapshot,
-    )
-
-    base = str(tmp_path / "pq")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
-    ref_pq = SnapshotRef("acme", 100, f"{base}/acme/100")
-    want_nodes, want_edges = read_snapshot(spark, ref_pq)
-    want_n = sorted(
-        (r.nodeId, ",".join(r.labels)) for r in want_nodes.collect()
-    )
-    want_e = want_edges.count()
-
-    # same tree re-materialized as csv nodes + json edges (named form)
-    mixed = tmp_path / "mixed" / "acme" / "100"
-    for d in Path(f"{base}/acme/100/nodes").iterdir():
-        raw = spark.read.parquet(str(d))
-        raw.coalesce(1).write.option("header", True).csv(
-            str(mixed / "nodes" / d.name)
-        )
-    for d in Path(f"{base}/acme/100/relationships").iterdir():
-        raw = spark.read.parquet(str(d))
-        named = raw.toDF(
-            "sourceNodeId", "targetNodeId", "relationshipType", *raw.columns[3:]
-        )
-        named.coalesce(1).write.json(str(mixed / "relationships" / d.name))
-    got_nodes, got_edges = read_snapshot(
-        spark, SnapshotRef("acme", 100, str(mixed))
-    )
-    got_n = sorted((r.nodeId, ",".join(r.labels)) for r in got_nodes.collect())
-    assert got_n == want_n
-    assert got_edges.count() == want_e
-    assert got_edges.columns[:3] == ["sourceNodeId", "targetNodeId", "relationshipType"]
-
-
-def test_json_nodes_missing_named_columns_rejected(spark, tmp_path):
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import read_nodes
-
-    p = tmp_path / "bad_json"
-    spark.range(3).toDF("some_col").write.json(str(p))
-    with pytest.raises(ValueError, match="lacks required columns"):
-        read_nodes(spark, str(p), fmt="json")
-
-
-def test_orc_snapshot_format_matches_parquet(spark, sf_dir, tmp_path):
-    """ORC is column-order-preserving like parquet, so the positional
-    contract applies directly; an ORC-delivered snapshot must normalize
-    to the same result as the parquet original."""
-    from neo4j_blue_green_arrow_etl_spark import fixtures as FX
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
-        SnapshotRef,
-        read_snapshot,
-    )
-
-    base = str(tmp_path / "pq")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
-    ref_pq = SnapshotRef("acme", 100, f"{base}/acme/100")
-    want_nodes, want_edges = read_snapshot(spark, ref_pq)
-    want_n = sorted((r.nodeId, ",".join(r.labels)) for r in want_nodes.collect())
-    want_e = want_edges.count()
-
-    orc = tmp_path / "orc" / "acme" / "100"
-    for kind in ("nodes", "relationships"):
-        for d in Path(f"{base}/acme/100/{kind}").iterdir():
-            spark.read.parquet(str(d)).coalesce(1).write.orc(
-                str(orc / kind / d.name)
-            )
-    got_nodes, got_edges = read_snapshot(spark, SnapshotRef("acme", 100, str(orc)))
-    got_n = sorted((r.nodeId, ",".join(r.labels)) for r in got_nodes.collect())
-    assert got_n == want_n
-    assert got_edges.count() == want_e
-
-
-def test_orc_snapshot_is_discoverable(spark, sf_dir, tmp_path):
-    """An ORC-only snapshot is discoverable as well as readable: the
-    completeness gate lists table dirs with the reader's own listing,
-    which accepts every format the reader does."""
-    from neo4j_blue_green_arrow_etl_spark import fixtures as FX
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
-        SnapshotRef,
-        read_snapshot,
-    )
-
-    base = str(tmp_path / "pq")
-    FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
-    orc_base = tmp_path / "orcbase"
-    orc = orc_base / "acme" / "100"
-    for kind in ("nodes", "relationships"):
-        for d in Path(f"{base}/acme/100/{kind}").iterdir():
-            spark.read.parquet(str(d)).coalesce(1).write.orc(
-                str(orc / kind / d.name)
-            )
-    found = discover_snapshots(str(orc_base))
-    assert found == [SnapshotRef("acme", 100, str(orc))]
-    nodes, edges = read_snapshot(spark, found[0])
-    assert nodes.count() > 0 and edges.count() > 0
-
-
 def _all_types_table():
     """One row of each Arrow type a snapshot's parquet footer can carry."""
     import datetime
@@ -324,22 +219,23 @@ def test_read_snapshot_matches_inferred_read(spark, sf_dir, tmp_path):
     schema inference."""
     import functools
 
-    from neo4j_blue_green_arrow_etl_spark.sources import read_edges, read_nodes
-
     base = str(tmp_path / "data")
     FX.materialize_snapshot(spark, sf_dir, base, "acme", 100)
     root = Path(base, "acme", "100")
     nodes, edges = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
 
-    def inferred(side, read):
-        frames = [read(spark, str(d)) for d in sorted((root / side).iterdir())]
+    def inferred(side, normalize):
+        frames = [
+            normalize(spark.read.parquet(str(d)))
+            for d in sorted((root / side).iterdir())
+        ]
         return functools.reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
         )
 
     for got, want in (
-        (nodes, inferred("nodes", read_nodes)),
-        (edges, inferred("relationships", read_edges)),
+        (nodes, inferred("nodes", normalize_nodes)),
+        (edges, inferred("relationships", normalize_edges)),
     ):
         assert got.schema == want.schema
         assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
@@ -404,7 +300,8 @@ def test_small_snapshot_reads_as_one_partition_per_side(spark, tmp_path):
     side reads as one partition per side; with the open cost lowered the
     same snapshot keeps Spark's own splits (at least one per file), so
     the rule follows the session conf and never merges large inputs.
-    Hidden files beside the data change neither format nor schema."""
+    Hidden files beside the data change neither the listing nor the
+    schema."""
     from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
         _footer_schema,
         _inference_conf,
@@ -430,9 +327,9 @@ def test_small_snapshot_reads_as_one_partition_per_side(spark, tmp_path):
 
     entity = root / "nodes" / "Entity"
     assert (entity / ".part-00000.parquet.crc").is_file()
-    fmt, data, nbytes = _list_table(entity)
+    data, nbytes = _list_table(entity)
     parts = sorted(str(p) for p in entity.glob("part-*.parquet"))
-    assert (fmt, data) == ("parquet", parts)
+    assert data == parts
     assert nbytes == sum(Path(p).stat().st_size for p in parts)
     schema = _footer_schema(data[0], _inference_conf(spark))
     assert schema == spark.read.parquet(str(entity)).schema
@@ -489,6 +386,80 @@ def test_discovery_admits_only_what_the_reader_lists(spark, tmp_path, case):
         return
     assert discover_snapshots(tmp_path) == [SnapshotRef("acme", 100, str(root))]
     for table_dir in root.glob("*/*"):
-        assert _list_table(table_dir)[1], table_dir
+        assert _list_table(table_dir)[0], table_dir
     nodes, edges = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
     assert nodes.count() == 3_000 and edges.count() == 7_000
+
+
+def test_stray_non_parquet_file_fails_the_load(spark, tmp_path):
+    """A snapshot is Parquet only (reference neo4j_pq.py:275). A stray
+    ``notes.csv`` beside the parts fails the read loudly, and a Flight
+    load of the snapshot registers nothing and leaves no graph on the
+    server."""
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.flight_server import (
+        InMemoryGraphFlightServer,
+    )
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
+
+    root = tmp_path / "acme" / "100"
+    _write_small_snapshot(spark, root)
+    (root / "nodes" / "Entity" / "notes.csv").write_text("id,labels\nE0,Entity\n")
+    ref = SnapshotRef("acme", 100, str(root))
+    with pytest.raises(ValueError, match="(?i)parquet"):
+        read_snapshot(spark, ref)
+
+    server = InMemoryGraphFlightServer()
+    try:
+        catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+        with pytest.raises(ValueError, match="(?i)parquet"):
+            flight_load_fn("127.0.0.1", server.port)(spark, ref, catalog)
+        assert server.graphs == {}
+        assert not catalog.database_exists("acme-100")
+    finally:
+        server.shutdown()
+
+
+@pytest.mark.parametrize("emptied", ["relationships", "relationships/KNOWS"])
+def test_reader_names_the_dir_that_lists_no_data(spark, tmp_path, emptied):
+    """The CLI ``load`` command and a restarted catalog read a tree
+    without the discovery gate. A side with no type dir, or a type dir
+    with no data file, fails with one ``ValueError`` that names that
+    dir."""
+    import re
+
+    root = tmp_path / "acme" / "100"
+    _write_small_snapshot(spark, root)
+    target = root / emptied
+    shutil.rmtree(target)
+    target.mkdir()
+    with pytest.raises(ValueError, match=re.escape(f"{target} ")):
+        read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
+
+
+def test_the_file_list_is_fixed_when_the_frame_is_built(spark, tmp_path):
+    """Spark lists each table dir once, when ``read_snapshot`` builds the
+    frame, and every later job reads that list: the unpinned side's
+    ``inputFiles()`` are exactly what ``_list_table`` lists, and a part
+    that lands after the read is not counted by the load's first job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
+        _inference_conf,
+        _list_table,
+        _read_side,
+    )
+
+    root = tmp_path / "acme" / "100"
+    _write_small_snapshot(spark, root)
+    side, _ = _read_side(spark, root / "nodes", normalize_nodes, _inference_conf(spark))
+    listed = [f for d in (root / "nodes").iterdir() for f in _list_table(d)[0]]
+    assert sorted(f.removeprefix("file://") for f in side.inputFiles()) == sorted(listed)
+
+    ref = SnapshotRef("acme", 100, str(root))
+    nodes, _ = read_snapshot(spark, ref)
+    landed = pa.table({"id": [9_000], "labels": ["Entity"], "score": [0.5]})
+    pq.write_table(landed, root / "nodes" / "Entity" / "part-00002.parquet")
+    assert nodes.count() == 3_000
+    assert read_snapshot(spark, ref)[0].count() == 3_001
