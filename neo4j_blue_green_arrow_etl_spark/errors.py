@@ -1,10 +1,9 @@
-"""Typed error taxonomy for sink/catalog operations.
+"""Typed errors the catalog, the sink and the CLI raise or catch.
 
-Capability parity with the reference's Flight error interpreter
-(reference neo4j_arrow_error.py:17-30): map transport/catalog error
-message substrings to typed exceptions so callers can branch on
-semantics ("already exists" is idempotent-ok, "not found" may be
-ignorable on abort) instead of string-matching at every call site.
+The reference's Flight error interpreter (neo4j_arrow_error.py:17-30)
+maps status strings to exception types. It is not carried over: the
+sink handles exactly one Flight status itself, NOT_FOUND on abort
+(``FlightGraphSink._abort``).
 """
 
 from __future__ import annotations
@@ -18,16 +17,8 @@ class NotFoundError(EngineError):
     """Entity (database/table/alias/import) does not exist."""
 
 
-class AlreadyExistsError(EngineError):
-    """Entity already exists; often ignorable for idempotent flows."""
-
-
 class InvalidArgumentError(EngineError):
     """Caller supplied a bad name/config/schema."""
-
-
-class InternalError(EngineError):
-    """Server/engine-side failure."""
 
 
 class SinkIntegrityError(EngineError):
@@ -35,75 +26,3 @@ class SinkIntegrityError(EngineError):
     executors streamed — the signature of a half-committed stream from
     a killed/retried writer task. The load must be aborted, not
     finalized."""
-
-
-class UnknownError(EngineError):
-    """Unclassified failure."""
-
-
-_CLASSIFIERS: tuple[tuple[str, type[EngineError]], ...] = (
-    ("NOT_FOUND", NotFoundError),
-    ("DOES NOT EXIST", NotFoundError),
-    ("ALREADY_EXISTS", AlreadyExistsError),
-    ("ALREADY EXISTS", AlreadyExistsError),
-    ("INVALID_ARGUMENT", InvalidArgumentError),
-    ("INVALID ARGUMENT", InvalidArgumentError),
-    ("INTERNAL", InternalError),
-)
-
-
-def interpret(exc: Exception) -> EngineError:
-    """Classify an arbitrary exception into the typed taxonomy by
-    message substring (case-insensitive), preserving the original as
-    ``__cause__``."""
-    msg = str(exc)
-    upper = msg.upper()
-    for marker, cls in _CLASSIFIERS:
-        if marker in upper:
-            err = cls(msg)
-            err.__cause__ = exc
-            return err
-    err = UnknownError(msg)
-    err.__cause__ = exc
-    return err
-
-
-def retry_on_failure(
-    max_retries: int = 10,
-    delay: float = 3.0,
-    backoff: float = 1.0,
-    retry_on: tuple[type[BaseException], ...] = (Exception,),
-    sleep=None,
-):
-    """Driver-side retry decorator for control-plane actions (capability
-    parity with the reference's @retry_on_failure on CREATE_DATABASE,
-    neo4j_arrow_client.py:208-225; its fixed 3 s delay is the
-    ``backoff=1.0`` case — pass backoff>1 for exponential).
-
-    ``max_retries`` is the TOTAL attempt budget, matching the
-    reference's ``for attempt in range(max_retries)`` loop: the
-    wrapped call runs at most ``max_retries`` times.
-
-    Never used on the distributed data path: executor-side retries are
-    Spark task retries. ``sleep`` is injectable for tests."""
-    import functools
-    import time as _time
-
-    sleep = sleep or _time.sleep
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            attempt = 0
-            while True:
-                try:
-                    return fn(*args, **kwargs)
-                except retry_on as exc:
-                    attempt += 1
-                    if attempt >= max_retries:
-                        raise
-                    sleep(delay * (backoff ** (attempt - 1)))
-
-        return wrapper
-
-    return deco

@@ -39,6 +39,7 @@ import os
 import re
 import tempfile
 import time
+import warnings
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,24 +110,33 @@ class DeploymentCatalog:
         its source_path and re-points alias views. Deployments loaded
         without a source_path (data handed in as DataFrames) cannot be
         restored and are dropped from the catalog — better an honest
-        catalog than a listed-but-unqueryable database. Pins die with
-        the session too: each restored deployment is pinned again at its
-        first read, from ``source_path`` as it is now."""
+        catalog than a listed-but-unqueryable database. So is one whose
+        source fails to read (``OSError``/``ValueError``): one damaged
+        tree must not stop the rest of the catalog from restoring. Each
+        drop warns with its reason. Pins die with the session too: each
+        restored deployment is pinned again at its first read, from
+        ``source_path`` as it is now."""
         from ..sources.snapshot import SnapshotRef, read_snapshot
 
         dead = []
         for name, meta in self._deployments.items():
             src = meta.get("source_path")
+            reason = f"source {src} is gone" if src else "no source_path recorded"
             if src and Path(src).exists():
                 ref = SnapshotRef(meta["customer_id"], int(meta["timestamp"]), src)
-                self._create_views(
-                    ref.customer_id, ref.timestamp, *read_snapshot(self.spark, ref)
-                )
-            elif not self.spark.catalog.tableExists(
+                try:
+                    sides = read_snapshot(self.spark, ref)
+                except (OSError, ValueError) as exc:
+                    reason = f"source {src} failed to read: {exc}"
+                else:
+                    self._create_views(ref.customer_id, ref.timestamp, *sides)
+                    continue
+            if not self.spark.catalog.tableExists(
                 _view(meta["customer_id"], meta["timestamp"], "nodes")
             ):
-                # no source to rebuild from AND the session no longer has
+                # nothing to rebuild from AND the session no longer has
                 # the views: the deployment is unqueryable — drop it
+                warnings.warn(f"catalog restore drops {name}: {reason}", stacklevel=3)
                 dead.append(name)
         for name in dead:
             meta = self._deployments.pop(name)

@@ -215,31 +215,35 @@ class FlightGraphSink(GraphSink):
     # reference (@retry_on_failure on create_database,
     # neo4j_arrow_client.py:208-225, `for attempt in range(10)`): a
     # just-dropped database of the same name can linger
-    # server-side for a few seconds during blue/green churn. _sleep is
-    # injectable for tests.
+    # server-side for a few seconds during blue/green churn.
+    # _create_sleep is injectable for tests.
     _create_sleep = None
 
     def _create(self) -> None:
-        from ..errors import retry_on_failure
+        import time
 
-        @retry_on_failure(max_retries=10, delay=3.0, sleep=self._create_sleep)
-        def do_create():
-            # config mirrors the reference's create_database defaults
-            # (neo4j_arrow_client.py:231-239)
-            self._action(
-                "CREATE_DATABASE",
-                {
-                    "name": self.database,
-                    "concurrency": 4,
-                    "high_io": True,
-                    "force": True,
-                    "record_format": "aligned",
-                    "id_property": "id",
-                    "id_type": "INTEGER",
-                },
-            )
-
-        do_create()
+        sleep = self._create_sleep or time.sleep
+        for attempt in range(1, 11):
+            try:
+                # config mirrors the reference's create_database defaults
+                # (neo4j_arrow_client.py:231-239)
+                self._action(
+                    "CREATE_DATABASE",
+                    {
+                        "name": self.database,
+                        "concurrency": 4,
+                        "high_io": True,
+                        "force": True,
+                        "record_format": "aligned",
+                        "id_property": "id",
+                        "id_type": "INTEGER",
+                    },
+                )
+                return
+            except Exception:
+                if attempt == 10:
+                    raise
+                sleep(3.0)
 
     def _nodes_done(self) -> dict:
         return self._action("NODE_LOAD_DONE", {"name": self.database})

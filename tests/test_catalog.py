@@ -141,11 +141,52 @@ def test_restart_drops_unrestorable_deployments(spark, small_dfs, tmp_path):
     for v in spark.catalog.listTables():
         if v.isTemporary:
             spark.catalog.dropTempView(v.name)
-    cat2 = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    with pytest.warns(UserWarning, match="ephem-100: no source_path recorded"):
+        cat2 = DeploymentCatalog(spark, tmp_path / "catalog.json")
     assert cat2.list_databases() == []
     assert cat2.alias_target("ephem") is None
     with pytest.raises(NotFoundError):
         cat2.count_via_alias("ephem")
+
+
+def test_restart_drops_only_the_deployment_whose_source_fails_to_read(spark, tmp_path):
+    """One damaged source tree must not stop the whole catalog from
+    restoring: the deployment that fails to read is dropped with a
+    warning (its alias too), and every other deployment keeps serving
+    through its alias."""
+    import shutil
+
+    from neo4j_blue_green_arrow_etl_spark.fixtures import materialize_snapshot
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
+        SnapshotRef,
+        read_snapshot,
+    )
+
+    base = tmp_path / "data"
+    manifest = tmp_path / "catalog.json"
+    cat = DeploymentCatalog(spark, manifest)
+    for cust in ("acme", "globex"):
+        snap = materialize_snapshot(spark, "/root/testdata/sf0.001", str(base), cust, 100)
+        nodes, edges = read_snapshot(spark, SnapshotRef(cust, 100, snap))
+        cat.register_deployment(cust, 100, nodes, edges, source_path=snap)
+        cat.set_alias(cust, 100)
+    globex_nodes = cat.count_via_alias("globex", "nodes")
+
+    rel_dir = next((base / "acme" / "100" / "relationships").iterdir())
+    shutil.rmtree(rel_dir)
+    rel_dir.mkdir()
+    for v in spark.catalog.listTables():
+        if v.isTemporary:
+            spark.catalog.dropTempView(v.name)
+
+    with pytest.warns(UserWarning, match="acme-100"):
+        cat2 = DeploymentCatalog(spark, manifest)
+    assert cat2.count_via_alias("globex", "nodes") == globex_nodes
+    assert cat2.list_databases() == ["globex-100"]
+    assert cat2.list_aliases() == {"globex": "globex-100"}
+    state = json.loads(manifest.read_text())
+    assert sorted(state["deployments"]) == ["globex-100"]
+    assert state["aliases"] == {"globex": "globex-100"}
 
 
 def test_customer_ids_with_double_underscore_rejected(spark, tmp_path):

@@ -1,8 +1,11 @@
-"""Render BENCH_METRICS_r*.json into SHUFFLE.md — measured per-query
+"""Render a bench metrics JSON into SHUFFLE.md — measured per-query
 shuffle/input/spill volumes, the runtime counterpart of PLANSTATS'
 compile-time shuffle counts.
 
-Usage: python tools/bench_report.py [BENCH_METRICS_r3.json] > SHUFFLE.md
+Usage: python tools/bench_report.py METRICS.json > SHUFFLE.md
+
+METRICS.json is a bench.py run with SPARK_GRAFT_BENCH_METRICS=1 and
+SPARK_GRAFT_BENCH_OUT=METRICS.json.
 
 The table is evidence for the per-operator scale claims in SCALING.md:
 a query documented as "map-only" should show ~zero shuffle beyond its
@@ -32,7 +35,9 @@ def fmt(n: int | None) -> str:
 
 
 def main() -> None:
-    src = Path(sys.argv[1] if len(sys.argv) > 1 else "BENCH_METRICS_r3.json")
+    if len(sys.argv) != 2:
+        raise SystemExit("usage: python tools/bench_report.py METRICS.json > SHUFFLE.md")
+    src = Path(sys.argv[1])
     d = json.loads(src.read_text())
     metrics = d.get("stage_metrics")
     if not metrics:
