@@ -16,9 +16,8 @@ Layout:
               multimodal plumbing
   functions/  scalar helpers mirroring the reference's function surface
   plans/      deployment catalog + blue/green alias manager
-  streaming/  the blue/green orchestrator loop, plus the streaming ingest
-              pipelines behind registry queries q_st6-q_st9 and the
-              retract-ingest command
+  streaming/  the blue/green orchestrator loop, plus the ingest
+              pipelines behind registry queries q_st6-q_st9
   sinks/      two-phase graph sink interface and its Arrow Flight (Neo4j
               GDS) adapter, plus an in-process Flight server for tests
 """

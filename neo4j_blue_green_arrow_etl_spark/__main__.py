@@ -216,102 +216,6 @@ def cmd_sql(args) -> int:
     return 0
 
 
-def cmd_curate(args) -> int:
-    """Training-corpus curation as an operational job: canonical-dedup
-    -> quality-filter -> content-hash split (optionally benchmark
-    decontamination), written as split-partitioned parquet with a
-    machine-readable stats sidecar — the batch product the declared
-    q_x7/q_x8 queries are the oracle-gated form of."""
-    from pyspark.sql import functions as F
-
-    from .operators.pipeline import curate_corpus
-    from .session import get_spark
-
-    spark = get_spark("curate")
-    curated = curate_corpus(
-        spark,
-        args.sf_dir,
-        quality_floor=args.quality_floor,
-        decontaminate=args.decontam,
-    )
-    writer = curated.write.partitionBy("split").mode("overwrite")
-    if args.format == "jsonl":
-        writer.json(args.out)  # newline-delimited JSON, the shard
-        # format most training loaders consume directly
-        reader = spark.read.schema(curated.schema).json
-    else:
-        writer.parquet(args.out)
-        reader = spark.read.schema(curated.schema).parquet
-    # explicit schema: a floor/decontam combination that filters every
-    # document writes zero part files, and a schemaless re-read of an
-    # empty partitioned dir cannot infer one
-    written = reader(args.out)
-    stats_rows = (
-        written.groupBy("split")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.round(F.avg("quality_score"), 4).alias("avg_quality"),
-        )
-        .orderBy("split")
-        .collect()
-    )
-    stats = {
-        r.split: {
-            "n_docs": r.n_docs,
-            "n_tokens": r.n_tokens,
-            "avg_quality": r.avg_quality,
-        }
-        for r in stats_rows
-    }
-    source_total = spark.read.parquet(
-        f"{args.sf_dir}/documents.parquet"
-    ).count()
-    payload = {
-        "source_docs": source_total,
-        "curated_docs": sum(s["n_docs"] for s in stats.values()),
-        "decontaminated": args.decontam,
-        "quality_floor": args.quality_floor,
-        "format": args.format,
-        "splits": stats,
-    }
-    Path(args.out, "_curation_stats.json").write_text(
-        json.dumps(payload, indent=2)
-    )
-    print(json.dumps(payload))
-    return 0
-
-
-def cmd_retract_ingest(args) -> int:
-    """Drain a mixed doc/retract event stream through the
-    retraction-aware near-dup admission pipeline
-    (streaming/retract_ingest.py) and print a JSON summary. Safe to
-    re-run: the checkpoint makes an unchanged input directory a
-    no-op, and a replayed batch rewrites its own outputs."""
-    from .session import get_spark
-    from .streaming.neardup_ingest import admitted_ids
-    from .streaming.retract_ingest import live_corpus, stream_retract_ingest
-
-    spark = get_spark("retract-ingest")
-    stream_retract_ingest(
-        spark,
-        args.input,
-        args.state,
-        args.out,
-        args.checkpoint,
-        compact_every=args.compact_every,
-    )
-    admitted = admitted_ids(spark, args.out).count()
-    live = live_corpus(spark, args.out).count()
-    payload = {
-        "admitted": admitted,
-        "live": live,
-        "retracted_from_corpus": admitted - live,
-    }
-    print(json.dumps(payload))
-    return 0
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(
         prog="python -m neo4j_blue_green_arrow_etl_spark",
@@ -376,51 +280,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     sp.add_argument("--limit", type=int, default=100)
     sp.set_defaults(fn=cmd_sql)
-
-    sp = sub.add_parser(
-        "curate",
-        help="curate a training corpus: dedup + quality + split "
-        "(+ optional decontam), written as split-partitioned parquet",
-    )
-    sp.add_argument(
-        "--sf-dir",
-        default="/root/testdata/sf0.001",
-        help="directory containing documents.parquet",
-    )
-    sp.add_argument("--out", required=True, help="output corpus directory")
-    sp.add_argument("--quality-floor", type=float, default=0.5)
-    sp.add_argument(
-        "--format",
-        choices=("parquet", "jsonl"),
-        default="parquet",
-        help="output shard format (jsonl = newline-delimited JSON)",
-    )
-    sp.add_argument(
-        "--decontam",
-        action="store_true",
-        help="drop documents sharing benchmark n-grams (q_x8 semantics)",
-    )
-    sp.set_defaults(fn=cmd_curate)
-
-    sp = sub.add_parser(
-        "retract-ingest",
-        help="drain a mixed doc/retract event stream through the "
-        "near-dup admission pipeline (exactly-once tombstones; live "
-        "corpus = admitted minus retracted)",
-    )
-    sp.add_argument(
-        "--input", required=True,
-        help="event file-stream dir: parquet (kind, doc_id, text), "
-        "one file per micro-batch",
-    )
-    sp.add_argument("--state", required=True, help="bucketed state index dir")
-    sp.add_argument("--out", required=True, help="admitted/ledger record dir")
-    sp.add_argument("--checkpoint", required=True)
-    sp.add_argument(
-        "--compact-every", type=int, default=None,
-        help="fold state + corpus record every K batches",
-    )
-    sp.set_defaults(fn=cmd_retract_ingest)
 
     args = p.parse_args(argv)
     from .errors import EngineError

@@ -94,10 +94,20 @@ def validate_config(config: dict[str, Any]) -> None:
     """Fail fast on nonsensical orchestrator settings (reference
     orchestrator.py:500-521 validates the same fields)."""
     orch = config.get("orchestrator", {})
-    for key in ("scan_interval", "max_concurrent_loads", "max_retries", "shutdown_timeout"):
+    for key in ("scan_interval", "shutdown_timeout"):
         val = orch.get(key)
         if not isinstance(val, (int, float)) or val < 0:
             raise ConfigError(f"orchestrator.{key} must be a non-negative number, got {val!r}")
+    # counts the orchestrator slices and compares with: a float or a
+    # string here fails every load, and a negative keep_count slices
+    # from the wrong end
+    for key in ("max_concurrent_loads", "max_retries", "max_databases", "keep_count"):
+        val = orch.get(key)
+        if isinstance(val, bool) or not isinstance(val, int) or val < 0:
+            raise ConfigError(f"orchestrator.{key} must be a non-negative int, got {val!r}")
+    pct = orch.get("heap_threshold_percent")
+    if isinstance(pct, bool) or not isinstance(pct, (int, float)) or not 0 < pct <= 100:
+        raise ConfigError(f"orchestrator.heap_threshold_percent must lie in (0, 100], got {pct!r}")
     base = orch.get("retry_backoff_base", 2)
     if not isinstance(base, (int, float)) or base < 1:
         raise ConfigError("orchestrator.retry_backoff_base must be >= 1")

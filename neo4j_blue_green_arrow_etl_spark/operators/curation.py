@@ -116,8 +116,8 @@ ORDER BY doc_id
 def benchmark_gram_sets(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(corpus_grams, bench_grams): per-doc distinct word n-grams with
     an ``is_bench`` flag, and the distinct benchmark gram set — the
-    shared front half of every decontamination shape (binary q_x8,
-    graded q_x26, operational curate_corpus)."""
+    shared front half of both decontamination shapes (binary q_x8,
+    graded q_x26)."""
     grams = d.select(
         "doc_id",
         (F.col("doc_id") % BENCH_MOD == 0).alias("is_bench"),

@@ -534,21 +534,6 @@ def ngram_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(doc_id, sig array<bigint>) — k seeded xxhash64 min-hashes.
-
-    One aggregation: min of xxhash64(shingle, seed_i) per seed. All
-    JVM-side; the per-doc state is k longs regardless of doc size."""
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(seed))).alias(f"h{seed}")
-        for seed in range(k)
-    ]
-    per_doc = sh.groupBy("doc_id").agg(*aggs)
-    return per_doc.select(
-        "doc_id", F.array(*[F.col(f"h{s}") for s in range(k)]).alias("sig")
-    )
-
-
 @register(
     "q_dedup_minhash",
     oracle=None,  # hash-seeded algorithm; no SQL-expressible oracle.
@@ -1504,7 +1489,7 @@ def q_st8_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_ids=idfs[b],
         )
     return (
-        live_corpus(spark, f"{work}/out", f"{work}/state")
+        live_corpus(spark, f"{work}/out")
         .select("doc_id")
         .transform(barrier_sort("doc_id"))
     )

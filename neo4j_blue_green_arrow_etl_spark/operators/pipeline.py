@@ -208,33 +208,8 @@ def _corpus_oracle() -> str:
     "of (text-partitioned) rows however many stages compose.",
 )
 def q_x7_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE implementation of the curation composition: the oracle-gated
-    # query is a projection of the operational curate_corpus, so the
-    # CLI product and the differential-tested form cannot drift
-    return (
-        curate_corpus(spark, sf_dir)
-        .select("doc_id", "split", "n_tokens", "quality_score")
-        .orderBy("doc_id")
-    )
-
-
-def curate_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    quality_floor: float = QUALITY_FLOOR,
-    decontaminate: bool = False,
-) -> DataFrame:
-    """The operational form of q_x7_corpus: same canonical-dedup →
-    quality-filter → content-hash-split composition, but carrying the
-    full document payload (text/lang/source) so the result can be
-    WRITTEN as a training corpus (CLI ``curate`` partitions it by
-    split). ``decontaminate=True`` additionally drops documents sharing
-    any benchmark n-gram (q_x8's broadcast semi→anti shape). Still one
-    text-partitioned shuffle + map-only expressions; the optional
-    decontam adds only broadcast joins."""
     from pyspark.sql import Window
 
-    from .curation import BENCH_MOD, contaminated_doc_ids
     from .textops import PUNCT_CLASS
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -248,14 +223,11 @@ def curate_corpus(
     )
     digit = F.substring(F.md5(F.encode("text", "UTF-8")), 1, 1)
     w = Window.partitionBy("text")
-    out = (
+    return (
         d.withColumn("_keep", F.col("doc_id") == F.min("doc_id").over(w))
-        .filter(F.col("_keep") & (score >= quality_floor))
+        .filter(F.col("_keep") & (score >= QUALITY_FLOOR))
         .select(
             "doc_id",
-            "text",
-            "lang",
-            "source",
             F.when(digit <= _TRAIN_MAX, "train")
             .when(digit <= _VAL_MAX, "val")
             .otherwise("test")
@@ -263,12 +235,8 @@ def curate_corpus(
             n_tokens.alias("n_tokens"),
             score.alias("quality_score"),
         )
+        .orderBy("doc_id")
     )
-    if decontaminate:
-        out = out.filter(F.col("doc_id") % BENCH_MOD != 0).join(
-            F.broadcast(contaminated_doc_ids(d)), "doc_id", "left_anti"
-        )
-    return out
 
 
 @register(

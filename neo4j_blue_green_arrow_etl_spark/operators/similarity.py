@@ -214,20 +214,6 @@ def _hyperplanes(n_planes: int = LSH_PLANES, dim: int = EMB_DIM) -> list[list[fl
     return planes
 
 
-def lsh_bucket(col: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from random hyperplane projections — pure
-    column expressions (dot products against literal arrays). Kept for
-    single-table/expression-only callers; q_sim_lsh uses
-    lsh_signatures, which batches ALL tables' projections into one
-    Arrow matrix multiply (the per-plane interpreted higher-order
-    dot products were the round-4 3.6x cost regression)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        proj = dot(col, F.array(*[F.lit(v) for v in p]))
-        bucket = bucket + F.when(proj >= 0, F.lit(2**i).cast("long")).otherwise(0)
-    return bucket
-
-
 def lsh_signatures(
     spark: SparkSession, e: DataFrame, tables: list[list[list[float]]]
 ) -> DataFrame:

@@ -139,7 +139,7 @@ class DeploymentCatalog:
                 warnings.warn(f"catalog restore drops {name}: {reason}", stacklevel=3)
                 dead.append(name)
         for name in dead:
-            meta = self._deployments.pop(name)
+            self._deployments.pop(name)
             self._aliases = {
                 c: n for c, n in self._aliases.items() if n != name
             }
@@ -261,8 +261,8 @@ class DeploymentCatalog:
         the same property per alias (it repoints one database alias;
         node/edge consistency there comes from both living in one
         database). Readers needing a consistent pair should resolve both
-        views inside one query (single analysis pass) or read via
-        ``read_alias``-style snapshot at a known timestamp.
+        views inside one query (single analysis pass) or read both
+        ``dep__{customer}__{ts}_*`` views of a known deployment.
 
         The alias serves the deployment's pinned rows, so a cutover reads
         no files. The generation it leaves stays pinned until retention

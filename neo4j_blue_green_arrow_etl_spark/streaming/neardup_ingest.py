@@ -101,7 +101,7 @@ def admit_batch(
     batches are filters over a parquet scan that is a redundant scan
     per micro-batch (~0.5s each measured at sf0.1). Same catch-up
     precompute slot as batch_post; callers whose micro-batch frames are
-    already in memory (the readStream shell) just omit it."""
+    already in memory just omit it."""
     table = ensure_index_table(spark, state_dir)
     batch_docs = batch_docs.select(*DOCS_STREAM_COLS)
     if batch_post is None:
@@ -163,194 +163,8 @@ def admit_batch(
         st.result()
 
 
-def stream_neardup_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    compact_every: int | None = None,
-) -> None:
-    """Drain a documents file-stream (one file per micro-batch) through
-    the near-dup admission pipeline with availableNow semantics.
-
-    ``compact_every=k`` folds the state table's sealed partitions
-    (ids < the batch about to run) every k batches — long-running
-    ingest otherwise accrues one partition of ``buckets`` small files
-    PER BATCH (dedup_index.compact_index). Compacting before the
-    in-flight batch touches only ids the checkpoint has committed, so
-    a replay can never target a folded partition; a replay OF the
-    compaction itself is idempotent (same fold, rewritten)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-        ]
-    )
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id >= compact_every and batch_id % compact_every == 0:
-            from ..operators.dedup_index import compact_index
-
-            compact_index(spark, state_dir, batch_id - 1)
-            # fold the sealed admitted record too (one tiny file per
-            # batch otherwise accretes forever)
-            compact_corpus_record(spark, out_dir, batch_id - 1)
-        admit_batch(spark, batch_df, state_dir, out_dir, batch_id)
-
-    q = (
-        docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def admitted_ids(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Every admitted doc_id on record. Readers run FINISH-ONLY fold
-    recovery (abort_incomplete=False): a committed-but-unfinished fold
-    is completed, but an IN-FLIGHT fold's manifest/temp dir is left
-    alone — so a reader racing a live stream's compact_corpus_record
-    can never yank the writer's state mid-protocol (ADVICE r9; the
-    abort path is the writer's, run at its own fold start). Reads
-    concurrent with an ACTIVELY-folding writer are still best-effort —
-    the writer may delete source files between this glob and the scan;
-    reads of a crashed or idle record are exact."""
-    _recover_record_fold(out_dir, abort_incomplete=False)
-    files = sorted(Path(out_dir).glob("admitted-b*.parquet")) + sorted(
-        Path(out_dir).glob("admitted-gen-*.parquet")
-    )
+    """Every admitted doc_id on record: the union of the sealed
+    per-batch ``admitted-b<id>.parquet`` files."""
+    files = sorted(Path(out_dir).glob("admitted-b*.parquet"))
     return spark.read.parquet(*[str(p) for p in files])
-
-
-# --------------------------------------------------------------------------
-# Corpus-record compaction: the out_dir twin of the state-table fold.
-# A long-running ingest otherwise accretes one admitted file (and, on
-# the retraction pipeline, one ledger file) PER BATCH forever — at
-# production batch cadence that is millions of tiny files. Sealed
-# per-batch files below a watermark fold into one generation file per
-# prefix, with a manifest protocol so a crash in any window leaves the
-# record readable and duplicate-free (same shape as
-# dedup_index.compact_index):
-#
-#   write consolidated rows to a "."-prefixed temp dir (invisible)
-#   -> write _RECORD_FOLD manifest {prefix, sources, gen}
-#   -> rename the temp's part file to <prefix>-gen-<uuid>.parquet
-#   -> delete the listed sources -> delete the manifest
-#
-# Recovery: manifest + gen present -> finish (delete sources,
-# manifest); manifest present, gen absent -> the fold never committed.
-# Only the WRITER (compact_corpus_record, at its own fold start) may
-# ABORT that case (delete manifest + temp; sources intact): a READER
-# racing a live writer cannot distinguish "crashed" from "in flight",
-# so readers are FINISH-ONLY and leave an uncommitted fold untouched
-# (ADVICE r9 — the old always-abort reader could delete a running
-# writer's manifest mid-protocol and crash the stream). Only SEALED
-# batches may fold (ids below the in-flight batch) — a replay can then
-# never rewrite a folded source.
-# --------------------------------------------------------------------------
-
-
-def _record_manifest(out_dir: str) -> Path:
-    return Path(out_dir, "_RECORD_FOLD")
-
-
-def _recover_record_fold(out_dir: str, abort_incomplete: bool = True) -> None:
-    import json
-    import shutil
-
-    manifest = _record_manifest(out_dir)
-    if not manifest.exists():
-        return
-    try:
-        meta = json.loads(manifest.read_text())
-    except FileNotFoundError:
-        # a concurrent finisher unlinked the manifest between exists()
-        # and read — the fold it described is complete; nothing to do
-        return
-    gen = Path(out_dir, meta["gen"])
-    if gen.exists():
-        for s in meta["sources"]:
-            _rm_record(Path(out_dir, s))
-    elif not abort_incomplete:
-        # reader path: the fold is uncommitted — in flight or crashed,
-        # indistinguishable from here. Sources are intact either way;
-        # read them and let the writer's own recovery clean up.
-        return
-    for p in Path(out_dir).glob(".tmpfold-*"):
-        shutil.rmtree(p, ignore_errors=True)
-    # missing_ok: a concurrent finisher may have unlinked it first
-    manifest.unlink(missing_ok=True)
-
-
-def _rm_record(p: Path) -> None:
-    """Per-batch admitted records are Spark-written DIRECTORIES; ledger
-    and generation records are flat pyarrow files — remove either."""
-    import shutil
-
-    if p.is_dir():
-        shutil.rmtree(p, ignore_errors=True)
-    else:
-        p.unlink(missing_ok=True)
-
-
-def compact_corpus_record(
-    spark: SparkSession, out_dir: str, through_batch: int
-) -> None:
-    """Fold every sealed per-batch record file (batch id <=
-    ``through_batch``) plus any prior generation into ONE generation
-    file per prefix. Idempotent; callers pass a sealed watermark
-    (below the in-flight batch id), exactly like compact_index."""
-    import json
-    import re
-    import shutil
-    import uuid
-
-    _recover_record_fold(out_dir)
-    out = Path(out_dir)
-    # a crash between manifest temp-write and rename leaves a stray
-    # temp; only the writer (here) may clear it
-    for stray in out.glob(".tmpmanifest-*"):
-        stray.unlink(missing_ok=True)
-    for prefix in ("admitted", "retracted"):
-        srcs = [
-            p
-            for p in out.glob(f"{prefix}-b*.parquet")
-            if int(re.match(rf"{prefix}-b(\d+)", p.name).group(1))
-            <= through_batch
-        ] + list(out.glob(f"{prefix}-gen-*.parquet"))
-        if len(srcs) <= 1:
-            continue
-        ids = spark.read.schema("doc_id BIGINT").parquet(
-            *[str(p) for p in srcs]
-        )
-        tmpdir = out / f".tmpfold-{prefix}-{uuid.uuid4().hex}"
-        ids.repartition(1).write.mode("overwrite").parquet(str(tmpdir))
-        part = next(tmpdir.glob("part-*.parquet"))
-        gen_name = f"{prefix}-gen-{uuid.uuid4().hex}.parquet"
-        # temp + atomic rename (ADVICE r10): a plain write_text lets a
-        # racing finish-only reader parse a partially-written manifest
-        manifest = _record_manifest(out_dir)
-        mtmp = out / f".tmpmanifest-{uuid.uuid4().hex}"
-        mtmp.write_text(
-            json.dumps(
-                {"prefix": prefix, "sources": [p.name for p in srcs],
-                 "gen": gen_name}
-            )
-        )
-        mtmp.rename(manifest)
-        part.rename(out / gen_name)
-        for s in srcs:
-            _rm_record(s)
-        # missing_ok: once the gen rename lands, a concurrent reader's
-        # finish-only recovery may legitimately complete the fold first
-        _record_manifest(out_dir).unlink(missing_ok=True)
-        shutil.rmtree(tmpdir, ignore_errors=True)

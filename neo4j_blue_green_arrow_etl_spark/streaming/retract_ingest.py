@@ -25,7 +25,7 @@ Semantics (deterministic, SQL-expressible — the q_st8_retract oracle):
 
 EXACTLY-ONCE: retraction tombstones write to a FLAT batch-tagged file
 (``_TOMBSTONES/batch-<id>.parquet`` — delete_from_index(batch_tag=...),
-atomic temp+rename), so a foreachBatch replay atomically REPLACES the
+atomic temp+rename), so a replayed batch atomically REPLACES the
 same file; admissions and state writes reuse
 neardup_ingest.admit_batch's idempotent scheme unchanged. A crash in
 ANY window — after the tombstone write, after the admitted file,
@@ -191,14 +191,11 @@ def _retract_ledger_ids(
     spark: SparkSession, out_dir: str
 ) -> DataFrame | None:
     """Every doc_id in the sealed permanent retract ledger
-    (``retracted-b*.parquet`` + folded ``retracted-gen-*.parquet``), or
-    None when no ledger file exists yet. Same file families and fold
-    recovery live_corpus reads."""
+    (``retracted-b*.parquet``), or None when no ledger file exists
+    yet."""
     from pathlib import Path as _P
 
-    ledgers = sorted(_P(out_dir).glob("retracted-b*.parquet")) + sorted(
-        _P(out_dir).glob("retracted-gen-*.parquet")
-    )
+    ledgers = sorted(_P(out_dir).glob("retracted-b*.parquet"))
     if not ledgers:
         return None
     return spark.read.schema("doc_id BIGINT").parquet(
@@ -229,94 +226,16 @@ def _write_retract_ledger(
     tmp.rename(out / f"retracted-b{batch_id}.parquet")
 
 
-def stream_retract_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    compact_every: int | None = None,
-) -> None:
-    """Drain a mixed (kind, doc_id, text) event file-stream — one file
-    per micro-batch, availableNow — through the retraction-aware
-    admission pipeline. Same shell as
-    neardup_ingest.stream_neardup_ingest with the event split bolted
-    on; all exactly-once/crash behavior lives in admit_batch_events.
-
-    ``compact_every=k`` folds sealed state partitions every k batches
-    (same watermark discipline as stream_neardup_ingest). On this
-    pipeline the fold does double duty: it bounds small-file accretion
-    AND physically drops the postings of every doc retracted so far —
-    compact_index computes its fold tombstone-masked — so a
-    long-running ingest reclaims takedown space continuously instead
-    of carrying masked rows forever."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("kind", StringType()),
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-        ]
-    )
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        if (
-            compact_every
-            and batch_id >= compact_every
-            and batch_id % compact_every == 0
-        ):
-            from ..operators.dedup_index import compact_index
-
-            from .neardup_ingest import compact_corpus_record
-
-            compact_index(spark, state_dir, batch_id - 1)
-            # fold the corpus record too: without it the out_dir
-            # accretes two tiny files per batch forever
-            compact_corpus_record(spark, out_dir, batch_id - 1)
-        admit_batch_events(spark, batch_df, state_dir, out_dir, batch_id)
-
-    q = (
-        events.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def live_corpus(
-    spark: SparkSession, out_dir: str, state_dir: str = ""
-) -> DataFrame:
+def live_corpus(spark: SparkSession, out_dir: str) -> DataFrame:
     """The corpus a downstream consumer reads: every admitted doc_id
     minus every retracted one. Admitted files are sealed (exactly-once,
     never rewritten), so the takedown applies as a broadcast anti-join
     against the PERMANENT retraction ledger (retracted-b*.parquet,
     sealed per batch) — NOT the index's tombstone sidecar, which is a
     masking artifact the compaction fold retires once a tombstone is
-    physically applied. ``state_dir`` is kept for call-site
-    compatibility and unused. Both record families may be folded into
-    generation files (compact_corpus_record); admitted_ids runs the
-    fold recovery, so a mid-fold crash is invisible here."""
-    from pathlib import Path as _P
-
+    physically applied."""
     admitted = admitted_ids(spark, out_dir).select("doc_id")
-    ledgers = sorted(_P(out_dir).glob("retracted-b*.parquet")) + sorted(
-        _P(out_dir).glob("retracted-gen-*.parquet")
-    )
-    if not ledgers:
+    retracted = _retract_ledger_ids(spark, out_dir)
+    if retracted is None:
         return admitted
-    retracted = spark.read.schema("doc_id BIGINT").parquet(
-        *[str(p) for p in ledgers]
-    )
     return admitted.join(F.broadcast(retracted), "doc_id", "left_anti")

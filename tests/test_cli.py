@@ -100,45 +100,6 @@ def test_orchestrate_drains_queue_on_ctrl_c(base, capsys, monkeypatch, method, a
     assert [(t["db"], t["state"]) for t in status["tasks"]] == [("acme-1000", "completed")]
 
 
-def test_curate_writes_split_partitioned_corpus(spark, tmp_path, capsys):
-    """`curate` writes the dedup+quality+split corpus partitioned by
-    split with a stats sidecar; row count matches the oracle-gated
-    q_x7_corpus form, and --decontam additionally drops benchmark and
-    contaminated docs (q_x8 semantics)."""
-    import json
-    from pathlib import Path
-
-    from neo4j_blue_green_arrow_etl_spark.operators import REGISTRY
-
-    out = str(tmp_path / "corpus")
-    assert (
-        main(["curate", "--sf-dir", SF_SMOKE, "--out", out]) == 0
-    )
-    payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    sidecar = json.loads(Path(out, "_curation_stats.json").read_text())
-    assert payload == sidecar
-    want = REGISTRY["q_x7_corpus"].spark(spark, SF_SMOKE).count()
-    assert payload["curated_docs"] == want
-    splits = {p.name for p in Path(out).iterdir() if p.is_dir()}
-    assert splits == {f"split={s}" for s in payload["splits"]}
-    back = spark.read.parquet(out)
-    assert back.count() == want
-    assert {"doc_id", "text", "lang", "source", "n_tokens", "quality_score", "split"} <= set(back.columns)
-
-    out2 = str(tmp_path / "corpus_decontam")
-    assert (
-        main(["curate", "--sf-dir", SF_SMOKE, "--out", out2, "--decontam"]) == 0
-    )
-    payload2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert payload2["curated_docs"] < payload["curated_docs"]
-    # decontam-survivors must be a subset of q_x8's survivor list
-    survivors = {
-        r.doc_id for r in REGISTRY["q_x8_decontam"].spark(spark, SF_SMOKE).collect()
-    }
-    kept = {r.doc_id for r in spark.read.parquet(out2).collect()}
-    assert kept <= survivors
-
-
 def test_sql_over_catalog_views_and_warehouse(base, capsys):
     """`sql` runs ad-hoc SQL: catalog alias views after a load, the
     warehouse tables via --sf-dir, JSON-line rows, and the limit cap."""
@@ -173,80 +134,3 @@ def test_sql_over_catalog_views_and_warehouse(base, capsys):
         == 0
     )
     assert len(capsys.readouterr().out.strip().splitlines()) == 5
-
-
-def test_curate_jsonl_format(spark, tmp_path, capsys):
-    """--format jsonl writes newline-delimited JSON shards a training
-    loader can read directly; counts match the parquet path."""
-    import json
-    from pathlib import Path
-
-    out = str(tmp_path / "corpus_jsonl")
-    assert (
-        main(["curate", "--sf-dir", SF_SMOKE, "--out", out, "--format", "jsonl"]) == 0
-    )
-    payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert payload["format"] == "jsonl" and payload["curated_docs"] > 0
-    part = next(Path(out).glob("split=*/part-*.json"))
-    first = json.loads(part.read_text().splitlines()[0])
-    assert {"doc_id", "text", "lang", "n_tokens"} <= set(first)
-
-
-def test_retract_ingest_cli(spark, tmp_path, capsys):
-    """`retract-ingest` drains a mixed event stream, prints a JSON
-    summary whose live count reflects the takedowns, and a re-run over
-    the unchanged directory is a checkpointed no-op with identical
-    output."""
-    import json as _json
-    import shutil as _sh
-
-    from pyspark.sql import functions as F
-
-    src = tmp_path / "events"
-    src.mkdir()
-    rows_by_batch = [
-        [("doc", 0, "w0 w1 w2 w3 w4 w5 group a"),
-         ("doc", 1, "u1a u1b u1c u1d u1e u1f u1g u1h")],
-        [("retract", 0, None),
-         ("doc", 10, "w0 w1 w2 w3 w4 w5 group a"),
-         ("doc", 11, "v1a v1b v1c v1d v1e v1f v1g v1h")],
-    ]
-    for b, rows in enumerate(rows_by_batch):
-        stage = src / f"_stage_{b}"
-        spark.createDataFrame(
-            rows, "kind STRING, doc_id BIGINT, text STRING"
-        ).coalesce(1).write.mode("overwrite").parquet(str(stage))
-        data = next(p for p in stage.glob("part-*.parquet"))
-        data.rename(src / f"events_{b}.parquet")
-        _sh.rmtree(stage)
-
-    argv = [
-        "retract-ingest",
-        "--input", str(src),
-        "--state", str(tmp_path / "state"),
-        "--out", str(tmp_path / "out"),
-        "--checkpoint", str(tmp_path / "ckp"),
-    ]
-    assert main(argv) == 0
-    payload = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # doc 10 re-admitted (its only match, doc 0, was retracted first);
-    # doc 0 admitted then left the corpus
-    assert payload == {
-        "admitted": 4, "live": 3, "retracted_from_corpus": 1
-    }
-    from neo4j_blue_green_arrow_etl_spark.streaming.retract_ingest import (
-        live_corpus,
-    )
-
-    live = sorted(
-        r.doc_id
-        for r in live_corpus(spark, str(tmp_path / "out")).collect()
-    )
-    assert live == [1, 10, 11]
-
-    # idempotent re-run (checkpoint holds)
-    assert main(argv) == 0
-    payload2 = _json.loads(
-        capsys.readouterr().out.strip().splitlines()[-1]
-    )
-    assert payload2 == payload

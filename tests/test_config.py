@@ -50,3 +50,27 @@ def test_load_config_yaml_with_env(tmp_path, monkeypatch):
 def test_validate_rejects_negative():
     with pytest.raises(ConfigError):
         load_config(overrides={"orchestrator": {"scan_interval": -1}})
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("keep_count", "2"),
+        ("keep_count", -1),
+        ("keep_count", True),
+        ("max_databases", "50"),
+        ("max_concurrent_loads", 1.5),
+        ("max_retries", 2.0),
+        ("heap_threshold_percent", 0),
+        ("heap_threshold_percent", 101),
+        ("heap_threshold_percent", "85"),
+    ],
+)
+def test_orchestrator_rejects_bad_int_and_percent_keys(spark, tmp_path, key, value):
+    """Counts the orchestrator slices or compares with must be
+    non-negative ints, and the heap gate must lie in (0, 100]: each of
+    these values used to pass validation and then fail every load."""
+    from neo4j_blue_green_arrow_etl_spark.streaming.orchestrator import Orchestrator
+
+    with pytest.raises(ConfigError, match=key):
+        Orchestrator(spark, tmp_path, config={"orchestrator": {key: value}})

@@ -21,7 +21,6 @@ from neo4j_blue_green_arrow_etl_spark.operators.dedup import (
 from neo4j_blue_green_arrow_etl_spark.streaming.retract_ingest import (
     admit_batch_events,
     live_corpus,
-    stream_retract_ingest,
 )
 
 EVENT_SCHEMA = "kind STRING, doc_id BIGINT, text STRING"
@@ -123,7 +122,7 @@ def test_retraction_readmits_neardups_immediately(spark, tmp_path):
         [("retract", 0), _doc(10, "a"), _unique_doc(11)],
     ]
     state, out = _run_fold(spark, tmp_path, batches)
-    live = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
+    live = sorted(r.doc_id for r in live_corpus(spark, out).collect())
     assert live == _expected_live(batches)
     assert 10 in live and 0 not in live
 
@@ -134,7 +133,7 @@ def test_retraction_readmits_neardups_immediately(spark, tmp_path):
     ]
     state2, out2 = _run_fold(spark, tmp_path, control, subdir="2")
     live2 = sorted(
-        r.doc_id for r in live_corpus(spark, out2, state2).collect()
+        r.doc_id for r in live_corpus(spark, out2).collect()
     )
     assert live2 == _expected_live(control)
     assert 10 not in live2 and 0 in live2
@@ -150,51 +149,13 @@ def test_fold_matches_bruteforce_rule(spark, tmp_path):
         [("retract", 12), _doc(30, "c"), _unique_doc(31)],
     ]
     state, out = _run_fold(spark, tmp_path, batches)
-    live = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
+    live = sorted(r.doc_id for r in live_corpus(spark, out).collect())
     assert live == _expected_live(batches)
     # the schedule above is non-vacuous on every path: a retraction
     # that re-admits (10 after retract 0? no — 1 still blocks; 20
     # probes a state where 0 and 10 are masked but 1 is live), and
     # retracted-but-admitted docs leaving the corpus
     assert 0 not in live and 3 not in live and 12 not in live
-
-
-def test_readstream_equals_fold(spark, tmp_path):
-    """The REAL readStream shell (one event file per micro-batch,
-    availableNow) produces the same live corpus as the fold."""
-    batches = [
-        [_doc(0, "a"), _doc(1, "a"), _unique_doc(2)],
-        [("retract", 0), _doc(10, "a"), _unique_doc(11)],
-        [("retract", 1), _doc(20, "a")],
-    ]
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    for b, evs in enumerate(batches):
-        stage = src / f"_stage_{b}"
-        _events_df(spark, evs).coalesce(1).write.mode("overwrite").parquet(
-            str(stage)
-        )
-        data = next(p for p in stage.glob("part-*.parquet"))
-        # lexicographic arrival order = batch order
-        data.rename(src / f"events_{b}.parquet")
-        shutil.rmtree(stage)
-
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "out")
-    stream_retract_ingest(
-        spark, str(src), state, out, str(tmp_path / "ckp")
-    )
-    live = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
-    assert live == _expected_live(batches)
-
-    # restart over the unchanged directory: a no-op (checkpoint holds)
-    stream_retract_ingest(
-        spark, str(src), state, out, str(tmp_path / "ckp")
-    )
-    assert (
-        sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
-        == live
-    )
 
 
 def test_retract_replay_is_idempotent(spark, tmp_path):
@@ -206,7 +167,7 @@ def test_retract_replay_is_idempotent(spark, tmp_path):
         [("retract", 0), _doc(10, "a")],
     ]
     state, out = _run_fold(spark, tmp_path, batches)
-    first = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
+    first = sorted(r.doc_id for r in live_corpus(spark, out).collect())
     tomb = Path(state) / "_TOMBSTONES"
     files_before = sorted(
         str(p.relative_to(tomb)) for p in tomb.rglob("*.parquet") if p.is_file()
@@ -214,7 +175,7 @@ def test_retract_replay_is_idempotent(spark, tmp_path):
     # replay batch 1
     admit_batch_events(spark, _events_df(spark, batches[1]), state, out, 1)
     second = sorted(
-        r.doc_id for r in live_corpus(spark, out, state).collect()
+        r.doc_id for r in live_corpus(spark, out).collect()
     )
     assert first == second
     files_after = sorted(
@@ -266,23 +227,28 @@ def test_crash_between_tombstone_and_admission_recovers(spark, tmp_path):
 
     # replay batch 1 (checkpoint never committed it)
     admit_batch_events(spark, _events_df(spark, batches[1]), state, out, 1)
-    live = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
+    live = sorted(r.doc_id for r in live_corpus(spark, out).collect())
     assert live == _expected_live(batches)
 
     # equals a clean never-crashed run
     state2, out2 = _run_fold(spark, tmp_path, batches, subdir="2")
     clean = sorted(
-        r.doc_id for r in live_corpus(spark, out2, state2).collect()
+        r.doc_id for r in live_corpus(spark, out2).collect()
     )
     assert live == clean
 
 
 def test_midstream_compaction_drops_retracted_postings(spark, tmp_path):
-    """compact_every on the retraction stream: the fold is computed
-    tombstone-masked, so a retracted doc's postings leave the state
-    table PHYSICALLY mid-stream — and the live corpus is unchanged."""
+    """Compaction between batches of the retraction pipeline: the fold
+    is computed tombstone-masked, so a retracted doc's postings leave
+    the state table PHYSICALLY mid-stream — and the live corpus is
+    unchanged."""
     from neo4j_blue_green_arrow_etl_spark.operators.dedup_index import (
+        compact_index,
         ensure_index_table,
+    )
+    from neo4j_blue_green_arrow_etl_spark.streaming.retract_ingest import (
+        _retract_ledger_ids,
     )
 
     batches = [
@@ -291,27 +257,13 @@ def test_midstream_compaction_drops_retracted_postings(spark, tmp_path):
         [("retract", 1), _doc(20, "a")],
         [_doc(30, "b"), _unique_doc(31)],
     ]
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    for b, evs in enumerate(batches):
-        stage = src / f"_stage_{b}"
-        _events_df(spark, evs).coalesce(1).write.mode("overwrite").parquet(
-            str(stage)
-        )
-        data = next(p for p in stage.glob("part-*.parquet"))
-        data.rename(src / f"events_{b}.parquet")
-        shutil.rmtree(stage)
     state = str(tmp_path / "state")
     out = str(tmp_path / "out")
-    stream_retract_ingest(
-        spark,
-        str(src),
-        state,
-        out,
-        str(tmp_path / "ckp"),
-        compact_every=3,  # fold fires before batch 3, through batch 2
-    )
-    live = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
+    for b, evs in enumerate(batches):
+        if b == 3:
+            compact_index(spark, state, b - 1)  # fold through batch 2
+        admit_batch_events(spark, _events_df(spark, evs), state, out, b)
+    live = sorted(r.doc_id for r in live_corpus(spark, out).collect())
     assert live == _expected_live(batches)
     # the fold landed (a negative-generation partition exists) and the
     # retracted docs' postings are PHYSICALLY gone from sealed state
@@ -335,16 +287,7 @@ def test_midstream_compaction_drops_retracted_postings(spark, tmp_path):
     t = _tombstones(spark, state)
     masked_now = set() if t is None else {r.doc_id for r in t.collect()}
     assert not masked_now & {0, 1}
-    # the ledger survives the record fold: sealed per-batch files were
-    # consolidated into a generation file, per-id content unchanged
-    ledgers = sorted(Path(out).glob("retracted-b*.parquet")) + sorted(
-        Path(out).glob("retracted-gen-*.parquet")
-    )
-    recorded = {
-        r.doc_id
-        for p in ledgers
-        for r in spark.read.parquet(str(p)).collect()
-    }
+    recorded = {r.doc_id for r in _retract_ledger_ids(spark, out).collect()}
     assert {0, 1} <= recorded
 
 
@@ -765,110 +708,6 @@ def test_random_schedules_match_bruteforce(spark, tmp_path_factory, batches):
     tmp = tmp_path_factory.mktemp("retract_prop")
     state, out = _run_fold(spark, tmp, batches)
     live = sorted(
-        r.doc_id for r in live_corpus(spark, out, state).collect()
+        r.doc_id for r in live_corpus(spark, out).collect()
     )
     assert live == _expected_live(batches)
-
-
-# --------------------------------------------------------------------------
-# corpus-record compaction (neardup_ingest.compact_corpus_record)
-# --------------------------------------------------------------------------
-
-
-def test_record_fold_preserves_corpus_and_bounds_files(spark, tmp_path):
-    """Folding sealed admitted/ledger files into generation files
-    changes NOTHING the readers see and leaves one gen file (plus the
-    unsealed tail) per prefix."""
-    from neo4j_blue_green_arrow_etl_spark.streaming.neardup_ingest import (
-        compact_corpus_record,
-    )
-
-    batches = [
-        [_doc(0, "a"), _unique_doc(1)],
-        [("retract", 0), _doc(10, "a"), _unique_doc(11)],
-        [("retract", 11), _doc(20, "b")],
-    ]
-    state, out = _run_fold(spark, tmp_path, batches)
-    before = sorted(
-        r.doc_id for r in live_corpus(spark, out, state).collect()
-    )
-    compact_corpus_record(spark, out, 1)  # batches 0-1 sealed
-    after = sorted(
-        r.doc_id for r in live_corpus(spark, out, state).collect()
-    )
-    assert after == before == _expected_live(batches)
-    names = sorted(
-        p.name for p in Path(out).iterdir() if not p.name.startswith((".", "_"))
-    )
-    adm = [n for n in names if n.startswith("admitted")]
-    led = [n for n in names if n.startswith("retracted")]
-    # one gen + the unsealed batch-2 file for admitted; batch 0 wrote
-    # NO ledger file (r12: empty retract sets skip the write), so the
-    # sealed retracted family has a single source and the fold is a
-    # legitimate no-op there — both per-batch files stay in place
-    assert sum(1 for n in adm if "gen" in n) == 1
-    assert adm == sorted(["admitted-b2.parquet"] + [n for n in adm if "gen" in n])
-    assert led == ["retracted-b1.parquet", "retracted-b2.parquet"]
-    # folding the full stream seals both retract files into one gen
-    compact_corpus_record(spark, out, 2)
-    assert sorted(
-        r.doc_id for r in live_corpus(spark, out, state).collect()
-    ) == before
-    led = sorted(
-        p.name for p in Path(out).glob("retracted-*") if p.is_file()
-    )
-    assert len(led) == 1 and "gen" in led[0]
-
-
-def test_record_fold_crash_windows(spark, tmp_path):
-    """Manifest + gen present (crash before source deletes) -> readers
-    recover by finishing: no duplicates. Manifest without gen (crash
-    before rename) -> abort: sources intact."""
-    import json
-
-    from neo4j_blue_green_arrow_etl_spark.streaming.neardup_ingest import (
-        _record_manifest,
-        compact_corpus_record,
-    )
-
-    batches = [
-        [_doc(0, "a"), _unique_doc(1)],
-        [("retract", 0), _doc(10, "a")],
-    ]
-    state, out = _run_fold(spark, tmp_path, batches)
-    want = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
-
-    # finish-window: do a real fold, then RESTORE the manifest and one
-    # source copy as if the crash hit mid-deletes
-    admitted0 = Path(out, "admitted-b0.parquet")
-    import shutil as _sh
-
-    _sh.copytree(admitted0, Path(out, ".keep-copy"))
-    compact_corpus_record(spark, out, 1)
-    gen = next(p.name for p in Path(out).glob("admitted-gen-*.parquet"))
-    _sh.copytree(Path(out, ".keep-copy"), admitted0)  # resurrect source
-    _record_manifest(out).write_text(
-        json.dumps({"prefix": "admitted",
-                    "sources": ["admitted-b0.parquet"], "gen": gen})
-    )
-    got = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
-    assert got == want  # recovery deleted the resurrected duplicate
-    assert not admitted0.exists()
-    assert not _record_manifest(out).exists()
-
-    # abort-window: manifest names a gen that never got renamed. r10:
-    # READERS are finish-only (an uncommitted fold is indistinguishable
-    # from one a live writer has in flight — ADVICE r9), so the read is
-    # correct off the intact sources and the manifest is LEFT for the
-    # writer; the next compact_corpus_record aborts and clears it.
-    _record_manifest(out).write_text(
-        json.dumps({"prefix": "admitted", "sources": [gen],
-                    "gen": "admitted-gen-neverexisted.parquet"})
-    )
-    got = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
-    assert got == want  # sources intact
-    assert _record_manifest(out).exists()  # reader did not abort
-    compact_corpus_record(spark, out, 1)  # writer aborts, then refolds
-    assert not _record_manifest(out).exists()
-    got = sorted(r.doc_id for r in live_corpus(spark, out, state).collect())
-    assert got == want

@@ -141,14 +141,17 @@ def test_fuzzy_salted_equals_unsalted(spark, hot_block_docs):
     b = d.select(
         F.col("doc_id").alias("doc_b"), "tok1", F.col("head").alias("head_b")
     )
+    # each side is a ~2M-pair join: pin it once, so the count and both
+    # exceptAll checks read the pinned rows instead of re-joining
     plain = (
         a.join(b, "tok1")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .withColumn("dist", F.levenshtein("head_a", "head_b", FUZZY_MAX_DIST))
         .filter(F.col("dist") >= 0)
         .select("doc_a", "doc_b", "dist")
+        .localCheckpoint()
     )
-    salted = fuzzy_block_pairs(d)
+    salted = fuzzy_block_pairs(d).localCheckpoint()
     assert salted.count() == plain.count() > 0
     assert salted.exceptAll(plain).isEmpty() and plain.exceptAll(salted).isEmpty()
 

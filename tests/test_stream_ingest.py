@@ -1,6 +1,6 @@
 """Streaming near-dup admission (streaming/neardup_ingest.py):
-file-source readStream -> foreachBatch -> exactly-once admission,
-with periodic compaction, batch replay and crash recovery.
+exactly-once admission per micro-batch, with compaction between
+batches, batch replay and crash recovery.
 """
 
 from __future__ import annotations
@@ -68,76 +68,40 @@ def _expected_admitted(spark, docs):
     )
 
 
-def test_stream_neardup_ingest_matches_batch_rule(spark, tmp_path):
-    """Draining the documents stream through the near-dup admission
-    pipeline must admit EXACTLY the any-earlier-rule survivors, with
-    batches = id-ordered file ranges."""
-    from pyspark.sql import functions as F
-
-    from neo4j_blue_green_arrow_etl_spark.streaming.neardup_ingest import (
-        admitted_ids,
-        stream_neardup_ingest,
-    )
-
-    docs = _neardup_docs(spark)
-    src = tmp_path / "docs_in"
-    # 4 id-ordered files -> 4 micro-batches in arrival order; file
-    # names sort in id order so maxFilesPerTrigger=1 preserves it
-    for i in range(4):
-        docs.filter(
-            (F.col("doc_id") >= i * 10) & (F.col("doc_id") < (i + 1) * 10)
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"part{i}"))
-    stream_neardup_ingest(
-        spark,
-        f"{src}/*",
-        str(tmp_path / "state"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    got = sorted(r.doc_id for r in admitted_ids(spark, str(tmp_path / "out")).collect())
-    want = _expected_admitted(spark, docs)
-    assert got == want
-    # sanity: the fixture actually has drops and keeps
-    assert 0 < len(got) < 40
-
-
 def test_stream_neardup_with_periodic_compaction(spark, tmp_path):
-    """compact_every folds sealed state partitions mid-stream; the
-    admissions must equal the uncompacted run's, and the state table
-    must end with fewer partitions than batches."""
+    """Folding the state table's sealed partitions between batches
+    (compact_index before batch 2, through batch 1) leaves admission
+    unchanged: the admissions must equal the any-earlier rule, and the
+    state table must end with fewer partitions than batches."""
     from pyspark.sql import functions as F
 
     from neo4j_blue_green_arrow_etl_spark.operators.dedup_index import (
+        compact_index,
         ensure_index_table,
     )
     from neo4j_blue_green_arrow_etl_spark.streaming.neardup_ingest import (
+        admit_batch,
         admitted_ids,
-        stream_neardup_ingest,
     )
 
     docs = _neardup_docs(spark)
-    src = tmp_path / "docs_in"
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
     for i in range(4):
-        docs.filter(
+        if i == 2:
+            compact_index(spark, state, i - 1)
+        batch = docs.filter(
             (F.col("doc_id") >= i * 10) & (F.col("doc_id") < (i + 1) * 10)
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"part{i}"))
-    stream_neardup_ingest(
-        spark,
-        f"{src}/*",
-        str(tmp_path / "state"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        compact_every=2,
-    )
-    got = sorted(r.doc_id for r in admitted_ids(spark, str(tmp_path / "out")).collect())
+        )
+        admit_batch(spark, batch, state, out, i)
+    got = sorted(r.doc_id for r in admitted_ids(spark, out).collect())
     assert got == _expected_admitted(spark, docs)
-    table = ensure_index_table(spark, str(tmp_path / "state"))
+    table = ensure_index_table(spark, state)
     parts = {
         r[0]
         for r in spark.table(table).select("batch_id").distinct().collect()
     }
-    assert len(parts) < 4  # batches 0..2 folded at least once
-    # all postings survived the folds
+    assert len(parts) < 4  # batches 0..1 folded into one generation
+    # all postings survived the fold
     n_docs = docs.count()
     assert spark.table(table).select("doc_id").distinct().count() == n_docs
 
@@ -221,68 +185,3 @@ def test_crash_between_admitted_and_state_writes_recovers(spark, tmp_path):
     t1 = spark.table(table)
     t2 = spark.table(dedup_index.ensure_index_table(spark, state2))
     assert sorted(map(tuple, t1.collect())) == sorted(map(tuple, t2.collect()))
-
-
-def test_stream_restart_with_checkpoint_after_midbatch_crash(spark, tmp_path):
-    """A stream whose foreachBatch dies mid-batch must, on restart with
-    the SAME checkpoint, replay that batch and continue — the final
-    admitted set equals the batch rule over all arrivals, with no
-    duplicate admitted files."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from neo4j_blue_green_arrow_etl_spark.streaming import neardup_ingest
-    from neo4j_blue_green_arrow_etl_spark.streaming.neardup_ingest import (
-        admitted_ids,
-        stream_neardup_ingest,
-    )
-
-    docs = _neardup_docs(spark)
-    src = tmp_path / "docs_in"
-    for i in range(4):
-        docs.filter(
-            (F.col("doc_id") >= i * 10) & (F.col("doc_id") < (i + 1) * 10)
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"part{i}"))
-
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    real_admit = neardup_ingest.admit_batch
-    calls = {"n": 0}
-
-    def flaky_admit(spark_, batch_docs, state_dir, out_dir, batch_id):
-        calls["n"] += 1
-        if batch_id == 1 and calls["n"] <= 2:
-            # crash AFTER the admitted write, BEFORE the state write
-            # (worst case: visible output exists, state+checkpoint lost)
-            table = neardup_ingest.ensure_index_table(spark_, state_dir)
-            bd = batch_docs.select(*neardup_ingest.DOCS_STREAM_COLS)
-            bp = neardup_ingest.postings_with_sizes(bd).localCheckpoint()
-            sp = (
-                spark_.table(table)
-                .filter(F.col("batch_id") < batch_id)
-                .select("doc_id", "shingle", "n")
-            )
-            dropped = neardup_ingest.dropped_doc_ids(bp, sp)
-            adm = bd.join(dropped, bd.doc_id == dropped.d, "left_anti")
-            from pathlib import Path as _P
-
-            _P(out_dir).mkdir(parents=True, exist_ok=True)
-            adm.select("doc_id").write.mode("overwrite").parquet(
-                f"{out_dir}/admitted-b{batch_id}.parquet"
-            )
-            raise RuntimeError("injected mid-batch crash")
-        return real_admit(spark_, batch_docs, state_dir, out_dir, batch_id)
-
-    neardup_ingest.admit_batch = flaky_admit
-    try:
-        with pytest.raises(Exception):
-            stream_neardup_ingest(spark, f"{src}/*", state, out, ckpt)
-    finally:
-        neardup_ingest.admit_batch = real_admit
-
-    # restart with the same checkpoint: batch 1 replays, 2..3 proceed
-    stream_neardup_ingest(spark, f"{src}/*", state, out, ckpt)
-    got = sorted(r.doc_id for r in admitted_ids(spark, out).collect())
-    assert got == _expected_admitted(spark, docs)
