@@ -9,6 +9,7 @@ reference's fail-fast behavior.
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from pathlib import Path
@@ -96,7 +97,7 @@ def validate_config(config: dict[str, Any]) -> None:
     orch = config.get("orchestrator", {})
     for key in ("scan_interval", "shutdown_timeout"):
         val = orch.get(key)
-        if not isinstance(val, (int, float)) or val < 0:
+        if not _finite(val) or val < 0:
             raise ConfigError(f"orchestrator.{key} must be a non-negative number, got {val!r}")
     # counts the orchestrator slices and compares with: a float or a
     # string here fails every load, and a negative keep_count slices
@@ -109,5 +110,14 @@ def validate_config(config: dict[str, Any]) -> None:
     if isinstance(pct, bool) or not isinstance(pct, (int, float)) or not 0 < pct <= 100:
         raise ConfigError(f"orchestrator.heap_threshold_percent must lie in (0, 100], got {pct!r}")
     base = orch.get("retry_backoff_base", 2)
-    if not isinstance(base, (int, float)) or base < 1:
-        raise ConfigError("orchestrator.retry_backoff_base must be >= 1")
+    if not _finite(base) or base < 1:
+        raise ConfigError(f"orchestrator.retry_backoff_base must be a number >= 1, got {base!r}")
+
+
+def _finite(val: Any) -> bool:
+    """An int or a finite float, for the times the orchestrator sleeps
+    and schedules retries by: a bool would silently mean 0 or 1, NaN
+    never compares and infinity never wakes."""
+    if isinstance(val, float):
+        return math.isfinite(val)
+    return isinstance(val, int) and not isinstance(val, bool)

@@ -115,7 +115,9 @@ class DeploymentCatalog:
         tree must not stop the rest of the catalog from restoring. Each
         drop warns with its reason. Pins die with the session too: each
         restored deployment is pinned again at its first read, from
-        ``source_path`` as it is now."""
+        ``source_path`` as it is now. A small deployment's files are
+        read here, on the driver, so a part that no longer reads (cut
+        short, say) drops it here rather than at its first read."""
         from ..sources.snapshot import SnapshotRef, read_snapshot
 
         dead = []

@@ -10,8 +10,9 @@ implements it:
 
 - ``FlightGraphSink``: the Neo4j Arrow adapter. Each phase streams a
   side through one ``do_put`` per partition. A side with exactly one
-  partition (every small snapshot ``read_snapshot`` returns) is
-  collected with ``toArrow``, a JVM-only job, and streamed from the
+  partition (every small snapshot side ``read_snapshot`` returns, which
+  it read on the driver into in-memory rows) is collected with
+  ``toArrow``, a JVM-only job over those rows, and streamed from the
   driver, as the reference loader does from its one host; any other
   side streams per partition on executors (``mapInArrow`` +
   ``do_put``) so 1000 executors stream concurrently. Integration-tested
@@ -19,8 +20,9 @@ implements it:
   ``flight_server.InMemoryGraphFlightServer``.
 
 ``flight_load_fn`` reads pinned sides (``sources.snapshot``), so the
-put jobs also fill the pins and the catalog then serves exactly the
-rows the server acknowledged. A load that fails or is interrupted
+put jobs also fill the pins (over in-memory rows for a small snapshot,
+a Parquet scan otherwise) and the catalog then serves exactly the rows
+the server acknowledged. A load that fails or is interrupted
 aborts the server graph and unpins both sides.
 
 State assertions are real (the reference's broken ``==`` no-op check,
@@ -171,12 +173,13 @@ class FlightGraphSink(GraphSink):
       chosen from the physical plan without running a job:
 
       - ONE output partition (``read_snapshot`` output under
-        ``spark.sql.files.openCostInBytes``, ``coalesce(1)``,
-        ``limit``): ``toArrow`` collects the side in a JVM-only job and
-        the driver streams it, as the reference streams from one host
-        (neo4j_pq.py:279-303). No Python worker starts. The driver
-        holds one side at a time: for ``read_snapshot`` output at most
-        ``openCostInBytes`` (4 MB by default) of Parquet.
+        ``spark.sql.files.openCostInBytes``, in-memory rows the reader
+        built on the driver; ``coalesce(1)``; ``limit``): ``toArrow``
+        collects the side in a JVM-only job and the driver streams it,
+        as the reference streams from one host (neo4j_pq.py:279-303).
+        No Python worker starts. The driver holds one side at a time:
+        for ``read_snapshot`` output at most ``openCostInBytes`` (4 MB
+        by default) of Parquet.
       - any other side is DISTRIBUTED: ``df.mapInArrow`` hands each
         executor task its partition, and ``collect`` brings back only
         the stats rows (one stage, no exchange). Throughput scales with

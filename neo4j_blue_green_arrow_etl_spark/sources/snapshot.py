@@ -11,22 +11,34 @@ neo4j_pq.py:70-81 for nodes, :93-103 for edges); this module is the one
 place that converts the positional contract into a declared named
 schema, after which everything downstream is schema-first.
 
-Scale note: the normalizations here are pure Catalyst expressions
-(rename + ``F.split``), so they fuse into the parquet scan inside
-whole-stage codegen — no Python on the data path, unlike the
-reference's pandas row-apply label split (neo4j_pq.py:59).
+Two read paths, one result. A small snapshot is read as the reference
+reads it: on one host, with pyarrow (neo4j_pq.py:275-303). Each side of
+at most one ``spark.sql.files.openCostInBytes`` split (4 MB by default)
+is read on the driver with ``pq.read_table``, renamed and label-split in
+Arrow (``pc.split_pattern``), unioned, and handed to Spark as in-memory
+rows. Any other side is a Spark Parquet scan whose normalizations are
+pure Catalyst expressions (rename + ``F.split``) fused into the scan by
+whole-stage codegen, so large inputs keep Spark's splits and never pass
+through the driver. Both give the same schema and rows (pinned by the
+parity tests in tests/test_snapshot_reader.py); a side the Arrow read
+cannot match exactly takes the Spark path (see ``_arrow_side``).
 
 Every data file a label/type dir lists is read as Parquet, as the
 reference opens each dir with ``pq.ParquetDataset`` (neo4j_pq.py:275);
-any other file fails the load. Spark lists each table dir once, when
-``read_snapshot`` builds the frame (``DataFrame.inputFiles()`` returns
-that list without a job), and every later job reads that list, so a
-file landing after ``read_snapshot`` returns is not read.
+any other file fails the load. On the driver path it fails inside
+``read_snapshot``, before a sink sees the snapshot. The files are
+listed when ``read_snapshot`` builds the frame: the driver path reads
+what ``_list_side`` lists there, and a Spark scan lists each table dir
+once as it builds the frame (``DataFrame.inputFiles()`` returns that
+list without a job), so a file landing after ``read_snapshot`` returns
+is not read.
 
-Fixed cost per load: ``read_snapshot`` runs no Spark job. A table's
-schema comes from one file's footer, mapped to the types Spark's own
-inference would give, so Spark skips its schema-inference job per dir.
-The unioned nodes and edges are each coalesced to
+Fixed cost per load: ``read_snapshot`` runs no Spark job, and on the
+driver path no Parquet scan either, so Catalyst plans and compiles no
+scan, split or union per load. A table's schema comes from one file's
+footer, mapped to the types Spark's own inference would give
+(``_footer_schema``); both paths use it, and the Spark path so skips
+its schema-inference job per dir. A Spark-path side is coalesced to
 ``ceil(bytes / spark.sql.files.openCostInBytes)`` partitions: Spark's
 rule that a split smaller than the cost of opening a file is not worth
 a task, applied across a snapshot's many small files. ``coalesce``
@@ -35,14 +47,14 @@ never adds partitions, so large snapshots keep Spark's own splits.
 Pinned sides: ``read_snapshot`` returns each side as
 ``localCheckpoint(eager=False)``. The first job over a side (the load's
 Flight put, or the first read of a deployment loaded without a sink)
-computes it from the files once and keeps the rows in the block
-manager; every later read runs over those rows, and a rewritten or
-deleted landing file no longer changes or breaks what a deployment
-serves. ``unpin`` frees a side's blocks. Limits: a read still running
-over a generation whose blocks retention frees fails (this takes two
-newer cutovers during one read), and a restarted catalog re-reads
-``source_path`` as it is then, without checking the files against the
-first load.
+computes it once, from the in-memory rows or the files, and keeps the
+rows in the block manager; every later read runs over those rows, and
+a rewritten or deleted landing file no longer changes or breaks what a
+deployment serves. ``unpin`` frees a side's blocks. Limits: a read
+still running over a generation whose blocks retention frees fails
+(this takes two newer cutovers during one read), and a restarted
+catalog re-reads ``source_path`` as it is then, without checking the
+files against the first load.
 """
 
 from __future__ import annotations
@@ -55,10 +67,12 @@ from pathlib import Path
 from typing import Callable
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 NODE_ID = "nodeId"
 LABELS = "labels"
@@ -134,7 +148,8 @@ def _list_table(table_dir: Path) -> tuple[list[str], int]:
     level, as Spark's own listing skips them (``_SUCCESS``, ``.crc``
     checksums, and the ``_temporary`` or ``.staging`` dirs a write in
     progress fills). Every file listed is read as Parquet: any other
-    file fails the load."""
+    file fails the load. The driver path of ``read_snapshot`` reads
+    exactly these files; a Spark scan lists the dir again."""
     files: list[tuple[str, int]] = []
     pending = [str(table_dir)]
     while pending:
@@ -315,11 +330,11 @@ def _read_side(
     normalize: Callable[[DataFrame], DataFrame],
     conf: dict[str, bool],
 ) -> tuple[DataFrame, int]:
-    """Every label (or type) dir under ``side_dir`` read as Parquet and
-    normalized, unioned by name with missing property columns
-    null-filled (the reference loads each dir separately and the server
-    unions; here the engine gets ONE relation per side), and the bytes
-    of their data files."""
+    """The Spark path: every label (or type) dir under ``side_dir`` read
+    by a Spark Parquet scan and normalized, unioned by name with missing
+    property columns null-filled (the reference loads each dir
+    separately and the server unions; here the engine gets ONE relation
+    per side), and the bytes of their data files."""
     frames, total = [], 0
     for table_dir, files, nbytes in _list_side(side_dir):
         schema = _footer_schema(files[0], conf)
@@ -332,28 +347,110 @@ def _read_side(
     return out, total
 
 
+def _arrow_side(
+    spark: SparkSession,
+    tables: list[tuple[Path, list[str], int]],
+    positional: tuple[str, ...],
+    conf: dict[str, bool],
+) -> DataFrame | None:
+    """The listed tables of one side read on the driver with pyarrow,
+    normalized and unioned as ``_read_side`` gives them, as one
+    in-memory relation (a ``LocalRelation``) with the same schema and
+    rows. ``positional`` names the leading columns, as the normalize
+    functions do; ``labels`` among them is split on commas. None when
+    the result might differ from Spark's: a file below a subdir (Spark
+    reads ``key=value`` dirs as columns), a footer ``_footer_schema``
+    leaves to Spark, files of one dir with differing schemas, a
+    non-string label column, too few columns, column names that clash
+    (Spark matches names case-insensitively) or one name with two types
+    across dirs. A file that is not Parquet, or is cut short, raises
+    here."""
+    fields: dict[str, T.StructField] = {}
+    parts: list[pa.Table] = []
+    for table_dir, files, _ in tables:
+        if any(os.path.dirname(f) != str(table_dir) for f in files):
+            return None
+        schema = _footer_schema(files[0], conf)
+        if schema is None or len(schema) < len(positional):
+            return None
+        read = [pq.read_table(f) for f in files]
+        if any(not t.schema.equals(read[0].schema) for t in read[1:]):
+            return None
+        table = pa.concat_tables(read)
+        names = [*positional, *schema.names[len(positional):]]
+        if len({n.lower() for n in names}) < len(names):
+            return None
+        cols = []
+        for i, (name, col, f) in enumerate(zip(names, table.columns, schema)):
+            if i < len(positional) and name == LABELS:
+                if f.dataType != T.StringType():
+                    return None
+                col = pc.split_pattern(col.cast(pa.string()), ",")
+                f = T.StructField(name, T.ArrayType(T.StringType(), False))
+            else:
+                f = T.StructField(name, f.dataType)
+            if fields.setdefault(name.lower(), f) != f:
+                return None
+            # the type createDataFrame sends: a zone-less timestamp Spark
+            # reads as TIMESTAMP becomes UTC-zoned with its value kept, as
+            # Spark's reader keeps it (left zone-less, createDataFrame
+            # would shift it by the session zone)
+            try:
+                cols.append(col.cast(to_arrow_type(f.dataType)))
+            except pa.ArrowInvalid:
+                return None  # bytes that are not UTF-8, read as strings
+        parts.append(pa.table(cols, names=names))
+    # unionByName(allowMissingColumns=True): the first dir's columns,
+    # then each later dir's new ones, missing ones null-filled
+    union = T.StructType(list(fields.values()))
+    unioned = pa.concat_tables(
+        pa.table(
+            [
+                table[f.name]
+                if f.name in table.column_names
+                else pa.nulls(table.num_rows, to_arrow_type(f.dataType))
+                for f in union
+            ],
+            names=union.names,
+        )
+        for table in parts
+    )
+    return spark.createDataFrame(unioned, union)
+
+
 def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame, DataFrame]:
     """Load one complete snapshot as (nodes, edges) DataFrames with the
-    engine's named schema, all labels/types unioned. Spark lists each
-    table dir here, once, and every job over the frames reads that
-    list. Each side has one partition per
-    ``spark.sql.files.openCostInBytes`` of data, or Spark's own splits
-    where those are fewer, and building it costs no Spark job. Each side
-    is pinned by the first job that runs over it; ``unpin`` releases it
+    engine's named schema, all labels/types unioned. A side of at most
+    one ``spark.sql.files.openCostInBytes`` of data is read here, on
+    the driver, with pyarrow (``_arrow_side``): the files ``_list_side``
+    lists, into one partition of in-memory rows. A larger side, or one
+    the Arrow read cannot match exactly, is a Spark Parquet scan with
+    one partition per ``openCostInBytes``, or Spark's own splits where
+    those are fewer; Spark lists its table dirs again as the frame is
+    built. Either way no file landing after ``read_snapshot`` returns
+    is read, and building the sides costs no Spark job. Each side is
+    pinned by the first job that runs over it; ``unpin`` releases it
     (see the module docstring). A side or table dir that lists no data
-    file raises ``ValueError`` naming it; a file that is not Parquet
-    fails the footer read here or the first job."""
+    file raises ``ValueError`` naming it; a file that is not Parquet,
+    or is cut short, fails the read here on the driver path, and the
+    footer read here or the first job on the Spark path."""
     conf = _inference_conf(spark)
     open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
     root = Path(snapshot.path)
-    nodes, node_bytes = _read_side(spark, root / "nodes", normalize_nodes, conf)
-    edges, edge_bytes = _read_side(spark, root / "relationships", normalize_edges, conf)
 
-    def pinned(df: DataFrame, nbytes: int) -> DataFrame:
+    def pinned(side: str, normalize, positional) -> DataFrame:
+        tables = _list_side(root / side)
+        nbytes = sum(n for _, _, n in tables)
+        df = _arrow_side(spark, tables, positional, conf) if nbytes <= open_cost else None
+        if df is None:
+            df, nbytes = _read_side(spark, root / side, normalize, conf)
         parts = max(1, math.ceil(nbytes / open_cost))
         return df.coalesce(parts).localCheckpoint(eager=False)
 
-    return pinned(nodes, node_bytes), pinned(edges, edge_bytes)
+    return (
+        pinned("nodes", normalize_nodes, (NODE_ID, LABELS)),
+        pinned("relationships", normalize_edges, (SOURCE_ID, TARGET_ID, REL_TYPE)),
+    )
 
 
 def unpin(df: DataFrame) -> None:

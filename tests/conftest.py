@@ -36,3 +36,19 @@ def spark_jobs_run_by(spark, fn) -> list[int]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def spy_parquet_reads(monkeypatch) -> list[str]:
+    """Record each ``spark.read.parquet`` call, a Spark Parquet scan, by
+    its first path."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real = DataFrameReader.parquet
+    calls = []
+
+    def spy(self, *paths, **options):
+        calls.append(str(paths[0]))
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return calls

@@ -189,6 +189,54 @@ def test_restart_drops_only_the_deployment_whose_source_fails_to_read(spark, tmp
     assert state["aliases"] == {"globex": "globex-100"}
 
 
+def test_restart_drops_the_deployment_with_a_truncated_part(spark, sf_dir, tmp_path):
+    """A restored small deployment reads all of its files at restore. A
+    part cut short after the load (not the first of its dir, whose footer
+    the Spark path also reads) raises ``ArrowInvalid``, a ``ValueError``,
+    so that deployment is dropped with a warning instead of being listed
+    and then failing at its first read; the other keeps serving through
+    its alias."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from neo4j_blue_green_arrow_etl_spark.fixtures import materialize_snapshot
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
+        SnapshotRef,
+        read_snapshot,
+    )
+
+    base = tmp_path / "data"
+    manifest = tmp_path / "catalog.json"
+    cat = DeploymentCatalog(spark, manifest)
+    for cust in ("acme", "globex"):
+        snap = materialize_snapshot(spark, sf_dir, str(base), cust, 100)
+        entity = Path(snap, "nodes", "Entity")
+        for part in entity.glob("part-*"):  # one part, split in two
+            table = pq.read_table(part)
+            part.unlink()
+            (entity / f".{part.name}.crc").unlink(missing_ok=True)
+        half = table.num_rows // 2
+        pq.write_table(table.slice(0, half), entity / "part-00000.parquet")
+        pq.write_table(table.slice(half), entity / "part-00001.parquet")
+        nodes, edges = read_snapshot(spark, SnapshotRef(cust, 100, snap))
+        cat.register_deployment(cust, 100, nodes, edges, source_path=snap)
+        cat.set_alias(cust, 100)
+    globex_nodes = cat.count_via_alias("globex", "nodes")
+
+    last = base / "acme" / "100" / "nodes" / "Entity" / "part-00001.parquet"
+    last.write_bytes(last.read_bytes()[: last.stat().st_size // 2])
+    for v in spark.catalog.listTables():
+        if v.isTemporary:
+            spark.catalog.dropTempView(v.name)
+
+    with pytest.warns(UserWarning, match="acme-100: source .* failed to read"):
+        cat2 = DeploymentCatalog(spark, manifest)
+    assert cat2.list_databases() == ["globex-100"]
+    assert cat2.list_aliases() == {"globex": "globex-100"}
+    assert cat2.count_via_alias("globex", "nodes") == globex_nodes
+
+
 def test_customer_ids_with_double_underscore_rejected(spark, tmp_path):
     """'__' is the deployment-view separator; allowing it in customer
     ids would re-open deployment/alias view-name collisions."""

@@ -74,3 +74,16 @@ def test_orchestrator_rejects_bad_int_and_percent_keys(spark, tmp_path, key, val
 
     with pytest.raises(ConfigError, match=key):
         Orchestrator(spark, tmp_path, config={"orchestrator": {key: value}})
+
+
+@pytest.mark.parametrize("key", ["scan_interval", "shutdown_timeout", "retry_backoff_base"])
+@pytest.mark.parametrize("value", [True, float("nan"), float("inf")])
+def test_orchestrator_rejects_bool_and_non_finite_times(spark, tmp_path, key, value):
+    """The orchestrator sleeps and schedules retries by these numbers: a
+    NaN backoff leaves a retried task queued forever (``nan <= now`` is
+    never true), a NaN interval or timeout makes ``time.sleep`` raise,
+    an infinite one never wakes, and ``true`` silently means 1."""
+    from neo4j_blue_green_arrow_etl_spark.streaming.orchestrator import Orchestrator
+
+    with pytest.raises(ConfigError, match=key):
+        Orchestrator(spark, tmp_path, config={"orchestrator": {key: value}})

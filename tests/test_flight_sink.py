@@ -266,28 +266,31 @@ def _snapshot(spark, sf_dir, base, ts):
     return SnapshotRef("acme", ts, f"{base}/acme/{ts}")
 
 
-def test_parquet_snapshot_loads_in_two_spark_jobs(
+def test_small_snapshot_loads_in_two_spark_jobs_without_a_parquet_scan(
     spark, server, sf_dir, tmp_path, monkeypatch
 ):
-    """A load's fixed cost is its Spark jobs and Python workers: reading
-    the snapshot runs no job (footer schemas), and each Flight phase
-    runs one. Each side of a small snapshot has one partition, so
-    ``toArrow`` collects it in a JVM-only job and the driver streams it:
-    ``mapInArrow`` is never called, so no Python worker starts. The same
+    """A load's fixed cost is its Spark jobs and Python workers. Reading
+    a small snapshot runs no job and no Spark Parquet scan: pyarrow
+    reads the files on the driver, and each side is one partition of
+    in-memory rows. Each Flight phase runs one job: ``toArrow`` collects
+    the side in a JVM-only job and the driver streams it, so
+    ``mapInArrow`` is never called and no Python worker starts. The same
     two jobs fill the sides' pins. Loading a parquet snapshot end to
     end, registration included, is exactly two jobs."""
     from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
     from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
 
-    from conftest import spark_jobs_run_by
+    from conftest import spark_jobs_run_by, spy_parquet_reads
 
     ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
     catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
     load = flight_load_fn("127.0.0.1", server.port)
     mapped = _spy_map_in_arrow(spark, monkeypatch)
+    reads = spy_parquet_reads(monkeypatch)
     jobs = spark_jobs_run_by(spark, lambda: load(spark, ref, catalog))
     assert len(jobs) == 2
     assert mapped == []
+    assert reads == []
     assert server.graphs["acme-100"]["state"] == "done"
     assert catalog.database_exists("acme-100")
 

@@ -16,6 +16,8 @@ from neo4j_blue_green_arrow_etl_spark.sources import (
 )
 from neo4j_blue_green_arrow_etl_spark.sources.snapshot import SnapshotRef
 
+from conftest import SF_SMOKE
+
 
 def test_normalize_nodes_positional_rename_and_split(spark, sf_dir):
     raw = FX.raw_entity_nodes(spark, sf_dir)
@@ -391,29 +393,44 @@ def test_discovery_admits_only_what_the_reader_lists(spark, tmp_path, case):
     assert nodes.count() == 3_000 and edges.count() == 7_000
 
 
-def test_stray_non_parquet_file_fails_the_load(spark, tmp_path):
+def test_stray_non_parquet_file_fails_the_load(spark, tmp_path, monkeypatch):
     """A snapshot is Parquet only (reference neo4j_pq.py:275). A stray
-    ``notes.csv`` beside the parts fails the read loudly, and a Flight
-    load of the snapshot registers nothing and leaves no graph on the
-    server."""
+    file beside the parts fails the read loudly, whether it sorts before
+    them (``notes.csv``) or after them (``zz-notes.csv``), so a Flight
+    load of the snapshot fails before it sends ``CREATE_DATABASE``: it
+    registers nothing and leaves no graph on the server."""
     from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
     from neo4j_blue_green_arrow_etl_spark.sinks.flight_server import (
         InMemoryGraphFlightServer,
     )
-    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import (
+        FlightGraphSink,
+        flight_load_fn,
+    )
 
     root = tmp_path / "acme" / "100"
     _write_small_snapshot(spark, root)
-    (root / "nodes" / "Entity" / "notes.csv").write_text("id,labels\nE0,Entity\n")
     ref = SnapshotRef("acme", 100, str(root))
-    with pytest.raises(ValueError, match="(?i)parquet"):
-        read_snapshot(spark, ref)
+    created = []
+    real_create = FlightGraphSink._create
 
+    def create(self):
+        created.append(self.database)
+        return real_create(self)
+
+    monkeypatch.setattr(FlightGraphSink, "_create", create)
     server = InMemoryGraphFlightServer()
     try:
         catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
-        with pytest.raises(ValueError, match="(?i)parquet"):
-            flight_load_fn("127.0.0.1", server.port)(spark, ref, catalog)
+        for stray in ("notes.csv", "zz-notes.csv"):
+            path = root / "nodes" / "Entity" / stray
+            path.write_text("id,labels\nE0,Entity\n")
+            with pytest.raises(ValueError, match="(?i)parquet"):
+                read_snapshot(spark, ref)
+            with pytest.raises(ValueError, match="(?i)parquet"):
+                flight_load_fn("127.0.0.1", server.port)(spark, ref, catalog)
+            path.unlink()
+        assert created == []
         assert server.graphs == {}
         assert not catalog.database_exists("acme-100")
     finally:
@@ -463,3 +480,221 @@ def test_the_file_list_is_fixed_when_the_frame_is_built(spark, tmp_path):
     pq.write_table(landed, root / "nodes" / "Entity" / "part-00002.parquet")
     assert nodes.count() == 3_000
     assert read_snapshot(spark, ref)[0].count() == 3_001
+
+
+def _write_tables(root: Path, tables) -> None:
+    """Write each ``{side}/{dir}`` table of ``tables`` as one part file;
+    a list of tables becomes one part each."""
+    import pyarrow.parquet as pq
+
+    for name, parts in tables.items():
+        d = root / name
+        d.mkdir(parents=True)
+        for i, table in enumerate(parts if isinstance(parts, list) else [parts]):
+            pq.write_table(table, d / f"part-{i:05d}.parquet")
+
+
+def _with_positional_columns(table):
+    """``table``'s columns as the properties of a node table and of an
+    edge table."""
+    import pyarrow as pa
+
+    n = table.num_rows
+    nodes = pa.table(
+        [pa.array([f"N{i}" for i in range(n)]), pa.array(["Entity,Test"] * n), *table.columns],
+        names=["id", "labels", *table.column_names],
+    )
+    edges = pa.table(
+        [pa.array(range(n)), pa.array(range(1, n + 1)), pa.array(["REL"] * n), *table.columns],
+        names=["src", "dst", "type", *table.column_names],
+    )
+    return {"nodes/Entity": nodes, "relationships/REL": edges}
+
+
+def _assert_arrow_path_matches_spark_path(spark, root: Path, monkeypatch) -> None:
+    """``read_snapshot`` reads ``root`` on the driver (no Spark Parquet
+    scan), and each side equals ``_read_side``, the Spark path, in schema
+    and in sorted rows."""
+    from conftest import spy_parquet_reads
+
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
+        _inference_conf,
+        _read_side,
+    )
+
+    reads = spy_parquet_reads(monkeypatch)
+    sides = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
+    assert reads == []
+    conf = _inference_conf(spark)
+    for got, (side, normalize) in zip(
+        sides, (("nodes", normalize_nodes), ("relationships", normalize_edges))
+    ):
+        want, _ = _read_side(spark, root / side, normalize, conf)
+        assert got.schema == want.schema, side
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+_FIXTURE_TABLES = sorted(p.stem for p in Path(SF_SMOKE).glob("*.parquet"))
+
+
+@pytest.mark.parametrize("name", _FIXTURE_TABLES)
+def test_arrow_path_matches_spark_path_on_fixture_tables(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """Every fixture table, as the property columns of a node table and
+    of an edge table, reads the same with pyarrow on the driver as
+    through Spark's Parquet scan."""
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "acme" / "100"
+    _write_tables(root, _with_positional_columns(pq.read_table(f"{sf_dir}/{name}.parquet")))
+    _assert_arrow_path_matches_spark_path(spark, root, monkeypatch)
+
+
+@pytest.mark.parametrize(
+    "overrides",
+    [
+        {},
+        {
+            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+            "spark.sql.parquet.binaryAsString": "true",
+        },
+        {"spark.sql.session.timeZone": "America/New_York"},
+        {
+            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+            "spark.sql.session.timeZone": "America/New_York",
+        },
+    ],
+    ids=["default", "ntz_off_binary_as_string", "new_york_session_zone", "ntz_off_new_york"],
+)
+def test_arrow_path_matches_spark_path_on_all_types(spark, tmp_path, monkeypatch, overrides):
+    """Each Arrow type a footer can carry reads the same on both paths,
+    under the session settings Spark's Parquet reader honours."""
+    root = tmp_path / "acme" / "100"
+    _write_tables(root, _with_positional_columns(_all_types_table()))
+    with _conf(spark, **overrides):
+        _assert_arrow_path_matches_spark_path(spark, root, monkeypatch)
+
+
+def test_arrow_path_matches_spark_path_on_property_evolution(spark, tmp_path, monkeypatch):
+    """Label dirs whose property columns differ are unioned by name with
+    nulls for a missing column, a dir of two parts reads as one table,
+    and label strings Spark's ``split`` treats specially (empty, doubled
+    and trailing commas, null) split the same on both paths."""
+    import pyarrow as pa
+
+    root = tmp_path / "acme" / "100"
+    entity = pa.table(
+        {
+            "id": ["E0", "E1", "E2", "E3"],
+            "labels": ["Entity,Person", "Entity,,X", "Entity,", ""],
+            "score": [0.5, 1.5, None, 2.0],
+            "region": ["emea", None, "apac", "amer"],
+        }
+    )
+    address = pa.table({"id": ["A0", "A1"], "labels": [None, "Address"], "score": [1.0, 2.0]})
+    _write_tables(
+        root,
+        {
+            "nodes/Address": [address.slice(0, 1), address.slice(1)],
+            "nodes/Entity": entity,
+            "relationships/KNOWS": pa.table(
+                {"src": ["E0"], "dst": ["E1"], "type": ["KNOWS"], "weight": [1.0]}
+            ),
+            "relationships/OWNS": pa.table(
+                {"src": ["E1"], "dst": ["A1"], "type": ["OWNS"], "since": [2020]}
+            ),
+        },
+    )
+    _assert_arrow_path_matches_spark_path(spark, root, monkeypatch)
+    nodes, edges = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
+    assert nodes.columns == ["nodeId", "labels", "score", "region"]
+    assert edges.columns == ["sourceNodeId", "targetNodeId", "relationshipType", "weight", "since"]
+
+
+def _clash_types(root: Path) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = root / "nodes" / "Address" / "part-00000.parquet"
+    pq.write_table(pa.table({"id": ["A0"], "labels": ["Address"], "score": pa.array([7], pa.int32())}), part)
+
+
+def _move_below_key_value_dir(root: Path) -> None:
+    _hide_under("region=emea")(root / "nodes" / "Entity")
+
+
+def _write_int96(root: Path) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = root / "nodes" / "Legacy"
+    d.mkdir()
+    table = pa.table({"id": ["L0"], "labels": ["Legacy"], "ts": pa.array([1], pa.timestamp("ns"))})
+    pq.write_table(table, d / "part-00000.parquet", use_deprecated_int96_timestamps=True)
+
+
+def _write_non_utf8_bytes(root: Path) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = root / "nodes" / "Blob"
+    d.mkdir()
+    table = pa.table({"id": ["B0"], "labels": ["Blob"], "raw": pa.array([b"\xff\xfe"])})
+    pq.write_table(table, d / "part-00000.parquet")
+
+
+_SPARK_PATH = {
+    "type_clash_across_label_dirs": (_clash_types, {}),
+    "key_value_subdir": (_move_below_key_value_dir, {}),
+    "int96_timestamps": (_write_int96, {}),
+    "non_utf8_binary_as_string": (
+        _write_non_utf8_bytes,
+        {"spark.sql.parquet.binaryAsString": "true"},
+    ),
+    "side_above_one_split": (lambda root: None, {"spark.sql.files.openCostInBytes": "1"}),
+}
+
+
+@pytest.mark.parametrize("case", list(_SPARK_PATH))
+def test_reads_the_arrow_path_cannot_match_take_the_spark_path(
+    spark, tmp_path, monkeypatch, case
+):
+    """A node side the driver read could not give exactly as Spark does
+    is read by a Spark Parquet scan, with Spark's semantics: two label
+    dirs whose ``score`` types differ (Spark widens int to bigint), a
+    part below a ``key=value`` dir (Spark adds it as a column), INT96
+    timestamps, bytes that are not UTF-8 read as strings
+    (``binaryAsString``), and a side above one ``openCostInBytes``
+    split."""
+    import pyarrow as pa
+
+    from conftest import spy_parquet_reads
+
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import T
+
+    root = tmp_path / "acme" / "100"
+    _write_tables(
+        root,
+        {
+            "nodes/Address": pa.table({"id": ["A0"], "labels": ["Address"], "score": [1]}),
+            "nodes/Entity": pa.table({"id": ["E0", "E1"], "labels": ["Entity"] * 2, "score": [2, 3]}),
+            "relationships/REL": pa.table({"src": ["E0"], "dst": ["A0"], "type": ["REL"]}),
+        },
+    )
+    change, overrides = _SPARK_PATH[case]
+    change(root)
+    reads = spy_parquet_reads(monkeypatch)
+    with _conf(spark, **overrides):
+        nodes, _ = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
+        assert any("/nodes/" in path for path in reads), reads
+        assert nodes.count() == 3 + (case in ("int96_timestamps", "non_utf8_binary_as_string"))
+    types = {f.name: f.dataType for f in nodes.schema}
+    if case == "type_clash_across_label_dirs":
+        assert types["score"] == T.LongType()
+    if case == "key_value_subdir":
+        assert types["region"] == T.StringType()
+    if case == "int96_timestamps":
+        assert types["ts"] == T.TimestampType()
+    if case == "non_utf8_binary_as_string":
+        assert types["raw"] == T.StringType()
