@@ -45,7 +45,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import InvalidArgumentError, NotFoundError
-from ..sources.snapshot import db_name, unpin
+from ..sources.snapshot import db_name, take_table, unpin
 
 _NAME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9_]*$")
 
@@ -153,8 +153,11 @@ class DeploymentCatalog:
     def _create_views(
         self, customer_id: str, timestamp: int, nodes: DataFrame, edges: DataFrame
     ) -> None:
-        """Point the deployment's views at ``nodes``/``edges`` and unpin
-        the sides they replace."""
+        """Point the deployment's views at ``nodes``/``edges``, drop the
+        Arrow tables a small snapshot's sides were read into (the JVM
+        holds their rows) and unpin the sides they replace."""
+        take_table(nodes)
+        take_table(edges)
         nodes.createOrReplaceTempView(_view(customer_id, timestamp, "nodes"))
         edges.createOrReplaceTempView(_view(customer_id, timestamp, "edges"))
         name = db_name(customer_id, timestamp)

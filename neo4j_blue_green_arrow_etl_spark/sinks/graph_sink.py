@@ -9,20 +9,20 @@ the node phase and the edge phase — in ``GraphSink``, and one sink
 implements it:
 
 - ``FlightGraphSink``: the Neo4j Arrow adapter. Each phase streams a
-  side through one ``do_put`` per partition. A side with exactly one
-  partition (every small snapshot side ``read_snapshot`` returns, which
-  it read on the driver into in-memory rows) is collected with
-  ``toArrow``, a JVM-only job over those rows, and streamed from the
-  driver, as the reference loader does from its one host; any other
-  side streams per partition on executors (``mapInArrow`` +
-  ``do_put``) so 1000 executors stream concurrently. Integration-tested
-  over real gRPC against the in-process
-  ``flight_server.InMemoryGraphFlightServer``.
+  side through one ``do_put`` per partition. A small snapshot side
+  ``read_snapshot`` read on the driver is streamed from the Arrow table
+  it was read into, with no Spark job, as the reference loader streams
+  from its one host; any other side with one partition is collected
+  with ``toArrow`` and streamed from the driver, and a side with more
+  streams per partition on executors (``mapInArrow`` + ``do_put``) so
+  1000 executors stream concurrently. Integration-tested over real gRPC
+  against the in-process ``flight_server.InMemoryGraphFlightServer``.
 
 ``flight_load_fn`` reads pinned sides (``sources.snapshot``), so the
-put jobs also fill the pins (over in-memory rows for a small snapshot,
-a Parquet scan otherwise) and the catalog then serves exactly the rows
-the server acknowledged. A load that fails or is interrupted
+catalog then serves exactly the rows the server acknowledged: a small
+side's rows are fixed when ``read_snapshot`` reads them, and its pin is
+filled by the deployment's first read; a larger side's pin is filled
+by its put job, a Parquet scan. A load that fails or is interrupted
 aborts the server graph and unpins both sides.
 
 State assertions are real (the reference's broken ``==`` no-op check,
@@ -40,6 +40,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..errors import InvalidArgumentError
+from ..sources.snapshot import take_table
 
 
 class SinkState(enum.Enum):
@@ -169,22 +170,24 @@ class FlightGraphSink(GraphSink):
       FlightClient (connections are not serializable — create per
       partition, the lesson of reference neo4j_arrow_client.py:58-73),
       then emits a single (rows, nbytes) stats row, summed into the
-      WriteResult. Each phase is one Spark job, on one of two paths,
-      chosen from the physical plan without running a job:
+      WriteResult. Each phase takes one of three paths, chosen without
+      running a job:
 
-      - ONE output partition (``read_snapshot`` output under
-        ``spark.sql.files.openCostInBytes``, in-memory rows the reader
-        built on the driver; ``coalesce(1)``; ``limit``): ``toArrow``
-        collects the side in a JVM-only job and the driver streams it,
-        as the reference streams from one host (neo4j_pq.py:279-303).
-        No Python worker starts. The driver holds one side at a time:
-        for ``read_snapshot`` output at most ``openCostInBytes`` (4 MB
-        by default) of Parquet.
-      - any other side is DISTRIBUTED: ``df.mapInArrow`` hands each
-        executor task its partition, and ``collect`` brings back only
-        the stats rows (one stage, no exchange). Throughput scales with
-        executors instead of the reference's single-host fork pool
-        (neo4j_pq.py:290-303).
+      - a side ``read_snapshot`` read on the driver (at most one
+        ``spark.sql.files.openCostInBytes`` of Parquet, 4 MB by
+        default): the driver streams the Arrow table the side was built
+        from (``sources.snapshot.take_table``) in batches of
+        ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, as the
+        reference streams from one host (neo4j_pq.py:279-303). No
+        Spark job runs and no Python worker starts.
+      - any other side with ONE output partition (``coalesce(1)``,
+        ``limit``): ``toArrow`` collects it in a JVM-only job and the
+        driver streams it the same way.
+      - any other side is DISTRIBUTED, one Spark job:
+        ``df.mapInArrow`` hands each executor task its partition, and
+        ``collect`` brings back only the stats rows (one stage, no
+        exchange). Throughput scales with executors instead of the
+        reference's single-host fork pool (neo4j_pq.py:290-303).
 
     Tested end-to-end against the in-process
     ``flight_server.InMemoryGraphFlightServer`` over real gRPC
@@ -301,9 +304,14 @@ class FlightGraphSink(GraphSink):
                     client.close()
             yield pa.RecordBatch.from_pydict({"rows": [rows], "nbytes": [nbytes]})
 
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.outputPartitioning().numPartitions() == 1:
-            batches = df.toArrow().to_batches()
+        table = take_table(df)
+        if table is None:
+            plan = df._jdf.queryExecution().executedPlan()
+            if plan.outputPartitioning().numPartitions() == 1:
+                table = df.toArrow()
+        if table is not None:
+            max_rows = df.sparkSession._jconf.arrowMaxRecordsPerBatch()
+            batches = table.to_batches(max_chunksize=max_rows if max_rows > 0 else None)
             stats = pa.Table.from_batches(put_partition(batches)).to_pylist()
         else:
             stats = df.mapInArrow(put_partition, "rows long, nbytes long").collect()
@@ -325,11 +333,13 @@ def flight_load_fn(host: str, port: int):
     the catalog. One definition serves the pipeline bench and the
     integration tests, so protocol changes have a single home.
 
-    The put jobs fill the pins of the sides ``read_snapshot`` returns,
-    so the registered deployment serves the rows the server
-    acknowledged. A failed or interrupted load (Ctrl-C raises
-    ``KeyboardInterrupt`` here) aborts the server graph and unpins both
-    sides before the error propagates."""
+    The registered deployment serves the rows the server acknowledged:
+    a small side is streamed from the Arrow table ``read_snapshot``
+    built it from, with no Spark job, and the side's in-memory rows
+    hold the same rows; a larger side's put job fills its pin. A failed
+    or interrupted load (Ctrl-C raises ``KeyboardInterrupt`` here)
+    aborts the server graph and unpins both sides before the error
+    propagates."""
     from ..sources.snapshot import read_snapshot, unpin
 
     def load(spark, ref, catalog):

@@ -35,21 +35,28 @@ is not read.
 
 Fixed cost per load: ``read_snapshot`` runs no Spark job, and on the
 driver path no Parquet scan either, so Catalyst plans and compiles no
-scan, split or union per load. A table's schema comes from one file's
-footer, mapped to the types Spark's own inference would give
-(``_footer_schema``); both paths use it, and the Spark path so skips
-its schema-inference job per dir. A Spark-path side is coalesced to
+scan, split or union per load. A driver-path side also keeps the Arrow
+table it was built from until a sink takes it (``take_table``): the
+Flight sink streams that table, so a small load runs no Spark job at
+all. A table's schema comes from one file's footer, mapped to the
+types Spark's own inference would give (``_footer_schema``); both
+paths use it, and the Spark path so skips its schema-inference job per
+dir. A Spark-path side is coalesced to
 ``ceil(bytes / spark.sql.files.openCostInBytes)`` partitions: Spark's
 rule that a split smaller than the cost of opening a file is not worth
 a task, applied across a snapshot's many small files. ``coalesce``
 never adds partitions, so large snapshots keep Spark's own splits.
 
 Pinned sides: ``read_snapshot`` returns each side as
-``localCheckpoint(eager=False)``. The first job over a side (the load's
-Flight put, or the first read of a deployment loaded without a sink)
-computes it once, from the in-memory rows or the files, and keeps the
-rows in the block manager; every later read runs over those rows, and
-a rewritten or deleted landing file no longer changes or breaks what a
+``localCheckpoint(eager=False)``. The first job over a side computes it
+once and keeps the rows in the block manager; every later read runs
+over those rows. For a Spark-path side that job is the load's Flight
+put (or the first read of a deployment loaded without a sink), and it
+reads the files. A driver-path side's rows are fixed inside
+``read_snapshot``: the Flight sink streams the Arrow table and the
+side's in-memory rows hold the same rows in the JVM, and its pin is
+filled by the deployment's first read. Either way a landing file
+rewritten or deleted after the load no longer changes or breaks what a
 deployment serves. ``unpin`` frees a side's blocks. Limits: a read
 still running over a generation whose blocks retention frees fails
 (this takes two newer cutovers during one read), and a restarted
@@ -62,9 +69,10 @@ from __future__ import annotations
 import functools
 import math
 import os
+import weakref
 from dataclasses import dataclass
 from pathlib import Path
-from typing import Callable
+from typing import AbstractSet, Callable
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -72,7 +80,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 NODE_ID = "nodeId"
 LABELS = "labels"
@@ -196,14 +204,18 @@ def _complete(ts_dir: Path) -> bool:
     return True
 
 
-def discover_snapshots(base_path: str | Path) -> list[SnapshotRef]:
+def discover_snapshots(
+    base_path: str | Path, seen: AbstractSet[tuple[str, int]] = frozenset()
+) -> list[SnapshotRef]:
     """Scan ``base/{customer}/{timestamp}`` for COMPLETE snapshots.
 
     Completeness gate (reference orchestrator.py:253-262), with the
     reader's own file listing (``_complete``); timestamp dirs must be
-    integer-named (orchestrator.py:243-245). Driver-side listing by
-    design — this is control-plane metadata, a few thousand dirs at
-    most, not data-plane work.
+    integer-named (orchestrator.py:243-245). A ``(customer, timestamp)``
+    in ``seen`` is skipped before its tree is walked, so a caller that
+    passes what it has already taken pays for new snapshots only, not
+    for every snapshot left on disk. Driver-side listing by design —
+    this is control-plane metadata, not data-plane work.
     """
     base = Path(base_path)
     found: list[SnapshotRef] = []
@@ -215,7 +227,7 @@ def discover_snapshots(base_path: str | Path) -> list[SnapshotRef]:
                 ts = int(ts_dir.name)
             except ValueError:
                 continue
-            if _complete(ts_dir):
+            if (customer_dir.name, ts) not in seen and _complete(ts_dir):
                 found.append(SnapshotRef(customer_dir.name, ts, str(ts_dir)))
     return found
 
@@ -352,11 +364,13 @@ def _arrow_side(
     tables: list[tuple[Path, list[str], int]],
     positional: tuple[str, ...],
     conf: dict[str, bool],
-) -> DataFrame | None:
+) -> tuple[DataFrame, pa.Table] | None:
     """The listed tables of one side read on the driver with pyarrow,
-    normalized and unioned as ``_read_side`` gives them, as one
-    in-memory relation (a ``LocalRelation``) with the same schema and
-    rows. ``positional`` names the leading columns, as the normalize
+    normalized and unioned as ``_read_side`` gives them: the in-memory
+    relation (a ``LocalRelation``) with the same schema and rows as
+    ``_read_side``, and the Arrow table it is built from, whose schema
+    and rows are the ones the relation's ``toArrow`` returns.
+    ``positional`` names the leading columns, as the normalize
     functions do; ``labels`` among them is split on commas. None when
     the result might differ from Spark's: a file below a subdir (Spark
     reads ``key=value`` dirs as columns), a footer ``_footer_schema``
@@ -403,6 +417,11 @@ def _arrow_side(
     # unionByName(allowMissingColumns=True): the first dir's columns,
     # then each later dir's new ones, missing ones null-filled
     union = T.StructType(list(fields.values()))
+    arrow_schema = to_arrow_schema(
+        union,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+    )
     unioned = pa.concat_tables(
         pa.table(
             [
@@ -414,8 +433,22 @@ def _arrow_side(
             names=union.names,
         )
         for table in parts
-    )
-    return spark.createDataFrame(unioned, union)
+    ).cast(arrow_schema)
+    return spark.createDataFrame(unioned, union), unioned
+
+
+# The Arrow table each driver-path side was built from, until the sink
+# takes it or the catalog takes the side over. Keyed weakly by the side,
+# so a side that is never loaded drops its table with it.
+_TABLES: weakref.WeakKeyDictionary[DataFrame, pa.Table] = weakref.WeakKeyDictionary()
+
+
+def take_table(side: DataFrame) -> pa.Table | None:
+    """The Arrow table ``read_snapshot`` built ``side`` from on the
+    driver, handed over once: later calls return None, and so do a
+    Spark-path side and any other frame. It has the schema and rows
+    ``side.toArrow()`` returns."""
+    return _TABLES.pop(side, None)
 
 
 def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame, DataFrame]:
@@ -423,9 +456,10 @@ def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame
     engine's named schema, all labels/types unioned. A side of at most
     one ``spark.sql.files.openCostInBytes`` of data is read here, on
     the driver, with pyarrow (``_arrow_side``): the files ``_list_side``
-    lists, into one partition of in-memory rows. A larger side, or one
-    the Arrow read cannot match exactly, is a Spark Parquet scan with
-    one partition per ``openCostInBytes``, or Spark's own splits where
+    lists, into one partition of in-memory rows, whose Arrow table a
+    sink can take (``take_table``). A larger side, or one the Arrow
+    read cannot match exactly, is a Spark Parquet scan with one
+    partition per ``openCostInBytes``, or Spark's own splits where
     those are fewer; Spark lists its table dirs again as the frame is
     built. Either way no file landing after ``read_snapshot`` returns
     is read, and building the sides costs no Spark job. Each side is
@@ -441,11 +475,17 @@ def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame
     def pinned(side: str, normalize, positional) -> DataFrame:
         tables = _list_side(root / side)
         nbytes = sum(n for _, _, n in tables)
-        df = _arrow_side(spark, tables, positional, conf) if nbytes <= open_cost else None
-        if df is None:
+        arrow = _arrow_side(spark, tables, positional, conf) if nbytes <= open_cost else None
+        if arrow is None:
             df, nbytes = _read_side(spark, root / side, normalize, conf)
+            table = None
+        else:
+            df, table = arrow
         parts = max(1, math.ceil(nbytes / open_cost))
-        return df.coalesce(parts).localCheckpoint(eager=False)
+        out = df.coalesce(parts).localCheckpoint(eager=False)
+        if table is not None:
+            _TABLES[out] = table
+        return out
 
     return (
         pinned("nodes", normalize_nodes, (NODE_ID, LABELS)),
@@ -454,8 +494,10 @@ def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame
 
 
 def unpin(df: DataFrame) -> None:
-    """Free the blocks of a side ``read_snapshot`` pinned; any other
-    frame is left alone. Reads of the side fail afterwards."""
+    """Free the blocks of a side ``read_snapshot`` pinned, and drop the
+    Arrow table it was built from; any other frame is left alone. Reads
+    of the side fail afterwards."""
+    _TABLES.pop(df, None)
     plan = df._jdf.queryExecution().logical()
     if plan.getClass().getSimpleName() != "LogicalRDD":
         return

@@ -33,11 +33,12 @@ with no retry consumed, and the exception propagates);
 ``attempt`` counts from 1 and ``duration_s`` is on the orchestrator clock.
 
 The loop is deliberately driver-side: snapshot arrival is control-plane
-(a few events/minute); the data plane — read, normalize, count, sink
-write — is fully distributed Spark jobs. A Structured Streaming file
-source would force one schema across heterogeneous snapshot dirs, so
-discovery stays a directory scan feeding batch jobs (the Spark mapping
-SURVEY §2.1 S4 sanctions). ``run``/``run_cycle``/``stop`` over
+(a few events/minute); the data plane — read, normalize, sink write —
+is distributed Spark jobs, except for a small snapshot, which is read
+and streamed to the sink on the driver, as the reference loads from one
+host. A Structured Streaming file source would force one schema across
+heterogeneous snapshot dirs, so discovery stays a directory scan
+feeding batch jobs (the Spark mapping SURVEY §2.1 S4 sanctions). ``run``/``run_cycle``/``stop`` over
 ``discover_snapshots`` are the one way the pipeline runs.
 
 Restarts: the seen set lives in memory, so a new process skips a
@@ -196,9 +197,10 @@ class Orchestrator:
         orchestrator.py:226-273): queue each complete snapshot under
         ``data_path`` not yet seen by this process and not already
         deployed (reference prefect existence check :339-345, which
-        makes restarts idempotent); returns how many were queued."""
+        makes restarts idempotent); returns how many were queued. A
+        seen snapshot's tree is not walked again."""
         found = 0
-        for ref in discover_snapshots(self.data_path):
+        for ref in discover_snapshots(self.data_path, self._seen):
             key = (ref.customer_id, ref.timestamp)
             if key in self._seen:
                 continue

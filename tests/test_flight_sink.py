@@ -258,6 +258,12 @@ def _persistent_rdds(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs())
 
 
+def _filled_rdds(spark) -> set[int]:
+    """Ids of the persisted RDDs that hold at least one computed block:
+    a pin is filled once the first job over its side has run."""
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def _snapshot(spark, sf_dir, base, ts):
     from neo4j_blue_green_arrow_etl_spark import fixtures as FX
     from neo4j_blue_green_arrow_etl_spark.sources.snapshot import SnapshotRef
@@ -266,17 +272,17 @@ def _snapshot(spark, sf_dir, base, ts):
     return SnapshotRef("acme", ts, f"{base}/acme/{ts}")
 
 
-def test_small_snapshot_loads_in_two_spark_jobs_without_a_parquet_scan(
+def test_small_snapshot_loads_in_no_spark_job_without_a_parquet_scan(
     spark, server, sf_dir, tmp_path, monkeypatch
 ):
     """A load's fixed cost is its Spark jobs and Python workers. Reading
     a small snapshot runs no job and no Spark Parquet scan: pyarrow
     reads the files on the driver, and each side is one partition of
-    in-memory rows. Each Flight phase runs one job: ``toArrow`` collects
-    the side in a JVM-only job and the driver streams it, so
-    ``mapInArrow`` is never called and no Python worker starts. The same
-    two jobs fill the sides' pins. Loading a parquet snapshot end to
-    end, registration included, is exactly two jobs."""
+    in-memory rows. Each Flight phase streams the Arrow table its side
+    was read into from the driver, so no job runs, ``mapInArrow`` is
+    never called and no Python worker starts. Loading a parquet snapshot
+    end to end, registration included, runs no Spark job; the sides'
+    pins are filled by the deployment's first read."""
     from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
     from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
 
@@ -287,12 +293,59 @@ def test_small_snapshot_loads_in_two_spark_jobs_without_a_parquet_scan(
     load = flight_load_fn("127.0.0.1", server.port)
     mapped = _spy_map_in_arrow(spark, monkeypatch)
     reads = spy_parquet_reads(monkeypatch)
+    before = _persistent_rdds(spark)
     jobs = spark_jobs_run_by(spark, lambda: load(spark, ref, catalog))
-    assert len(jobs) == 2
+    assert len(jobs) == 0
     assert mapped == []
     assert reads == []
-    assert server.graphs["acme-100"]["state"] == "done"
+    g = server.graphs["acme-100"]
+    assert g["state"] == "done"
     assert catalog.database_exists("acme-100")
+    pins = _persistent_rdds(spark) - before
+    assert len(pins) == 2 and not pins & _filled_rdds(spark)
+    catalog.set_alias("acme", 100)
+    served = tuple(catalog.count_via_alias("acme", k) for k in ("nodes", "edges"))
+    assert served == (g["nodes"], g["relationships"])
+    assert pins <= _filled_rdds(spark)
+
+
+def test_side_above_one_split_puts_through_spark_jobs_that_fill_its_pins(
+    spark, server, sf_dir, tmp_path, monkeypatch
+):
+    """A side above one ``spark.sql.files.openCostInBytes`` split keeps
+    the Spark Parquet scan and has no Arrow table: each Flight phase is
+    a ``mapInArrow`` job over its partitions, and that job fills the
+    side's pin, before any read of the deployment."""
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import _list_side
+
+    from conftest import spark_jobs_run_by, spy_parquet_reads
+
+    ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
+    catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    load = flight_load_fn("127.0.0.1", server.port)
+    smallest = min(
+        sum(n for _, _, n in _list_side(Path(ref.path, side)))
+        for side in ("nodes", "relationships")
+    )
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(smallest // 2))
+    try:
+        mapped = _spy_map_in_arrow(spark, monkeypatch)
+        reads = spy_parquet_reads(monkeypatch)
+        before = _persistent_rdds(spark)
+        jobs = spark_jobs_run_by(spark, lambda: load(spark, ref, catalog))
+    finally:
+        spark.conf.set(key, old)
+    assert len(jobs) == 2
+    assert mapped == [1, 1]
+    assert reads
+    g = server.graphs["acme-100"]
+    assert g["state"] == "done" and g["put_calls"] > 2
+    pins = _persistent_rdds(spark) - before
+    assert len(pins) == 2 and pins <= _filled_rdds(spark)
 
 
 def test_one_and_two_partition_sides_send_the_same_rows(spark, server, monkeypatch):
@@ -347,10 +400,13 @@ def test_failed_load_aborts_and_unpins(
 def test_deployment_serves_acknowledged_rows_after_landing_files_change(
     spark, server, sf_dir, tmp_path
 ):
-    """The put jobs that stream a snapshot to the server also pin its
-    rows, so reads through the alias keep returning the counts the
+    """A small snapshot's rows are fixed when ``read_snapshot`` reads
+    them: the server gets the Arrow table they were read into, and the
+    side's in-memory rows, which its first read pins, hold the same
+    rows. So reads through the alias keep returning the counts the
     server acknowledged after a landing file is rewritten with other
-    rows, and after the snapshot dir is deleted."""
+    rows, and after the snapshot dir is deleted, whether that happens
+    after the deployment's first read or before it."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -358,23 +414,94 @@ def test_deployment_serves_acknowledged_rows_after_landing_files_change(
     from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
     from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
 
-    ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
+    base = str(tmp_path / "data")
     catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
-    flight_load_fn("127.0.0.1", server.port)(spark, ref, catalog)
-    catalog.set_alias("acme", 100)
-    g = server.graphs["acme-100"]
-    acked = (g["nodes"], g["relationships"])
+    load = flight_load_fn("127.0.0.1", server.port)
+
+    def rewrite_one_part(ref):
+        part = sorted(Path(ref.path, "nodes").glob("*/part-*"))[0]
+        pq.write_table(pq.read_table(part).slice(0, 1), part)
+        part.with_name(f".{part.name}.crc").unlink(missing_ok=True)
 
     def served():
         return tuple(catalog.count_via_alias("acme", k) for k in ("nodes", "edges"))
 
+    ref = _snapshot(spark, sf_dir, base, 100)
+    load(spark, ref, catalog)
+    catalog.set_alias("acme", 100)
+    g = server.graphs["acme-100"]
+    acked = (g["nodes"], g["relationships"])
     assert served() == acked
-    part = sorted(Path(ref.path, "nodes").glob("*/part-*"))[0]
-    pq.write_table(pq.read_table(part).slice(0, 1), part)
-    part.with_name(f".{part.name}.crc").unlink(missing_ok=True)
+    rewrite_one_part(ref)
     assert served() == acked
     shutil.rmtree(ref.path)
     assert served() == acked
+
+    # the landing files change before the deployment is ever read
+    ref = _snapshot(spark, sf_dir, base, 200)
+    load(spark, ref, catalog)
+    rewrite_one_part(ref)
+    shutil.rmtree(ref.path)
+    catalog.set_alias("acme", 200)
+    g = server.graphs["acme-200"]
+    assert served() == (g["nodes"], g["relationships"])
+
+
+def test_no_arrow_table_outlives_its_load(spark, server, sf_dir, tmp_path, monkeypatch):
+    """A small side's Arrow table lives only as long as its load: after
+    a Flight load (the sink streamed it), a failed Flight load (the
+    edges were never streamed), ``load_snapshot`` and a catalog restore
+    (no sink at all), no table ``read_snapshot`` built is reachable, so
+    a deployment holds its rows once, in the JVM."""
+    import gc
+    import weakref
+
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import (
+        GraphSink,
+        flight_load_fn,
+    )
+    from neo4j_blue_green_arrow_etl_spark.sources import snapshot
+    from neo4j_blue_green_arrow_etl_spark.streaming import orchestrator
+
+    built = []
+    real = snapshot.read_snapshot
+
+    def read_snapshot(spark, ref):
+        sides = real(spark, ref)
+        built.extend(weakref.ref(snapshot._TABLES[side]) for side in sides)
+        return sides
+
+    monkeypatch.setattr(snapshot, "read_snapshot", read_snapshot)
+    monkeypatch.setattr(orchestrator, "read_snapshot", read_snapshot)
+
+    def assert_none_left(tables: int) -> None:
+        gc.collect()
+        assert len(built) == tables
+        assert [t() for t in built] == [None] * tables
+        built.clear()
+
+    base = str(tmp_path / "data")
+    catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    load = flight_load_fn("127.0.0.1", server.port)
+    load(spark, _snapshot(spark, sf_dir, base, 100), catalog)
+    assert_none_left(2)
+
+    def write_edges(self, edges):
+        raise RuntimeError("edge phase failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(GraphSink, "write_edges", write_edges)
+        with pytest.raises(RuntimeError):
+            load(spark, _snapshot(spark, sf_dir, base, 200), catalog)
+    assert_none_left(2)
+
+    orchestrator.load_snapshot(spark, _snapshot(spark, sf_dir, base, 300), catalog)
+    assert_none_left(2)
+
+    restored = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    assert restored.list_databases() == ["acme-100", "acme-300"]
+    assert_none_left(4)
 
 
 def test_retention_and_reregister_unpin_deployments(spark, server, sf_dir, tmp_path):

@@ -192,17 +192,18 @@ def test_health_check_runs_no_spark_job(spark, data_base, tmp_path):
 
 def test_cycle_goes_through_the_module_hooks(spark, data_base, tmp_path, monkeypatch):
     """The benchmark traces a cycle by wrapping these names: the module's
-    ``discover_snapshots``, and ``Orchestrator.check_health`` and
-    ``process_task(self, task)``, where it reads ``task.snapshot``. It
-    builds the orchestrator with a flat config."""
+    ``discover_snapshots`` (called with the path and the seen set), and
+    ``Orchestrator.check_health`` and ``process_task(self, task)``,
+    where it reads ``task.snapshot``. It builds the orchestrator with a
+    flat config."""
     calls = []
     discover = orchestrator.discover_snapshots
     check_health = Orchestrator.check_health
     process_task = Orchestrator.process_task
 
-    def spy_discover(path):
+    def spy_discover(*args):
         calls.append("discover")
-        return discover(path)
+        return discover(*args)
 
     def spy_health(self):
         calls.append("health")
@@ -438,6 +439,57 @@ def test_drain_with_non_advancing_sleep_terminates(spark, data_base, tmp_path):
     )
     orch.scan_once()
     assert orch.stop(drain=True, sleep=lambda s: None) is False
+
+
+def test_scan_walks_only_new_snapshots(spark, tmp_path, monkeypatch):
+    """Discovery walks a snapshot's tree only until this orchestrator
+    has seen it: a scan over 120 seen snapshots calls ``_list_table``
+    zero times, and a new snapshot's two table dirs are the only ones
+    walked. The queue and the stats come out as they do for an
+    orchestrator whose discovery walks every tree on every scan."""
+    from neo4j_blue_green_arrow_etl_spark.sources import snapshot
+
+    base = tmp_path / "data"
+
+    def publish(customer, ts):
+        for table in ("nodes/Entity", "relationships/KNOWS"):
+            d = base / customer / str(ts) / table
+            d.mkdir(parents=True)
+            (d / "part-00000.parquet").write_bytes(b"PAR1")
+
+    for i in range(120):
+        publish(f"c{i % 3}", 100 + i)
+    walks = []
+    real_list = snapshot._list_table
+    monkeypatch.setattr(snapshot, "_list_table", lambda d: walks.append(d) or real_list(d))
+    real_discover = orchestrator.discover_snapshots
+
+    def walk_all(base_path, seen=frozenset()):
+        return real_discover(base_path)
+
+    skipping = make_orch(spark, str(base), tmp_path)
+    walking = Orchestrator(spark, str(base), catalog=DeploymentCatalog(spark))
+
+    def scan():
+        walks.clear()
+        found = skipping.scan_once()
+        skipped_walks = len(walks)
+        with monkeypatch.context() as m:
+            m.setattr(orchestrator, "discover_snapshots", walk_all)
+            assert walking.scan_once() == found
+        for orch in (skipping, walking):
+            assert orch._queue == skipping._queue
+            assert {**orch.stats.as_dict(), "uptime_sec": 0} == {
+                **skipping.stats.as_dict(),
+                "uptime_sec": 0,
+            }
+        return found, skipped_walks
+
+    assert scan() == (120, 240)
+    assert scan() == (0, 0)
+    publish("c1", 500)
+    assert scan() == (1, 2)
+    assert skipping._queue[-1].snapshot.database == "c1-500"
 
 
 def test_restarted_orchestrator_skips_deployed_snapshots(

@@ -551,22 +551,22 @@ def test_arrow_path_matches_spark_path_on_fixture_tables(
     _assert_arrow_path_matches_spark_path(spark, root, monkeypatch)
 
 
-@pytest.mark.parametrize(
-    "overrides",
-    [
-        {},
-        {
-            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-            "spark.sql.parquet.binaryAsString": "true",
-        },
-        {"spark.sql.session.timeZone": "America/New_York"},
-        {
-            "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-            "spark.sql.session.timeZone": "America/New_York",
-        },
-    ],
-    ids=["default", "ntz_off_binary_as_string", "new_york_session_zone", "ntz_off_new_york"],
-)
+# session settings Spark's Parquet reader honours, by test id
+_CONF_VARIANTS = {
+    "default": {},
+    "ntz_off_binary_as_string": {
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.parquet.binaryAsString": "true",
+    },
+    "new_york_session_zone": {"spark.sql.session.timeZone": "America/New_York"},
+    "ntz_off_new_york": {
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.session.timeZone": "America/New_York",
+    },
+}
+
+
+@pytest.mark.parametrize("overrides", _CONF_VARIANTS.values(), ids=_CONF_VARIANTS.keys())
 def test_arrow_path_matches_spark_path_on_all_types(spark, tmp_path, monkeypatch, overrides):
     """Each Arrow type a footer can carry reads the same on both paths,
     under the session settings Spark's Parquet reader honours."""
@@ -574,6 +574,36 @@ def test_arrow_path_matches_spark_path_on_all_types(spark, tmp_path, monkeypatch
     _write_tables(root, _with_positional_columns(_all_types_table()))
     with _conf(spark, **overrides):
         _assert_arrow_path_matches_spark_path(spark, root, monkeypatch)
+
+
+def _assert_streamed_table_is_to_arrow(spark, root: Path) -> None:
+    """Each side ``read_snapshot`` reads on the driver hands the sink an
+    Arrow table equal to the side's own ``toArrow()``: the same schema
+    (names, types, nullability) and the same rows in the same order."""
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import take_table
+
+    for side in read_snapshot(spark, SnapshotRef("acme", 100, str(root))):
+        streamed, want = take_table(side), side.toArrow()
+        assert streamed is not None
+        assert streamed.schema.equals(want.schema, check_metadata=True)
+        assert streamed.equals(want)
+
+
+@pytest.mark.parametrize("name", _FIXTURE_TABLES)
+def test_streamed_table_is_to_arrow_on_fixture_tables(spark, sf_dir, tmp_path, name):
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "acme" / "100"
+    _write_tables(root, _with_positional_columns(pq.read_table(f"{sf_dir}/{name}.parquet")))
+    _assert_streamed_table_is_to_arrow(spark, root)
+
+
+@pytest.mark.parametrize("overrides", _CONF_VARIANTS.values(), ids=_CONF_VARIANTS.keys())
+def test_streamed_table_is_to_arrow_on_all_types(spark, tmp_path, overrides):
+    root = tmp_path / "acme" / "100"
+    _write_tables(root, _with_positional_columns(_all_types_table()))
+    with _conf(spark, **overrides):
+        _assert_streamed_table_is_to_arrow(spark, root)
 
 
 def test_arrow_path_matches_spark_path_on_property_evolution(spark, tmp_path, monkeypatch):
