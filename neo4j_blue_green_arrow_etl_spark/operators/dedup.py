@@ -1246,9 +1246,10 @@ ORDER BY doc_id
     f"is a near-dup at exact Jaccard >= {JACCARD_THRESHOLD}. The fold "
     "drives the TRUE per-batch pipeline "
     "(streaming/neardup_ingest.admit_batch: bucketed persistent state "
-    "table + batchId-named exactly-once admitted files — only the "
-    "readStream shell is elided; stream equivalence pinned in "
-    "tests/test_stream_ingest.py); because batches are id-ordered "
+    "table + batchId-named exactly-once admitted files, called once "
+    "per batch; tests/test_stream_ingest.py pins the any-earlier rule "
+    "across a mid-stream compaction, replay idempotence and the "
+    "admitted/state crash window); because batches are id-ordered "
     "ranges, the (batch, id) arrival order equals plain doc_id order "
     "and the oracle is one NOT-EXISTS pass. State = shingle postings "
     "of ALL seen docs (the any-earlier rule: a doc matching only a "
@@ -1400,8 +1401,10 @@ ORDER BY doc_id
     "(sealed admitted files are never rewritten; the takedown applies "
     "at read time via the same tombstone sidecar the probes mask "
     "with). The fold drives the TRUE per-batch pipeline "
-    "(streaming/retract_ingest.admit_batch_events; stream equivalence "
-    "+ crash windows pinned in tests/test_retract_ingest.py). Scale: "
+    "(streaming/retract_ingest.admit_batch_events, called once per "
+    "batch; tests/test_retract_ingest.py pins the brute-force liveness "
+    "rule on fixed and random schedules, replay idempotence, the "
+    "tombstone/admission crash window and the reuse guard). Scale: "
     "identical to q_st6_neardup — per-batch shuffle is O(batch "
     "postings) over the bucketed state table's co-located scan — plus "
     "one 8-byte-per-takedown broadcast anti-join for the mask.",

@@ -3,7 +3,8 @@ blue/green loop (orchestrator.py / orchestrator_prefect.py) re-expressed
 as a micro-batch driver loop around Spark jobs.
 
 Semantics carried over (SURVEY §2.9 ST1-ST9):
-  ST1  scan every ``scan_interval`` seconds (micro-batch trigger)
+  ST1  scan every ``scan_interval`` seconds (micro-batch trigger); a
+       backlog of due tasks loads back to back, without the wait
   ST2  dedup against this process's seen set + catalog existence
        (idempotent; see "Restarts" below)
   ST3  late data: old-timestamp snapshots still LOAD, but the alias only
@@ -331,24 +332,33 @@ class Orchestrator:
         self.write_status()
         return processed
 
-    def _drain(self, limit: int) -> int:
-        """Process up to ``limit`` queued tasks whose backoff has
-        elapsed, in queue order; returns how many ran."""
+    def _due(self) -> list[_Task]:
+        """Queued tasks whose backoff has elapsed, in queue order."""
         now = self.clock()
-        due = [t for t in self._queue if t.not_before <= now][:limit]
+        return [t for t in self._queue if t.not_before <= now]
+
+    def _drain(self, limit: int) -> int:
+        """Process up to ``limit`` due tasks; returns how many ran."""
+        due = self._due()[:limit]
         for task in due:
             self._queue.remove(task)
             self.process_task(task)
         return len(due)
 
     def run(self, max_cycles: int | None = None, sleep: Callable[[float], None] = time.sleep) -> None:
+        """Run cycles until ``stop`` or ``max_cycles``. While a due task
+        is queued the next cycle starts at once, so snapshots that land
+        together load back to back (the reference's load worker takes
+        the next task as soon as a load ends, orchestrator.py:426-456);
+        only when none is due does ``run`` sleep ``scan_interval``."""
         cycles = 0
         while not self._stop:
             self.run_cycle()
             cycles += 1
             if max_cycles is not None and cycles >= max_cycles:
                 break
-            sleep(self.cfg["scan_interval"])
+            if not self._due():
+                sleep(self.cfg["scan_interval"])
 
     def stop(
         self, drain: bool = True, sleep: Callable[[float], None] = time.sleep

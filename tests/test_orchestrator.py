@@ -564,6 +564,21 @@ def test_run_scans_every_scan_interval(spark, sf_dir, data_base, tmp_path):
     assert orch.catalog.alias_target("customer1") == "customer1-1767742000"
 
 
+def test_run_loads_a_backlog_back_to_back(spark, sf_dir, tmp_path):
+    """ST1/ST5: while a due task is queued, ``run`` starts the next
+    cycle at once, so three snapshots that land together load in three
+    cycles with no ``scan_interval`` sleep between them."""
+    base = str(tmp_path / "data")
+    for ts in (1, 2, 3):
+        FX.materialize_snapshot(spark, sf_dir, base, "acme", ts)
+    orch = make_orch(spark, base, tmp_path)
+    slept = []
+    orch.run(max_cycles=3, sleep=slept.append)
+    assert slept == []
+    assert orch.stats.completed == 3
+    assert orch.catalog.alias_target("acme") == "acme-3"
+
+
 def test_ctrl_c_during_a_load_is_recorded_and_requeued(
     spark, sf_dir, data_base, tmp_path
 ):
