@@ -26,7 +26,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from neo4j_blue_green_arrow_etl_spark.operators import REGISTRY
-from neo4j_blue_green_arrow_etl_spark.session import get_spark
+from neo4j_blue_green_arrow_etl_spark.session import HOTSPOT_JIT, get_spark
 
 
 # --------------------------------------------------------------------------
@@ -166,10 +166,13 @@ def main() -> None:
     # bench contract (one JSON line, {"queries": {name: sec}}) is
     # byte-identical to previous rounds.
     with_metrics = os.environ.get("SPARK_GRAFT_BENCH_METRICS") == "1"
+    # One long pass over the registry turns its planning code hot, so
+    # the session keeps HotSpot's default JIT thresholds (session.py).
     spark = get_spark(
         "bench",
         extra_conf=(
             {
+                **HOTSPOT_JIT,
                 "spark.ui.enabled": "true",
                 "spark.ui.port": "4049",
                 # Deltas are computed from CUMULATIVE /stages totals; the
@@ -182,7 +185,7 @@ def main() -> None:
                 "spark.ui.retainedJobs": "100000",
             }
             if with_metrics
-            else None
+            else HOTSPOT_JIT
         ),
     )
     app_id = spark.sparkContext.applicationId

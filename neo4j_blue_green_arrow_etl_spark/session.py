@@ -4,29 +4,32 @@ Single place where scale-relevant knobs live. Local runs use
 ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same builder options
 hold (AQE, Arrow, UTC session time) and ``master`` is simply not set.
 
-Driver JIT. The driver JVM starts with HotSpot's four tier-4 (C2)
-compile thresholds at ten times their JDK 17 defaults (``_C2_FLAGS``).
-A small snapshot's load runs no Spark job, so most of what the JVM
-runs for a load or an alias read is planning code (Catalyst rules,
-generated projections, task (de)serialization, Janino) that is warm
-but not hot. With the default thresholds the C2 compiler threads took
-12.9 of the 28.0 CPU seconds of a ``snapshot_churn`` benchmark run's
-set-up (JVM start, three set-ups, warm-up) and 3.2 of the 7.4 s of its
-12 s window (4 cores, per-thread CPU from ``/proc``); with the raised
-thresholds they took 3.7 and 1.0 s, and C1's share stayed flat. Row
+Driver JIT. By default the driver JVM starts with HotSpot's four
+tier-4 (C2) compile thresholds at ten times their JDK 17 defaults
+(``_C2_FLAGS``). A small snapshot's load runs no Spark job, so most of
+what the JVM runs for a load or an alias read is planning code
+(Catalyst rules, generated projections, task (de)serialization,
+Janino) that is warm but not hot, and with the default thresholds the
+C2 compiler threads took about half of the loader's set-up CPU. Row
 loops (Arrow serialization, Parquet decoding, whole-stage generated
 code) pass even the raised thresholds within milliseconds and still
-get C2 code: a warm 4.35M-row Flight load is no slower. C1 only
-(``-XX:TieredStopAtLevel=1``) would cut the small path further but
-made that big load about 2.4 times slower, so it is not used. The
-price is paid by long sessions of many distinct mid-sized queries,
-whose planning code does turn hot: ``bench.py``'s one-pass registry
-total was 13.7% slower (median of 4 alternated runs a side).
+get C2 code, so a warm multi-million-row Flight load is no slower. C1
+only (``-XX:TieredStopAtLevel=1``) would cut the small path further
+but makes that big load more than twice as slow, so it is not used.
+
+The price is paid by a long session of many distinct mid-sized
+queries, such as ``bench.py``'s pass over the query registry: there
+the planning code does turn hot, and with the raised thresholds it
+stays longer in profiled C1 code. Such entry points pass
+``HOTSPOT_JIT`` in ``extra_conf`` and keep HotSpot's defaults. The
+measurements are in CHANGES.md and ROADMAP.md.
 
 The flags go in ``spark.driver.defaultJavaOptions``, which Spark
 places before ``spark.driver.extraJavaOptions``, so a caller's own JVM
-flags still apply (and win where they repeat a flag); ``extra_conf``
-can replace the defaults like any other setting. Like
+flags still apply (and win where they repeat a flag). Set from the
+builder, they replace a ``spark.driver.defaultJavaOptions`` that a
+site sets in ``spark-defaults.conf``; a site flag that must survive
+goes in ``extraJavaOptions`` through ``extra_conf``. Like
 ``spark.driver.memory`` they take effect only when ``get_spark``
 launches the JVM: a session built on a running JVM keeps that JVM's
 flags. In local mode the driver JVM is also the executor; executor
@@ -46,6 +49,10 @@ _C2_FLAGS = (
     "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
 )
 
+# ``extra_conf`` entry for a long session of many distinct queries: it
+# launches the driver JVM with HotSpot's default thresholds.
+HOTSPOT_JIT = {"spark.driver.defaultJavaOptions": ""}
+
 
 def get_spark(
     app_name: str = "neo4j_blue_green_arrow_etl_spark",
@@ -64,7 +71,8 @@ def get_spark(
       ``maxRecordsPerBatch`` mirrors the reference's 100k-row RecordBatch
       contract (reference neo4j_pq.py:120, config.yaml:22).
     - UTC session timezone: deterministic timestamp semantics vs oracles.
-    - Driver JVM with raised C2 thresholds (module docstring).
+    - Driver JVM with raised C2 thresholds, unless ``extra_conf``
+      holds ``HOTSPOT_JIT`` (module docstring).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:

@@ -349,15 +349,19 @@ class Orchestrator:
         """Run cycles until ``stop`` or ``max_cycles``. While a due task
         is queued the next cycle starts at once, so snapshots that land
         together load back to back (the reference's load worker takes
-        the next task as soon as a load ends, orchestrator.py:426-456);
-        only when none is due does ``run`` sleep ``scan_interval``."""
+        the next task as soon as a load ends, orchestrator.py:426-456).
+        ``run`` sleeps ``scan_interval`` when none is due, and after a
+        cycle whose task the health gate deferred: under sustained
+        pressure a backlog is deferred one task per interval, not spun
+        through back to back."""
         cycles = 0
         while not self._stop:
+            deferred = self.stats.health_deferred
             self.run_cycle()
             cycles += 1
             if max_cycles is not None and cycles >= max_cycles:
                 break
-            if not self._due():
+            if self.stats.health_deferred > deferred or not self._due():
                 sleep(self.cfg["scan_interval"])
 
     def stop(

@@ -579,6 +579,26 @@ def test_run_loads_a_backlog_back_to_back(spark, sf_dir, tmp_path):
     assert orch.catalog.alias_target("acme") == "acme-3"
 
 
+def test_run_sleeps_after_a_health_deferred_cycle(spark, sf_dir, tmp_path):
+    """ST1/ST7: a cycle whose task the health gate deferred is followed
+    by the ``scan_interval`` sleep even while other tasks are due, so a
+    backlog under sustained pressure is not deferred back to back."""
+    base = str(tmp_path / "data")
+    for ts in (1, 2, 3):
+        FX.materialize_snapshot(spark, sf_dir, base, "acme", ts)
+    orch = Orchestrator(
+        spark,
+        base,
+        catalog=DeploymentCatalog(spark, tmp_path / "catalog.json"),
+        status_path=tmp_path / "status.json",
+        heap_fraction_fn=lambda: 0.95,
+    )
+    slept = []
+    orch.run(max_cycles=3, sleep=slept.append)
+    assert slept == [30, 30]
+    assert orch.stats.health_deferred == 3 and orch.stats.completed == 0
+
+
 def test_ctrl_c_during_a_load_is_recorded_and_requeued(
     spark, sf_dir, data_base, tmp_path
 ):
