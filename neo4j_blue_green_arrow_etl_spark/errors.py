@@ -3,7 +3,7 @@
 The reference's Flight error interpreter (neo4j_arrow_error.py:17-30)
 maps status strings to exception types. It is not carried over: the
 sink handles exactly one Flight status itself, NOT_FOUND on abort
-(``FlightGraphSink._abort``).
+(``FlightGraphSink.abort``).
 """
 
 from __future__ import annotations

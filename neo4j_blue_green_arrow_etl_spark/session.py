@@ -57,7 +57,6 @@ HOTSPOT_JIT = {"spark.driver.defaultJavaOptions": ""}
 def get_spark(
     app_name: str = "neo4j_blue_green_arrow_etl_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
@@ -77,8 +76,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
+    shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -112,7 +112,7 @@ class InMemoryGraphFlightServer(flight.FlightServerBase):
             # the dying process's TCP half-close reads as a clean end of
             # stream, so its partial rows land — and Spark's task retry
             # then re-streams the whole partition. The protocol's defense
-            # is the barrier count cross-check (GraphSink._check_count):
+            # is the barrier count cross-check (FlightGraphSink._barrier):
             # the lifecycle ACK carries this server-side total, and the
             # client aborts on mismatch instead of finalizing.
             for chunk in reader:

@@ -24,14 +24,16 @@ parity tests in tests/test_snapshot_reader.py); a side the Arrow read
 cannot match exactly takes the Spark path (see ``_arrow_side``).
 
 Every data file a label/type dir lists is read as Parquet, as the
-reference opens each dir with ``pq.ParquetDataset`` (neo4j_pq.py:275);
-any other file fails the load. On the driver path it fails inside
-``read_snapshot``, before a sink sees the snapshot. The files are
-listed when ``read_snapshot`` builds the frame: the driver path reads
-what ``_list_side`` lists there, and a Spark scan lists each table dir
-once as it builds the frame (``DataFrame.inputFiles()`` returns that
-list without a job), so a file landing after ``read_snapshot`` returns
-is not read.
+reference opens each dir with ``pq.ParquetDataset`` (neo4j_pq.py:275).
+The listing (``_list_table``) checks the ``PAR1`` magic at both ends of
+each file, so discovery never admits a snapshot holding any other file,
+or a part written in place whose footer is not there yet, and
+``read_snapshot`` raises on one before a sink sees the snapshot. The
+files are listed when ``read_snapshot`` builds the frame: the driver
+path reads what ``_list_side`` lists there, and a Spark scan lists each
+table dir once more as it builds the frame (``DataFrame.inputFiles()``
+returns that list without a job), so a file landing after
+``read_snapshot`` returns is not read.
 
 Fixed cost per load: ``read_snapshot`` runs no Spark job, and on the
 driver path no Parquet scan either, so Catalyst plans and compiles no
@@ -150,14 +152,30 @@ def _subdirs(parent: Path) -> list[Path]:
     return [parent / name for name in names]
 
 
+_MAGIC = b"PAR1"
+
+
+def _is_parquet(path: str, size: int) -> bool:
+    """Whether the file carries the Parquet magic at both ends. A file
+    written in place has no trailing magic until its footer is written."""
+    if size < len(_MAGIC):
+        return False
+    with open(path, "rb") as f:
+        head = f.read(len(_MAGIC))
+        f.seek(-len(_MAGIC), os.SEEK_END)
+        return head == f.read() == _MAGIC
+
+
 def _list_table(table_dir: Path) -> tuple[list[str], int]:
     """One walk of a label/type dir: its data files (sorted) and their
     total bytes. Names starting with ``_`` or ``.`` are skipped at every
     level, as Spark's own listing skips them (``_SUCCESS``, ``.crc``
     checksums, and the ``_temporary`` or ``.staging`` dirs a write in
-    progress fills). Every file listed is read as Parquet: any other
-    file fails the load. The driver path of ``read_snapshot`` reads
-    exactly these files; a Spark scan lists the dir again."""
+    progress fills). Every other file must be Parquet, as the reader
+    reads each one as Parquet: a file without the ``PAR1`` magic at both
+    ends (a stray file, or a part whose footer is not written yet)
+    raises ``ValueError`` naming it. ``read_snapshot`` reads exactly
+    these files."""
     files: list[tuple[str, int]] = []
     pending = [str(table_dir)]
     while pending:
@@ -167,8 +185,11 @@ def _list_table(table_dir: Path) -> tuple[list[str], int]:
                     continue
                 if e.is_dir():
                     pending.append(e.path)
-                else:
-                    files.append((e.path, e.stat().st_size))
+                    continue
+                size = e.stat().st_size
+                if not _is_parquet(e.path, size):
+                    raise ValueError(f"snapshot file {e.path} is not Parquet")
+                files.append((e.path, size))
     files.sort()
     return [path for path, _ in files], sum(size for _, size in files)
 
@@ -178,13 +199,13 @@ def _list_side(side_dir: Path) -> list[tuple[Path, list[str], int]]:
     listing. This is the one rule for which snapshots are complete:
     ``discover_snapshots`` admits a snapshot only when both sides list
     here, and ``read_snapshot`` reads what they list. Raises
-    ``ValueError`` naming the side when it holds no table dir, or the
-    table dir when it lists no non-empty data file (a write still in
-    progress)."""
+    ``ValueError`` naming the side when it holds no table dir, the table
+    dir when it lists no data file (a write still in progress), or a
+    file that is not Parquet."""
     tables = []
     for table_dir in _subdirs(side_dir):
         files, nbytes = _list_table(table_dir)
-        if nbytes == 0:
+        if not files:
             raise ValueError(f"snapshot table dir {table_dir} lists no data file")
         tables.append((table_dir, files, nbytes))
     if not tables:
@@ -338,25 +359,23 @@ def _footer_schema(path: str, conf: dict[str, bool]) -> T.StructType | None:
 
 def _read_side(
     spark: SparkSession,
-    side_dir: Path,
+    tables: list[tuple[Path, list[str], int]],
     normalize: Callable[[DataFrame], DataFrame],
     conf: dict[str, bool],
-) -> tuple[DataFrame, int]:
-    """The Spark path: every label (or type) dir under ``side_dir`` read
-    by a Spark Parquet scan and normalized, unioned by name with missing
-    property columns null-filled (the reference loads each dir
-    separately and the server unions; here the engine gets ONE relation
-    per side), and the bytes of their data files."""
-    frames, total = [], 0
-    for table_dir, files, nbytes in _list_side(side_dir):
+) -> DataFrame:
+    """The Spark path: the listed tables of one side (``_list_side``)
+    each read by a Spark Parquet scan and normalized, unioned by name
+    with missing property columns null-filled (the reference loads each
+    dir separately and the server unions; here the engine gets ONE
+    relation per side)."""
+    frames = []
+    for table_dir, files, _ in tables:
         schema = _footer_schema(files[0], conf)
         reader = spark.read if schema is None else spark.read.schema(schema)
         frames.append(normalize(reader.parquet(str(table_dir))))
-        total += nbytes
-    out = functools.reduce(
+    return functools.reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
     )
-    return out, total
 
 
 def _arrow_side(
@@ -377,8 +396,7 @@ def _arrow_side(
     leaves to Spark, files of one dir with differing schemas, a
     non-string label column, too few columns, column names that clash
     (Spark matches names case-insensitively) or one name with two types
-    across dirs. A file that is not Parquet, or is cut short, raises
-    here."""
+    across dirs. A Parquet file damaged inside raises here."""
     fields: dict[str, T.StructField] = {}
     parts: list[pa.Table] = []
     for table_dir, files, _ in tables:
@@ -465,9 +483,10 @@ def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame
     is read, and building the sides costs no Spark job. Each side is
     pinned by the first job that runs over it; ``unpin`` releases it
     (see the module docstring). A side or table dir that lists no data
-    file raises ``ValueError`` naming it; a file that is not Parquet,
-    or is cut short, fails the read here on the driver path, and the
-    footer read here or the first job on the Spark path."""
+    file, or a file without the Parquet magic, raises ``ValueError``
+    naming it; a Parquet file damaged inside fails the read here on the
+    driver path, and the footer read here or the first job on the Spark
+    path."""
     conf = _inference_conf(spark)
     open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
     root = Path(snapshot.path)
@@ -477,8 +496,7 @@ def read_snapshot(spark: SparkSession, snapshot: SnapshotRef) -> tuple[DataFrame
         nbytes = sum(n for _, _, n in tables)
         arrow = _arrow_side(spark, tables, positional, conf) if nbytes <= open_cost else None
         if arrow is None:
-            df, nbytes = _read_side(spark, root / side, normalize, conf)
-            table = None
+            df, table = _read_side(spark, tables, normalize, conf), None
         else:
             df, table = arrow
         parts = max(1, math.ceil(nbytes / open_cost))

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import sys
 import uuid
 from pathlib import Path
@@ -52,3 +53,16 @@ def spy_parquet_reads(monkeypatch) -> list[str]:
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     return calls
+
+
+@contextlib.contextmanager
+def session_conf(spark, **overrides):
+    """Set session confs for a block, then put the old values back."""
+    old = {k: spark.conf.get(k) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)

@@ -10,6 +10,8 @@ per-partition executor-side do_put streaming.
 
 from __future__ import annotations
 
+import collections
+import json
 import threading
 from pathlib import Path
 
@@ -318,27 +320,17 @@ def test_side_above_one_split_puts_through_spark_jobs_that_fill_its_pins(
     side's pin, before any read of the deployment."""
     from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
     from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
-    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import _list_side
 
-    from conftest import spark_jobs_run_by, spy_parquet_reads
+    from conftest import session_conf, spark_jobs_run_by, spy_parquet_reads
 
     ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
     catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
     load = flight_load_fn("127.0.0.1", server.port)
-    smallest = min(
-        sum(n for _, _, n in _list_side(Path(ref.path, side)))
-        for side in ("nodes", "relationships")
-    )
-    key = "spark.sql.files.openCostInBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(smallest // 2))
-    try:
+    with session_conf(spark, **_lowered_open_cost(ref)):
         mapped = _spy_map_in_arrow(spark, monkeypatch)
         reads = spy_parquet_reads(monkeypatch)
         before = _persistent_rdds(spark)
         jobs = spark_jobs_run_by(spark, lambda: load(spark, ref, catalog))
-    finally:
-        spark.conf.set(key, old)
     assert len(jobs) == 2
     assert mapped == [1, 1]
     assert reads
@@ -348,23 +340,145 @@ def test_side_above_one_split_puts_through_spark_jobs_that_fill_its_pins(
     assert len(pins) == 2 and pins <= _filled_rdds(spark)
 
 
-def test_one_and_two_partition_sides_send_the_same_rows(spark, server, monkeypatch):
-    """The driver path (one partition) and the executor path (two) send
-    one frame alike: the server records equal Arrow schemas and equal
-    row counts, and only the two-partition side calls ``mapInArrow``."""
-    frame = spark.read.parquet(f"{SF_SMOKE}/customer.parquet")
+def _lowered_open_cost(ref) -> dict[str, str]:
+    """A ``spark.sql.files.openCostInBytes`` below half of each side of
+    ``ref``, so ``read_snapshot`` reads both sides with Spark scans."""
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import _list_side
+
+    smallest = min(
+        sum(n for _, _, n in _list_side(Path(ref.path, side)))
+        for side in ("nodes", "relationships")
+    )
+    return {"spark.sql.files.openCostInBytes": str(smallest // 2)}
+
+
+class _RecordingServer(InMemoryGraphFlightServer):
+    """The test server, also keeping every batch each graph's puts
+    carry, by graph name and entity type."""
+
+    def __init__(self):
+        super().__init__()
+        self.batches = collections.defaultdict(list)
+
+    def do_put(self, context, descriptor, reader, writer):
+        cmd = json.loads(descriptor.command.decode())
+        kept = self.batches[cmd["name"], cmd["entity_type"]]
+
+        class Tap:
+            schema = reader.schema
+
+            def __iter__(self):
+                for chunk in reader:
+                    kept.append(chunk.data)
+                    yield chunk
+
+        return super().do_put(context, descriptor, Tap(), writer)
+
+
+def test_driver_table_and_executor_routes_send_the_same_schema_and_rows(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """One small snapshot loaded twice: first each side streams the
+    Arrow table ``read_snapshot`` read it into, from the driver; then,
+    with ``openCostInBytes`` lowered, each side is a Spark scan sent by
+    ``mapInArrow`` on executors. The server receives equal Arrow schemas,
+    metadata included, and equal rows on both routes."""
+    import pyarrow as pa
+
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
+    from neo4j_blue_green_arrow_etl_spark.sources.snapshot import SnapshotRef
+
+    from conftest import session_conf, spark_jobs_run_by
+
+    server = _RecordingServer()
+    try:
+        ref = _snapshot(spark, sf_dir, str(tmp_path / "data"), 100)
+        catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+        load = flight_load_fn("127.0.0.1", server.port)
+        mapped = _spy_map_in_arrow(spark, monkeypatch)
+        assert spark_jobs_run_by(spark, lambda: load(spark, ref, catalog)) == []
+        assert mapped == []
+        with session_conf(spark, **_lowered_open_cost(ref)):
+            load(spark, SnapshotRef("acme", 200, ref.path), catalog)
+        assert mapped == [1, 1]
+        for entity in ("node", "relationship"):
+            driver, executor = (
+                pa.Table.from_batches(server.batches[db, entity])
+                for db in ("acme-100", "acme-200")
+            )
+            assert driver.schema.equals(executor.schema, check_metadata=True)
+            assert driver.num_rows > 0
+            assert sorted(map(repr, driver.to_pylist())) == sorted(
+                map(repr, executor.to_pylist())
+            )
+    finally:
+        server.shutdown()
+
+
+def test_side_the_arrow_read_refuses_loads_through_the_executor_route(
+    spark, server, tmp_path, monkeypatch
+):
+    """A small node side the driver read cannot give exactly as Spark
+    does (its part sits below a ``key=value`` dir, which Spark reads as
+    a column) is a Spark scan with no Arrow table: its phase is one
+    ``mapInArrow`` job, which fills the side's pin, while the edge side
+    still streams its Arrow table. The server gets every row generated,
+    and reads through the alias return the counts it acknowledged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from neo4j_blue_green_arrow_etl_spark.plans.catalog import DeploymentCatalog
+    from neo4j_blue_green_arrow_etl_spark.sinks.graph_sink import flight_load_fn
+    from neo4j_blue_green_arrow_etl_spark.sources import snapshot
+
+    n_nodes, n_edges = 300, 500
+    root = tmp_path / "data" / "acme" / "100"
+    tables = {
+        "nodes/Entity/region=emea": pa.table(
+            {
+                "id": [f"E{i}" for i in range(n_nodes)],
+                "labels": ["Entity,Person"] * n_nodes,
+                "score": [i / 2 for i in range(n_nodes)],
+            }
+        ),
+        "relationships/KNOWS": pa.table(
+            {
+                "src": [f"E{i % n_nodes}" for i in range(n_edges)],
+                "dst": [f"E{(i + 1) % n_nodes}" for i in range(n_edges)],
+                "type": ["KNOWS"] * n_edges,
+            }
+        ),
+    }
+    for name, table in tables.items():
+        (root / name).mkdir(parents=True)
+        pq.write_table(table, root / name / "part-00000.parquet")
+
+    sides = []
+    real_read = snapshot.read_snapshot
+
+    def read_snapshot(spark, ref):
+        sides.extend(real_read(spark, ref))
+        return tuple(sides)
+
+    monkeypatch.setattr(snapshot, "read_snapshot", read_snapshot)
+    catalog = DeploymentCatalog(spark, tmp_path / "catalog.json")
+    load = flight_load_fn("127.0.0.1", server.port)
     mapped = _spy_map_in_arrow(spark, monkeypatch)
-    sent = {}
-    for name, df in (("one-1", frame.coalesce(1)), ("two-2", frame.repartition(2))):
-        sink = _sink(server, name)
-        sink.create_database()
-        res = sink.write_nodes(df)
-        g = server.graphs[name]
-        sent[name] = (g["schemas"]["node"], g["nodes"], res.rows)
-    (one_schema, one_rows, one_res), (two_schema, two_rows, two_res) = sent.values()
-    assert one_schema.equals(two_schema, check_metadata=True)
-    assert one_rows == two_rows == one_res == two_res == frame.count()
+    load(spark, snapshot.SnapshotRef("acme", 100, str(root)), catalog)
+    g = server.graphs["acme-100"]
+    assert g["state"] == "done"
+    assert (g["nodes"], g["relationships"]) == (n_nodes, n_edges)
+    assert "region" in g["schemas"]["node"].names
     assert mapped == [1]
+    nodes_pin, edges_pin = (
+        side._jdf.queryExecution().logical().rdd().id() for side in sides
+    )
+    filled = _filled_rdds(spark)
+    assert nodes_pin in filled and edges_pin not in filled
+    catalog.set_alias("acme", 100)
+    served = tuple(catalog.count_via_alias("acme", k) for k in ("nodes", "edges"))
+    assert served == (g["nodes"], g["relationships"])
 
 
 @pytest.mark.parametrize("error", [KeyboardInterrupt, RuntimeError])

@@ -53,6 +53,36 @@ def test_mid_write_snapshot_waits_until_published(spark, data_base, tmp_path):
     assert orch.catalog.alias_target("customer1") == "customer1-1767741427"
 
 
+def test_snapshot_with_a_stray_file_is_not_queued(spark, data_base, tmp_path):
+    """A snapshot whose table dir holds a non-Parquet file is never
+    queued: no load attempt is made, so no retry is spent on a read that
+    would fail. Once the file is removed, the next cycle loads it."""
+    entity = Path(data_base) / "customer1" / "1767741427" / "nodes" / "Entity"
+    stray = entity / "notes.csv"
+    stray.write_text("id,labels\nE0,Entity\n")
+    attempts = []
+
+    def load(spark_, ref, catalog):
+        attempts.append(ref.database)
+        orchestrator.load_snapshot(spark_, ref, catalog)
+
+    orch = Orchestrator(
+        spark,
+        data_base,
+        catalog=DeploymentCatalog(spark, tmp_path / "catalog.json"),
+        load_fn=load,
+    )
+    orch.run_cycle()
+    assert attempts == [] and not orch._queue and not orch.task_log
+    assert orch.stats.discovered == 0 and orch.stats.failed == 0
+
+    stray.unlink()
+    orch.run_cycle()
+    assert attempts == ["customer1-1767741427"]
+    assert orch.stats.completed == 1 and orch.stats.failed == 0
+    assert orch.catalog.alias_target("customer1") == "customer1-1767741427"
+
+
 def test_end_to_end_discover_load_switch(spark, sf_dir, data_base, tmp_path):
     orch = make_orch(spark, data_base, tmp_path)
     orch.run_cycle()

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import contextlib
 import shutil
 from pathlib import Path
 
@@ -16,7 +15,7 @@ from neo4j_blue_green_arrow_etl_spark.sources import (
 )
 from neo4j_blue_green_arrow_etl_spark.sources.snapshot import SnapshotRef
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, session_conf
 
 
 def test_normalize_nodes_positional_rename_and_split(spark, sf_dir):
@@ -157,19 +156,6 @@ def _all_types_table():
     return pa.table(cols)
 
 
-@contextlib.contextmanager
-def _conf(spark, **overrides):
-    """Set session confs for a block, then put the old values back."""
-    old = {k: spark.conf.get(k) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
-
-
 def test_footer_schema_matches_spark_inference(spark, sf_dir, tmp_path):
     """``read_snapshot`` hands Spark each parquet table's schema from one
     footer instead of letting Spark infer it: for every test table and
@@ -191,7 +177,7 @@ def test_footer_schema_matches_spark_inference(spark, sf_dir, tmp_path):
         assert _footer_schema(str(path), conf) == want, path.name
 
     # the session settings Spark's inference reads are honoured
-    with _conf(
+    with session_conf(
         spark,
         **{
             "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
@@ -211,7 +197,7 @@ def test_footer_schema_matches_spark_inference(spark, sf_dir, tmp_path):
         use_deprecated_int96_timestamps=True,
     )
     assert _footer_schema(str(int96), _inference_conf(spark)) is None
-    with _conf(spark, **{"spark.sql.parquet.mergeSchema": "true"}):
+    with session_conf(spark, **{"spark.sql.parquet.mergeSchema": "true"}):
         assert _footer_schema(str(typed), _inference_conf(spark)) is None
 
 
@@ -319,7 +305,7 @@ def test_small_snapshot_reads_as_one_partition_per_side(spark, tmp_path):
     assert edges.rdd.getNumPartitions() == 1
     assert nodes.count() == 3_000 and edges.count() == 7_000
 
-    with _conf(spark, **{"spark.sql.files.openCostInBytes": "1"}):
+    with session_conf(spark, **{"spark.sql.files.openCostInBytes": "1"}):
         nodes, edges = read_snapshot(spark, ref)
         for side, df in (("nodes", nodes), ("relationships", edges)):
             dirs = sorted((root / side).iterdir())
@@ -359,6 +345,25 @@ def _truncate_parts(table_dir: Path) -> None:
         part.write_bytes(b"")
 
 
+def _add_stray(name: str):
+    """Write a non-Parquet file beside a table dir's parts."""
+
+    def write(table_dir: Path) -> None:
+        (table_dir / name).write_text("id,labels\nE0,Entity\n")
+
+    return write
+
+
+def _cut_before_footer(table_dir: Path) -> None:
+    """Cut the last part where a writer that writes in place is before
+    it writes the footer: the leading magic and row groups are there,
+    the footer and the trailing magic are not."""
+    part = sorted(table_dir.glob("part-*"))[-1]
+    data = part.read_bytes()
+    footer = int.from_bytes(data[-8:-4], "little")
+    part.write_bytes(data[: -(footer + 8)])
+
+
 _UNPUBLISHED = {
     "temporary_only": ("nodes/Entity", _hide_under("_temporary/0")),
     "staging_only": ("nodes/Entity", _hide_under(".staging")),
@@ -366,6 +371,9 @@ _UNPUBLISHED = {
     "zero_byte_part": ("nodes/Entity", _truncate_parts),
     "empty_label_dir_beside_full_one": ("nodes/Address", _drop_parts),
     "relationships_missing": ("relationships", shutil.rmtree),
+    "stray_file_sorting_first": ("nodes/Entity", _add_stray("notes.csv")),
+    "stray_file_sorting_last": ("nodes/Entity", _add_stray("zz-notes.csv")),
+    "part_cut_before_footer": ("relationships/KNOWS", _cut_before_footer),
 }
 
 
@@ -373,10 +381,13 @@ _UNPUBLISHED = {
 def test_discovery_admits_only_what_the_reader_lists(spark, tmp_path, case):
     """Discovery and ``read_snapshot`` agree on which files exist: a
     snapshot is discovered only when every label/type dir lists a
-    non-empty data file, so a tree still being written (files under
+    non-empty data file and every file it lists carries the Parquet
+    magic at both ends, so a tree still being written (files under
     ``_temporary/`` or ``.staging/``, a bare ``_SUCCESS``, a zero-byte
-    part, an empty label dir, no relationships yet) is never promoted
-    to a load the reader would fail."""
+    part, an empty label dir, no relationships yet, a part written in
+    place whose footer is not there yet) or one holding a stray
+    non-Parquet file is never promoted to a load the reader would
+    fail."""
     from neo4j_blue_green_arrow_etl_spark.sources.snapshot import _list_table
 
     root = tmp_path / "acme" / "100"
@@ -464,13 +475,14 @@ def test_the_file_list_is_fixed_when_the_frame_is_built(spark, tmp_path):
 
     from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
         _inference_conf,
+        _list_side,
         _list_table,
         _read_side,
     )
 
     root = tmp_path / "acme" / "100"
     _write_small_snapshot(spark, root)
-    side, _ = _read_side(spark, root / "nodes", normalize_nodes, _inference_conf(spark))
+    side = _read_side(spark, _list_side(root / "nodes"), normalize_nodes, _inference_conf(spark))
     listed = [f for d in (root / "nodes").iterdir() for f in _list_table(d)[0]]
     assert sorted(f.removeprefix("file://") for f in side.inputFiles()) == sorted(listed)
 
@@ -480,6 +492,29 @@ def test_the_file_list_is_fixed_when_the_frame_is_built(spark, tmp_path):
     pq.write_table(landed, root / "nodes" / "Entity" / "part-00002.parquet")
     assert nodes.count() == 3_000
     assert read_snapshot(spark, ref)[0].count() == 3_001
+
+
+def test_spark_path_read_walks_each_table_dir_once(spark, tmp_path, monkeypatch):
+    """``read_snapshot`` hands the Spark path the listing it took for
+    the side, so a read whose sides are Spark scans walks each table
+    dir once, and scans each once."""
+    from collections import Counter
+
+    from conftest import spy_parquet_reads
+
+    from neo4j_blue_green_arrow_etl_spark.sources import snapshot
+
+    root = tmp_path / "acme" / "100"
+    _write_small_snapshot(spark, root)
+    walks = []
+    real_list = snapshot._list_table
+    monkeypatch.setattr(snapshot, "_list_table", lambda d: walks.append(d) or real_list(d))
+    reads = spy_parquet_reads(monkeypatch)
+    with session_conf(spark, **{"spark.sql.files.openCostInBytes": "1"}):
+        read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
+    table_dirs = sorted(root.glob("*/*"))
+    assert sorted(reads) == sorted(map(str, table_dirs))
+    assert Counter(walks) == Counter(table_dirs)
 
 
 def _write_tables(root: Path, tables) -> None:
@@ -519,6 +554,7 @@ def _assert_arrow_path_matches_spark_path(spark, root: Path, monkeypatch) -> Non
 
     from neo4j_blue_green_arrow_etl_spark.sources.snapshot import (
         _inference_conf,
+        _list_side,
         _read_side,
     )
 
@@ -529,7 +565,7 @@ def _assert_arrow_path_matches_spark_path(spark, root: Path, monkeypatch) -> Non
     for got, (side, normalize) in zip(
         sides, (("nodes", normalize_nodes), ("relationships", normalize_edges))
     ):
-        want, _ = _read_side(spark, root / side, normalize, conf)
+        want = _read_side(spark, _list_side(root / side), normalize, conf)
         assert got.schema == want.schema, side
         assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
 
@@ -572,7 +608,7 @@ def test_arrow_path_matches_spark_path_on_all_types(spark, tmp_path, monkeypatch
     under the session settings Spark's Parquet reader honours."""
     root = tmp_path / "acme" / "100"
     _write_tables(root, _with_positional_columns(_all_types_table()))
-    with _conf(spark, **overrides):
+    with session_conf(spark, **overrides):
         _assert_arrow_path_matches_spark_path(spark, root, monkeypatch)
 
 
@@ -602,7 +638,7 @@ def test_streamed_table_is_to_arrow_on_fixture_tables(spark, sf_dir, tmp_path, n
 def test_streamed_table_is_to_arrow_on_all_types(spark, tmp_path, overrides):
     root = tmp_path / "acme" / "100"
     _write_tables(root, _with_positional_columns(_all_types_table()))
-    with _conf(spark, **overrides):
+    with session_conf(spark, **overrides):
         _assert_streamed_table_is_to_arrow(spark, root)
 
 
@@ -715,7 +751,7 @@ def test_reads_the_arrow_path_cannot_match_take_the_spark_path(
     change, overrides = _SPARK_PATH[case]
     change(root)
     reads = spy_parquet_reads(monkeypatch)
-    with _conf(spark, **overrides):
+    with session_conf(spark, **overrides):
         nodes, _ = read_snapshot(spark, SnapshotRef("acme", 100, str(root)))
         assert any("/nodes/" in path for path in reads), reads
         assert nodes.count() == 3 + (case in ("int96_timestamps", "non_utf8_binary_as_string"))
